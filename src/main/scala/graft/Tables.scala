@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampType}
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet corpus (see TESTDATA.md).
   *
@@ -39,25 +40,38 @@ object Tables {
     * spread cannot change a result.
     */
   def spreadSmall(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
-    // Malformed override values fall back to the 1 GiB default rather
-    // than crashing table loading; the knob is a test-harness dial, not
-    // a correctness input.
-    val max = sys.env.get("SPARK_GRAFT_SPREAD_MAX")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(1L << 30)
     // Size via the Hadoop FileSystem so the gate also resolves on
     // non-local filesystems (hdfs://, s3a://) — java.io.File reads 0
     // there and the spread would silently never apply. An unreadable /
-    // missing path sizes as 0 and the spread is skipped (the scan
-    // itself will raise the real error).
-    val bytes = scala.util.Try {
+    // missing path logs a WARN, sizes as 0 and the spread is skipped
+    // (the scan itself will raise the real error).
+    val bytes = try {
       val hPath = new org.apache.hadoop.fs.Path(path)
       val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(hPath).getLength
-    }.getOrElse(0L)
-    if (bytes > 0L && bytes <= max)
+    } catch { case NonFatal(e) =>
+      log.warn(s"spreadSmall: cannot size $path ($e); not spreading it")
+      0L
+    }
+    if (bytes > 0L && bytes <= spreadMax)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** `SPARK_GRAFT_SPREAD_MAX`, read once. A malformed value logs one WARN
+    * and falls back to the 1 GiB default rather than crashing table
+    * loading; the knob is a test-harness dial, not a correctness input.
+    */
+  private lazy val spreadMax: Long = {
+    val default = 1L << 30
+    sys.env.get("SPARK_GRAFT_SPREAD_MAX").fold(default) { v =>
+      v.toLongOption.getOrElse {
+        log.warn(s"SPARK_GRAFT_SPREAD_MAX=$v is not a byte count; using $default")
+        default
+      }
+    }
   }
 
   /** Loads `events` with `ts` as a proper TimestampType whatever physical

@@ -1,14 +1,20 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.DiffConfig
 import graft.ops.{KeyDiff, VennDiff}
 
 /** Shared session + colorized report printing (reference O15/O16,
-  * `/root/reference/src/index.js:53-63,143-153`). Counts come from
-  * aggregates; row dumps are `limit`-guarded — never a collect-all
+  * reference `src/index.js:53-63,143-153`). A report is one pass:
+  * one SQL execution whose single result job yields every bucket's count
+  * and its first `limit` rows. Nothing is checkpointed or cached, and the
+  * driver receives at most `buckets × limit` rows — never a collect-all
   * (100 TB posture, SURVEY §7.4.8).
   */
 object Report {
@@ -26,80 +32,114 @@ object Report {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def bucket(name: String, color: String, df: DataFrame, limit: Int = 20): Unit = {
-    val n = df.count()
+  private def printBucket(name: String, color: String, n: Long,
+      rows: Seq[Row], limit: Int): Unit = {
     println(s"$color== $name: $n rows (showing up to $limit)$Reset")
-    df.limit(limit).collect().foreach(r => println(s"$color  $r$Reset"))
+    rows.foreach(r => println(s"$color  $r$Reset"))
   }
 
-  private def bucketPrecounted(name: String, color: String, df: DataFrame,
-      n: Long, limit: Int): Unit = {
-    println(s"$color== $name: $n rows (showing up to $limit)$Reset")
-    df.limit(limit).collect().foreach(r => println(s"$color  $r$Reset"))
+  /** A scan's partial result: per bucket, the summed weight and the first
+    * rows, each tagged (partition, position) and repeated by its weight,
+    * at most `limit` of them.
+    */
+  private final class Tally(val counts: Array[Long],
+      val rows: Array[Vector[(Int, Long, InternalRow)]]) extends Serializable
+
+  private def merge(limit: Int)(a: Tally, b: Tally): Tally = new Tally(
+    a.counts.zip(b.counts).map { case (x, y) => x + y },
+    a.rows.zip(b.rows).map { case (x, y) =>
+      (x ++ y).sortBy(e => (e._1, e._2)).take(limit)
+    })
+
+  /** One pass over `df` as one SQL execution named `name` (listeners see
+    * it like any action) with one result job: `weight(row, b)` is summed
+    * per bucket `b`, and each bucket keeps its first `limit` rows in scan
+    * order, a row repeated by its weight. Rows stay `InternalRow`s in the
+    * scan; partition tallies merge by `treeAggregate`, so the driver's
+    * result is bounded at any partition count, and only the kept rows are
+    * deserialized, with the DataFrame's own Row encoder (the text
+    * `collect()` would render).
+    */
+  private def scan(df: DataFrame, name: String, buckets: Int, limit: Int)(
+      weight: (InternalRow, Int) => Long): (Array[Long], Array[Seq[Row]]) = {
+    val qe = df.queryExecution
+    val zero = new Tally(new Array[Long](buckets), Array.fill(buckets)(Vector.empty))
+    val t = SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.toRdd.mapPartitionsWithIndex { (part, it) =>
+        val counts = new Array[Long](buckets)
+        val rows = Array.fill(buckets)(Vector.newBuilder[(Int, Long, InternalRow)])
+        val kept = new Array[Int](buckets)
+        var pos = 0L
+        it.foreach { r =>
+          var copy: InternalRow = null
+          var b = 0
+          while (b < buckets) {
+            val w = weight(r, b)
+            counts(b) += w
+            val n = math.min(w, (limit - kept(b)).toLong).toInt
+            if (n > 0) {
+              if (copy == null) copy = r.copy()
+              (0 until n).foreach(_ => rows(b) += ((part, pos, copy)))
+              kept(b) += n
+            }
+            b += 1
+          }
+          pos += 1
+        }
+        Iterator.single(new Tally(counts, rows.map(_.result())))
+      }.treeAggregate(zero)(merge(limit), merge(limit))
+    }
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    (t.counts, t.rows.map(_.map(e => toRow(e._3))))
   }
 
   /** All four buckets, reference order and colors — green added, red
     * removed, yellow changed, plain (white) unchanged
-    * (`/root/reference/src/index.js:143-153`).
+    * (reference `src/index.js:143-153`) — then one summary line per
+    * present status, status-sorted.
     *
-    * Cost discipline (100 TB posture): the diff join runs ONCE. The
-    * input is localCheckpointed (severs the join lineage so no bucket
-    * dump replays it), all five bucket/summary counts come from the one
-    * `summary()` aggregate over the checkpoint, and each bucket dump is
-    * a limit-guarded scan of the checkpointed rows — ≤5 jobs total
-    * (1 checkpoint + 1 summary + ≤4 dumps) vs the naive 9 full re-joins.
+    * Cost: the diff runs once, as one SQL execution; a single scan of the
+    * join output counts every status and keeps each bucket's first
+    * `limit` rows, comparing the status as raw UTF-8 bytes.
     */
   def printKeyDiff(d: DataFrame, limit: Int = 20): Unit = {
-    val dc = d.localCheckpoint()
-    val counts = KeyDiff.summary(dc).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val s = col(KeyDiff.StatusCol)
-    bucketPrecounted("added", Green, dc.filter(s === "added"),
-      counts.getOrElse("added", 0L), limit)
-    bucketPrecounted("removed", Red, dc.filter(s === "removed"),
-      counts.getOrElse("removed", 0L), limit)
-    bucketPrecounted("changed", Yellow, dc.filter(s === "changed"),
-      counts.getOrElse("changed", 0L), limit)
-    bucketPrecounted("unchanged", Reset, dc.filter(s === "unchanged"),
-      counts.getOrElse("unchanged", 0L), limit)
-    // same lines the summary() pass used to print: status-sorted
-    counts.toSeq.sortBy(_._1).foreach { case (st, n) =>
-      println(s"$st: $n rows")
+    val buckets = Seq("added" -> Green, "removed" -> Red,
+      "changed" -> Yellow, "unchanged" -> Reset)
+    val i = d.schema.fieldIndex(KeyDiff.StatusCol)
+    val statuses = buckets.map(b => UTF8String.fromString(b._1)).toArray
+    val (counts, rows) = scan(d, "printKeyDiff", buckets.size, limit) {
+      (r, b) => if (r.getUTF8String(i) == statuses(b)) 1L else 0L
     }
+    buckets.indices.foreach { b =>
+      printBucket(buckets(b)._1, buckets(b)._2, counts(b), rows(b), limit)
+    }
+    buckets.map(_._1).zip(counts).filter(_._2 > 0).sortBy(_._1)
+      .foreach { case (st, n) => println(s"$st: $n rows") }
   }
 
   /** Venn report — removed/added/intersection buckets, reference order
     * (`/root/reference/src/index.js:53-63`, label swap at :60-61 fixed).
     *
-    * Cost discipline (100 TB posture): the single-shuffle
-    * `VennDiff.counted` union+aggregate runs ONCE (localCheckpoint severs
-    * its lineage), all three bucket counts come from one aggregate over
-    * the checkpoint, and each bucket dump re-expands row multiplicities
-    * (capped at `limit`) from the checkpointed counted rows — ≤5 jobs
-    * total vs the old shape's 6 full set-op executions (each of the three
-    * exceptAll/intersectAll plans ran twice: count + dump).
+    * Cost: the single-shuffle `VennDiff.counted` union+aggregate runs
+    * once, as one SQL execution; a single scan of its distinct rows sums
+    * each bucket's multiplicities and keeps its first `limit` rows, each
+    * repeated by its multiplicity (the multiset view `exceptAll` /
+    * `intersectAll` print).
     */
   def printVennDiff(oldDf: DataFrame, newDf: DataFrame,
       cfg: DiffConfig = DiffConfig(), limit: Int = 20): Unit = {
-    val c = VennDiff.counted(oldDf, newDf, cfg).localCheckpoint()
+    val c = VennDiff.counted(oldDf, newDf, cfg)
     val rowCols = c.columns.filterNot(VennDiff.ReservedCols).toSeq
-    val t = c.agg(
-      coalesce(sum("removed"), lit(0L)).as("r"),
-      coalesce(sum("added"), lit(0L)).as("a"),
-      coalesce(sum("common"), lit(0L)).as("c")).collect()(0)
-    def dump(name: String, color: String, cnt: String, total: Long): Unit = {
-      // exceptAll/intersectAll emit each distinct row `cnt` times; rebuild
-      // that multiset view from the counted rows, capping the expansion at
-      // `limit` so the dump stays bounded regardless of multiplicity.
-      val rows = c.filter(col(cnt) > 0)
-        .withColumn("__dup",
-          explode(sequence(lit(1L), least(col(cnt), lit(limit.toLong)))))
-        .select(rowCols.map(col).toIndexedSeq: _*)
-      bucketPrecounted(name, color, rows, total, limit)
+    val n = rowCols.size
+    val buckets = Seq(("removed (old ∖ new)", Red, "removed"),
+      ("added (new ∖ old)", Green, "added"), ("intersection", Reset, "common"))
+    val (totals, rows) = scan(
+      c.select((rowCols ++ buckets.map(_._3)).map(col).toIndexedSeq: _*),
+      "printVennDiff", buckets.size, limit)((r, b) => r.getLong(n + b))
+    buckets.indices.foreach { b =>
+      printBucket(buckets(b)._1, buckets(b)._2, totals(b),
+        rows(b).map(r => Row.fromSeq(r.toSeq.take(n))), limit)
     }
-    dump("removed (old ∖ new)", Red, "removed", t.getAs[Long]("r"))
-    dump("added (new ∖ old)", Green, "added", t.getAs[Long]("a"))
-    dump("intersection", Reset, "common", t.getAs[Long]("c"))
   }
 }
 

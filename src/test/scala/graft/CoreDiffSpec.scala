@@ -252,47 +252,74 @@ class CoreDiffSpec extends AnyFunSuite {
     assert(d("sub._2") == (("string", "string", "unchanged")))
   }
 
+  /** Report text split by bucket: header count and row lines (colour
+    * codes stripped), plus the trailing per-status summary lines.
+    */
+  private def reportBuckets(text: String)
+      : (Map[String, (Long, Seq[String])], Seq[String]) = {
+    val Header = """== (.+): (\d+) rows \(showing up to \d+\)""".r
+    val lines = text.linesIterator.map(_.replaceAll("\u001b\\[\\d+m", "")).toSeq
+    val buckets = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Seq[String])]
+    var cur = ""
+    lines.foreach {
+      case Header(name, n) => cur = name; buckets(name) = (n.toLong, Seq.empty)
+      case l if l.startsWith("  ") =>
+        buckets(cur) = (buckets(cur)._1, buckets(cur)._2 :+ l.trim)
+      case _ => ()
+    }
+    (buckets.toMap, lines.filter(_.matches("""\w+: \d+ rows""")))
+  }
+
+  private def captured(body: => Unit): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(body)
+    out.toString("UTF-8")
+  }
+
   test("printKeyDiff prints all four buckets with counts (reference parity)") {
     import spark.implicits._
     val old = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     val neu = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("id", "v")
     val d = KeyDiff.diff(old, neu, Seq("id"))
-    val out = new java.io.ByteArrayOutputStream()
-    // The report must execute the diff JOIN exactly once (the
-    // localCheckpoint materialization); the summary and the four bucket
-    // dumps must run over the checkpointed rows, whose plans carry no
-    // join. The naive shape re-ran the full-outer join 9×. Job counts
-    // are AQE-noisy, so count SQL executions whose physical plan
-    // contains a join instead.
+    // The report must run as exactly ONE SQL execution carrying the diff
+    // join: the counts and the four bucket samples come from one scan of
+    // the join output, and the execution stays visible to SQL listeners.
+    // Job counts are AQE-noisy, so count SQL executions whose physical
+    // plan contains a join instead.
     val joinExecs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // count only executions that START after this timestamp: earlier
+    // tests' executions can still be queued on the async listener bus
+    val t0 = System.currentTimeMillis()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
           e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
         case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains("Join") =>
+            if s.time >= t0 && s.physicalPlanDescription.contains("Join") =>
           joinExecs.incrementAndGet()
         case _ => ()
       }
     }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     spark.sparkContext.addSparkListener(listener)
-    try {
-      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-        graft.cli.Report.printKeyDiff(d)
-      }
+    val text = try {
+      val t = captured(graft.cli.Report.printKeyDiff(d))
       // listener delivery is async; poll until the counter is stable so a
-      // straggler execution can't slip past the upper-bound assert
+      // straggler execution can't slip past the assert
       var prev = -1
       var spins = 0
       while (joinExecs.get() != prev && spins < 40) {
         prev = joinExecs.get(); spins += 1; Thread.sleep(50)
       }
+      t
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(joinExecs.get() <= 1,
+    assert(joinExecs.get() == 1,
       s"printKeyDiff executed the diff join ${joinExecs.get()} times; " +
-        "the report must materialize once and reuse")
-    val text = out.toString("UTF-8")
+        "the report must be exactly one SQL execution")
+    // no NEW persisted RDDs (the ContextCleaner may drop older ones meanwhile)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty,
+      "printKeyDiff left persisted (checkpointed/cached) RDD blocks behind")
     // the reference prints added/removed/updated/unchanged, in that order
-    // (/root/reference/src/index.js:143-153)
+    // (reference src/index.js:143-153)
     for (b <- Seq("added", "removed", "changed", "unchanged"))
       assert(text.contains(s"== $b: 1 rows"), s"missing bucket $b in:\n$text")
     assert(text.indexOf("== added") < text.indexOf("== removed"))
@@ -301,6 +328,59 @@ class CoreDiffSpec extends AnyFunSuite {
     // summary lines (one per present status, status-sorted) still print
     for (b <- Seq("added", "changed", "removed", "unchanged"))
       assert(text.contains(s"$b: 1 rows"), s"missing summary line $b")
+    // byte-exact: colours, headers, and each row as collect() renders it
+    val colors = Seq("added" -> "\u001b[32m", "removed" -> "\u001b[31m",
+      "changed" -> "\u001b[33m", "unchanged" -> "\u001b[0m")
+    val expected = colors.flatMap { case (b, c) =>
+      s"$c== $b: 1 rows (showing up to 20)\u001b[0m" +:
+        d.filter(col(KeyDiff.StatusCol) === b).collect().toSeq
+          .map(r => s"$c  $r\u001b[0m")
+    } ++ Seq("added", "changed", "removed", "unchanged").map(b => s"$b: 1 rows")
+    assert(text.linesIterator.toSeq == expected, text)
+  }
+
+  test("printKeyDiff caps each bucket's rows at limit; the header keeps the full count") {
+    import spark.implicits._
+    val old = Seq.empty[(Long, String)].toDF("id", "v")
+    val neu = (1L to 25L).map(i => (i, s"n$i")).toDF("id", "v")
+    val text = captured(
+      graft.cli.Report.printKeyDiff(KeyDiff.diff(old, neu, Seq("id")), limit = 20))
+    val (buckets, summary) = reportBuckets(text)
+    assert(buckets("added")._1 == 25L)
+    assert(buckets("added")._2.size == 20, buckets("added")._2)
+    assert(text.linesIterator.count(_.contains("  [")) == 20, text)
+    assert(Seq("removed", "changed", "unchanged").forall(b => buckets(b) == ((0L, Seq.empty))))
+    assert(summary == Seq("added: 25 rows"))
+  }
+
+  test("printKeyDiff on empty inputs: four zero headers, no rows, no summary lines") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    val (buckets, summary) = reportBuckets(captured(
+      graft.cli.Report.printKeyDiff(KeyDiff.diff(empty, empty, Seq("id")))))
+    assert(buckets.keySet == Set("added", "removed", "changed", "unchanged"))
+    assert(buckets.values.forall(_ == ((0L, Seq.empty))), buckets)
+    assert(summary.isEmpty, summary)
+  }
+
+  test("printKeyDiff over a 7-partition input: rows land in their bucket, min(n, limit) each") {
+    import spark.implicits._
+    // 30 removed, 12 added, 9 changed, 2 unchanged
+    val old = (1L to 41L).map(i => (i, s"v$i")).toDF("id", "v")
+    val neu = ((31L to 41L).map(i => (i, if (i <= 39L) s"w$i" else s"v$i")) ++
+      (100L until 112L).map(i => (i, s"n$i"))).toDF("id", "v")
+    val d = KeyDiff.diff(old, neu, Seq("id")).repartition(7)
+    val limit = 5
+    val (buckets, summary) = reportBuckets(captured(
+      graft.cli.Report.printKeyDiff(d, limit)))
+    val n = Map("added" -> 12L, "removed" -> 30L, "changed" -> 9L, "unchanged" -> 2L)
+    n.foreach { case (b, cnt) =>
+      assert(buckets(b)._1 == cnt, s"$b header")
+      assert(buckets(b)._2.size == math.min(cnt, limit.toLong), s"$b rows")
+      buckets(b)._2.foreach(r => assert(r.startsWith("[") && r.split(',')(1) == b, r))
+      assert(buckets(b)._2.distinct.size == buckets(b)._2.size, s"$b repeats a row")
+    }
+    assert(summary == n.toSeq.sortBy(_._1).map { case (b, c) => s"$b: $c rows" })
   }
 
   test("schemaDiff: pure required<->optional flip is nullability_changed, not unchanged") {
