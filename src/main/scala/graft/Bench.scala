@@ -25,41 +25,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Default 100-entry codegen cache thrashes across 51 queries (~3
-      // codegen units each, warmup + 2 timed runs): by the time a query is
-      // timed its warmup-compiled classes are evicted and Janino recompiles
-      // them inside the timed window. Size it to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // The sf0.1 parquet files are single-digit MB, so the default 4 MB
-      // file-open cost makes every scan 1-2 partitions and runs map-heavy
-      // queries on 1-2 cores. Price opens cheaper so small files still
-      // split to the session parallelism — a test-data artifact knob: at
-      // production scale files dwarf 4 MB and this setting is a no-op.
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // Round-16 NOTE: round 15 added a 64 KB
-      // adaptive.coalescePartitions.minPartitionSize floor here (the
-      // reduce-side twin of the openCostInBytes knob). The round-15
-      // judge flagged it as the prime suspect for above-drift driver
-      // regressions, and the round-16 same-host A/B (full suite + an
-      // alternating 18-query subset, min-of-3 each leg) adjudicated it:
-      // suite totals are a WASH (189.82 s floor-on vs 189.75 s off) but
-      // the floor reproducibly regresses small all-aggregate shapes
-      // (ngram_novelty 0.87 → 1.39-1.66 s, q16_suppcnt 1.11 → 1.46 s)
-      // while buying similar-sized wins elsewhere (linreg_ivm,
-      // contrastive, pipeline_e2e). A conf that nets zero and tunes
-      // one query family against another is a local[32]/sf0.1 artifact
-      // knob, not an engine optimization — REVERTED per the round-15
-      // verdict's decision rule (evidence:
-      // tools/gates/bench_sf01_r16_base_floor{ON,OFF}_runs.json).
-      .getOrCreate()
+    val spark = Sessions(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -119,12 +87,11 @@ object Bench {
     // execution immediately before their timed run, so the min-of-3
     // sees one steady-state sample. Costs ~5 s of untimed wall clock;
     // removes the ~1.7 s/query artifact from the headline.
-    // edit_pairs added round 16 (round-15 verdict item 5): same artifact,
-    // measured this round at 2.18 s isolated vs 2.70 s in-suite on the
-    // same host — the SymSpell plan's many generated variant-projection
-    // classes re-warm after ~580 intervening compilations exactly like
-    // the iterative queries'.
-    val rewarm = Set("pagerank", "textrank", "edit_pairs")
+    // edit_pairs is NOT in the set: round 16 added it, but that round's
+    // final run (tools/gates/bench_sf01_r16_final_runs.json) timed its
+    // rewarmed last pass at 3.61 s against 2.66 s for the un-rewarmed
+    // second pass, so the rewarm bought it nothing.
+    val rewarm = Set("pagerank", "textrank")
     // Pass count knob for the LARGE-SF benches only (sf100's heavy subset
     // runs min-of-2 to fit the wall clock); the driver sets nothing and
     // gets the standard min-of-3 protocol.

@@ -2,7 +2,6 @@ package graft
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Regenerates PLANS.md: formatted physical plans of EVERY query in
@@ -37,12 +36,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val dir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions(4)
     spark.sparkContext.setLogLevel("ERROR")
     val w = new PrintWriter(out, "UTF-8")
     w.println("# PLANS — formatted physical plans of all queries (sf-independent)")

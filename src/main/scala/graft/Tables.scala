@@ -30,8 +30,9 @@ object Tables {
     * stages inside ppjoin while 32 cores idle).
     *
     * Size-gated so it stays a SMALL-INPUT remedy: spread only while
-    * the table's on-disk bytes are under `SPARK_GRAFT_SPREAD_MAX`
-    * (default 1 GiB). At production scale inputs arrive as many
+    * the table's on-disk bytes are at most 1 GiB. `getContentSummary`
+    * sizes a directory recursively, so a nested or partitioned layout
+    * counts all its files. At production scale inputs arrive as many
     * splittable files, the gate turns the spread off, and the scan's
     * natural parallelism stands — the extra exchange is never paid on
     * data large enough for it to matter. Row order is not part of any
@@ -53,26 +54,14 @@ object Tables {
       log.warn(s"spreadSmall: cannot size $path ($e); not spreading it")
       0L
     }
-    if (bytes > 0L && bytes <= spreadMax)
+    if (bytes > 0L && bytes <= SpreadMaxBytes)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df
   }
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val SpreadMaxBytes = 1L << 30
 
-  /** `SPARK_GRAFT_SPREAD_MAX`, read once. A malformed value logs one WARN
-    * and falls back to the 1 GiB default rather than crashing table
-    * loading; the knob is a test-harness dial, not a correctness input.
-    */
-  private lazy val spreadMax: Long = {
-    val default = 1L << 30
-    sys.env.get("SPARK_GRAFT_SPREAD_MAX").fold(default) { v =>
-      v.toLongOption.getOrElse {
-        log.warn(s"SPARK_GRAFT_SPREAD_MAX=$v is not a byte count; using $default")
-        default
-      }
-    }
-  }
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Loads `events` with `ts` as a proper TimestampType whatever physical
     * unit the parquet writer used.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,7 +6,6 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional comma-separated subset for local iteration (same knob as
     // Bench); the driver sets nothing and gets the full dump.
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -18,12 +16,7 @@ object Verify {
     // one thread; tools/check.py reads the dump with a *.parquet glob
     // and compares multisets, so the file count is free to vary.
     val outParts = sys.env.getOrElse("SPARK_GRAFT_OUT_PARTS", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions(Sessions.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A failed query is logged and the dump goes on; the run still exits

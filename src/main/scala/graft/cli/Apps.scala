@@ -23,14 +23,8 @@ object Report {
   private val Yellow = "[33m"
   private val Reset = "[0m"
 
-  def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .appName("graft")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def session(): SparkSession =
+    graft.Sessions(graft.Sessions.cpus(32), sys.env.get("SPARK_MASTER"))
 
   private def printBucket(name: String, color: String, n: Long,
       rows: Seq[Row], limit: Int): Unit = {

@@ -30,28 +30,11 @@ object EventStream {
     */
   @volatile var capturePlans: Boolean = false
   val capturedPlans = new scala.collection.mutable.ArrayBuffer[String]()
-
-  /** When true, every replay also records its per-micro-batch
-    * StreamingQueryProgress JSON (durationMs breakdown: addBatch,
-    * getBatch, walCommit, commitOffsets, …) — the profiling hook for
-    * attributing the replay family's fixed cost. Costs nothing when off.
-    */
-  @volatile var captureProgress: Boolean = false
-  val capturedProgress = new scala.collection.mutable.ArrayBuffer[String]()
-
-  /** When true, fileReplay prints wall-clock section timers
-    * (stage | start | stream | asserts | readback) to stderr. */
-  @volatile var sectionTimers: Boolean = false
   private def capture(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     if (capturePlans)
       org.apache.spark.sql.graft.lastExecutedPlan(q).foreach(p =>
         capturedPlans.synchronized { capturedPlans += p })
-    if (captureProgress)
-      capturedProgress.synchronized {
-        capturedProgress ++= q.recentProgress.map(_.json)
-      }
-  }
 
   /** Watermarked hourly tumbling-window aggregate. Batch: identical to a
     * date_trunc groupBy. Stream: incremental, state dropped once the
@@ -538,18 +521,11 @@ object EventStream {
       input.queryExecution.analyzed.semanticHash(), input.schema.toDDL,
       extras.map(_.queryExecution.analyzed.semanticHash()).mkString(","),
       orderCol, chunks, format).mkString("|")
-    var tMark = System.nanoTime()
-    def section(name: String): Unit = if (sectionTimers) {
-      val now = System.nanoTime()
-      System.err.println(f"[replay-timer] $name%s ${(now - tMark) / 1e9}%.3f s")
-      tMark = now
-    } else tMark = System.nanoTime()
     val (src, _, _, expectedRows) =
       sliceCache.computeIfAbsent(key, _ => build())
     val sp =
       if (statePartitions > 0) statePartitions
       else autoStatePartitions(spark, expectedRows, chunks + extras.size)
-    section("stage")
     val stream = spark.readStream
       .schema(input.schema)
       .option("maxFilesPerTrigger", "1")
@@ -578,10 +554,8 @@ object EventStream {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
         throw e
       }
-    section("start")
     try {
       q.awaitTermination()
-      section("stream")
       capture(q)
       if (requireRocksDB) {
         val metricKeys = Option(q.lastProgress).toSeq
@@ -626,7 +600,6 @@ object EventStream {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
-    section("asserts")
     // Return the sink LAZILY (its parquet is result-sized) and defer the
     // scratch-tree delete to the JVM shutdown hook — the previous eager
     // localCheckpoint(true) + immediate walk-delete pinned the result
@@ -636,9 +609,7 @@ object EventStream {
     // state deltas (slices live in the shared sliceCache, not here).
     deferredScratchHook
     deferredScratch.add(tmp)
-    val out = spark.read.parquet(sink)
-    section("readback")
-    out
+    spark.read.parquet(sink)
   }
 
   /** Replay scratch trees awaiting the shutdown-hook delete. */

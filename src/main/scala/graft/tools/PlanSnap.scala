@@ -2,7 +2,6 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` of named SparkEntry queries to
@@ -18,14 +17,8 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions(graft.Sessions.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val qs = graft.SparkEntry.queries

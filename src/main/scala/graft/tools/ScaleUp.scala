@@ -118,13 +118,8 @@ object ScaleUp {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master(sys.env.get("SPARK_GRAFT_CPUS").map(c => s"local[$c]").getOrElse("local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaleup")
-      .getOrCreate()
+    val spark = graft.Sessions(
+      graft.Sessions.cpus(Runtime.getRuntime.availableProcessors))
     spark.sparkContext.setLogLevel("WARN")
     try scaleAll(spark, srcDir, outDir, factor)
     finally spark.stop()

@@ -15,12 +15,7 @@ class AvroSourceSpec extends AnyFunSuite {
 
   private val fixtures = "/root/reference/avro"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   def avro(path: String) = spark.read.format("avro").load(path)
 

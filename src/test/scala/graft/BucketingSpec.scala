@@ -16,15 +16,9 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val warehouse = Files.createTempDirectory("graft-warehouse").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("bucketing-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4, conf = Map(
+    "spark.sql.warehouse.dir" -> warehouse,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")) // force SMJ path
 
   override def afterAll(): Unit = {
     spark.stop()

@@ -19,13 +19,7 @@ import graft.ops.Dedup
   */
 class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("components-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -9,12 +9,7 @@ import graft.ops.{DataTests, KeyDiff, VennDiff}
 
 class CoreDiffSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   def statusMap(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
     df.select("id", KeyDiff.StatusCol).collect()

@@ -10,12 +10,7 @@ import graft.ops.{EventAnalytics, TextAnalysis}
 
 class EventAnalyticsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -12,13 +12,7 @@ import graft.ops.{Fuzzy, Graph}
   */
 class GraphFuzzySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graph-fuzzy-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -81,9 +81,7 @@ class HtmlExtractSpec extends AnyFunSuite {
   }
 
   test("null-free struct row via the Column surface") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = Sessions(2)
     try {
       import spark.implicits._
       val df = Seq((1L, "<p>hi there</p><div><a href='/'>nav</a></div>"))

@@ -31,12 +31,7 @@ class NearDupBlockedSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def dir(sf: String) = s"/root/testdata/sf$sf"
   private def available(sf: String) = new File(dir(sf)).isDirectory
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(8)
 
   override def afterAll(): Unit = spark.stop()
 

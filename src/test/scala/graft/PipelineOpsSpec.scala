@@ -14,13 +14,7 @@ import graft.ops.{AsOfJoin, Dedup, Relevance, Similarity, Skew, TextAnalysis}
   */
 class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("pipeline-ops-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -15,13 +15,7 @@ import graft.tools.ScaleUp
   */
 class ScaleUpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("scaleup-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   override def afterAll(): Unit = spark.stop()
 

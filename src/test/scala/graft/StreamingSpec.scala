@@ -16,13 +16,7 @@ import graft.streaming.{EventStream, StreamDiff}
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-spec")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -133,6 +127,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((10L, 21L)),
       s"expected the one in-window match, got $out")
+  }
+
+  test("fileReplay: a session StreamingQueryListener sees every slice's micro-batch progress") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // Per-micro-batch durations come from a listener on the caller's
+    // session; the replay needs no profiling hook of its own.
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.id)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val (slices, rows) = (3, 600L)
+      val out = EventStream.fileReplay((0L until rows).toDF("ts_ms"), "ts_ms",
+        chunks = slices)(df => df)
+      assert(out.count() == rows)
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        val ps = progress.asScala.toSeq.filter(p => started.contains(p.id))
+        assert(ps.count(_.numInputRows > 0) >= slices, s"progress: $ps")
+        assert(ps.map(_.numInputRows).sum == rows)
+        ps.foreach(p => assert(p.durationMs.containsKey("triggerExecution"),
+          s"batch ${p.batchId} has no triggerExecution: ${p.durationMs}"))
+      }
+    } finally spark.streams.removeListener(listener)
   }
 
   test("enrichStream: stream-static join enriches per batch, inner semantics, broadcast") {

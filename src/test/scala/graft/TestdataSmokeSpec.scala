@@ -24,12 +24,7 @@ class TestdataSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
   private def available: Boolean = new File(sfDir).isDirectory
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions(4)
 
   // Stop the session so the next suite's builder applies its own STATIC
   // confs — a leaked getOrCreate session broke BucketingSpec downstream.
