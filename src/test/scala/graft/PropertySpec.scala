@@ -543,7 +543,7 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   // The three sf100 decade-evidence queries `X_strat` must be EXACTLY
   // `X(documents restricted to the committed md5 1/8 stratum)` — the
   // engine-side predicate re-spelled here verbatim. If a future edit to
-  // SparkEntry.stratDocs changes the stratum (modulus, digest, digit
+  // registry Text.stratDocs changes the stratum (modulus, digest, digit
   // count), engine and oracle silently diverge; this pins the spelling.
   test("property: X_strat(documents) == X(documents.filter(md5 1/8 stratum))") {
     import spark.implicits._

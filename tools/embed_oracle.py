@@ -92,7 +92,7 @@ def check(name, got_rows, want_rows):
 
 
 def strat_mask(ids):
-    """The committed 1/64 md5(vec_id) stratum (SparkEntry.stratEmb /
+    """The committed 1/64 md5(vec_id) stratum (registry Embed.stratEmb /
     the stratEmbWhere DuckDB spelling), recomputed independently."""
     import hashlib
     return np.array([
